@@ -179,35 +179,17 @@ object Bench {
     val p1Total = pass1.res.values.filter(_ >= 0).sum
     val p2Total = pass2.res.values.filter(_ >= 0).sum
 
-    // FIXED-WORK CPU CALIBRATION: the same deterministic xorshift loop,
-    // once on 1 thread (cal1) and once on all bench threads (cal2),
-    // measured after the passes. Three straight rounds needed manual
-    // A/B runs to separate box drift from code; these two box constants
-    // make the next ratio dispute resolvable from the artifact alone —
-    // if cal1/cal2 moved round-over-round, the box moved.
-    val calSink = new java.util.concurrent.atomic.AtomicLong()
-    def calWork(seed: Long, n: Long): Long = {
-      var x = seed | 1L
-      var i = 0L
-      while (i < n) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      x
-    }
-    def cal(threads: Int): Double = {
-      calSink.addAndGet(calWork(7L, 20000000L)) // JIT warm
-      val t0 = System.nanoTime()
-      val ts = (0 until threads).map(k =>
-        new Thread(() => { calSink.addAndGet(calWork(k + 42L, 1000000000L)); () }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    // FIXED-WORK CPU CALIBRATION ([[Calibration]]), measured after the
+    // passes. Three straight rounds needed manual A/B runs to separate
+    // box drift from code; cal1/cal2 make the next ratio dispute
+    // resolvable from the artifact alone.
     // cal2 runs on min(bench threads, physical cores): oversubscribing a
     // smaller box would conflate env-var/core mismatch with box drift
     // (and add a fixed multi-ten-second wall cost); calt in the artifact
     // records the thread count actually measured
-    val cal1 = cal(1)
+    val cal1 = Calibration.seconds(1)
     val calThreads = math.min(cpus.toInt, Runtime.getRuntime.availableProcessors)
-    val cal2 = cal(calThreads)
-    if (calSink.get() == 0L) println("calibration sink") // defeat dead-code elim
+    val cal2 = Calibration.seconds(calThreads)
     // The driver captures only the LAST ~2000 chars of stdout and parses
     // the final line as JSON (rounds 1-3 all came back parsed:null because
     // the full-name queries dict overflowed that window). Emit a full-name

@@ -27,27 +27,11 @@ object QTime {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.operators.TableVersions.opTimingEnable(true)
-    // the same fixed-work calibration loop as Bench (cal1 = 1 thread,
-    // cal2 = all threads) so QTime numbers taken on this drift-prone box
-    // are normalizable across runs
-    val calSink = new java.util.concurrent.atomic.AtomicLong()
-    def calWork(seed: Long, n: Long): Long = {
-      var x = seed | 1L
-      var i = 0L
-      while (i < n) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      x
-    }
-    def cal(threads: Int): Double = {
-      calSink.addAndGet(calWork(7L, 20000000L))
-      val t0 = System.nanoTime()
-      val ts = (0 until threads).map(k =>
-        new Thread(() => { calSink.addAndGet(calWork(k + 42L, 1000000000L)); () }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    // the same fixed-work calibration as Bench ([[Calibration]]) so QTime
+    // numbers taken on a drift-prone box are normalizable across runs
     val calThreads = math.min(cpus.toInt, Runtime.getRuntime.availableProcessors)
-    println(f"QTIME_CAL cal1=${cal(1)}%.2f cal2=${cal(calThreads)}%.2f calt=$calThreads")
-    if (calSink.get() == 0L) println("calibration sink")
+    println(f"QTIME_CAL cal1=${Calibration.seconds(1)}%.2f " +
+      f"cal2=${Calibration.seconds(calThreads)}%.2f calt=$calThreads")
     for (n <- names) {
       val times = (0 until reps).map { _ =>
         graft.operators.TableVersions.opTimingDrain()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexTombstones, IvfIndex, TableVersions, TermIndex}
+import graft.operators.{Forks, IndexTombstones, IvfIndex, TableVersions, TermIndex}
 import graft.streaming.IndexPipeline
 
 /** Round-13 oracle query: the INCREMENTAL INDEX TRI-STORE under the
@@ -96,14 +96,17 @@ object Round13Queries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // three independent stores off one persisted corpus — overlap
-        // the builds (guide §2.6); outputs are path-disjoint
-        graft.operators.Par.run(Seq(
-          () => graft.operators.LshIndex.updateSignatureTable(oneRoots.lshSignatures,
-            fin.select(col("doc_id"), col("text")), "doc_id", "text", portable = true),
-          () => graft.operators.SemIndex.updateAssignmentTable(oneRoots.semAssignments,
-            fin.select(col("doc_id"), col("embedding")), "doc_id", "embedding", cents),
-          () => TermIndex.updateBatch(oneRoots.term,
-            fin.select(col("doc_id"), col("text")), 0L, "doc_id", "text")))
+        // the builds (Forks scaladoc); outputs are path-disjoint
+        Forks(spark) { forks =>
+          forks.fork("lsh-rebuild")(graft.operators.LshIndex.updateSignatureTable(
+            oneRoots.lshSignatures, fin.select(col("doc_id"), col("text")),
+            "doc_id", "text", portable = true))
+          forks.fork("sem-rebuild")(graft.operators.SemIndex.updateAssignmentTable(
+            oneRoots.semAssignments, fin.select(col("doc_id"), col("embedding")),
+            "doc_id", "embedding", cents))
+          forks.fork("term-rebuild")(TermIndex.updateBatch(oneRoots.term,
+            fin.select(col("doc_id"), col("text")), 0L, "doc_id", "text"))
+        }
       } finally { fin.unpersist(); () }
     }
     // store equality as ORDER-INSENSITIVE multiset row hashes (sum of
@@ -119,7 +122,7 @@ object Round13Queries {
     }
     phase("converge") {
       // the six signature scans are independent read-only aggregates
-      // over disjoint stores — run them concurrently (guide §2.6) and
+      // over disjoint stores — run them concurrently (Forks scaladoc) and
       // compare after the join point
       val legs: Seq[(String, DataFrame, DataFrame)] = Seq(
         ("LSH signatures",
@@ -135,14 +138,13 @@ object Round13Queries {
             .join(spark.read.parquet(s"${roots.term}/deletes").select(col("doc_id")),
               Seq("doc_id"), "left_anti"),
           spark.read.parquet(s"${oneRoots.term}/postings").drop("batch_id")))
-      val sigs = new Array[(java.math.BigDecimal, Long)](legs.size * 2)
-      graft.operators.Par.run(legs.zipWithIndex.flatMap { case ((_, a, b), i) =>
-        Seq(() => { sigs(2 * i) = multisetSig(a) },
-          () => { sigs(2 * i + 1) = multisetSig(b) })
-      })
-      legs.zipWithIndex.foreach { case ((what, _, _), i) =>
-        require(sigs(2 * i) == sigs(2 * i + 1),
-          s"q141: incremental $what diverged from the one-shot rebuild")
+      val sigs = Forks(spark) { forks =>
+        legs.map { case (_, a, b) =>
+          (forks.fork("sig-incremental")(multisetSig(a)), forks.fork("sig-oneshot")(multisetSig(b)))
+        }.map { case (a, b) => (a.join(), b.join()) }
+      }
+      legs.zip(sigs).foreach { case ((what, _, _), (a, b)) =>
+        require(a == b, s"q141: incremental $what diverged from the one-shot rebuild")
       }
     }
 

@@ -228,7 +228,7 @@ object LshIndex {
           .partitionBy("batch_id")
           .parquet(pairsPath)
       // ONE stored-table scan per batch, and the two outputs overlap
-      // (optimization-guide §1.2 + §2.6): the pair emission's corpus
+      // (optimization-guide §1.2; Forks scaladoc): the pair emission's corpus
       // (live ∪ delta, delta wins) IS the merged frame the fold writes,
       // so both consume one eager checkpoint — previously each read the
       // stored parquet separately, serialized by the fold's rename-swap.
@@ -238,14 +238,16 @@ object LshIndex {
       // rename-swap idempotent — spec-pinned (LshIndexSpec fold-first
       // replay case).
       if (!exists(spark, sigPath))
-        Par.run(Seq( // first batch: the corpus IS the delta
-          () => writePairs(deltaSigs),
-          () => deltaSigs.write.options(WriteOpts.data).mode("overwrite").parquet(sigPath)))
+        Forks(spark) { forks => // first batch: the corpus IS the delta
+          forks.fork("pairs")(writePairs(deltaSigs))
+          forks.fork("fold")(deltaSigs.write.options(WriteOpts.data).mode("overwrite").parquet(sigPath))
+        }
       else {
         val (merged, foldedBatches) = mergedCheckpoint(sigPath, deltaSigs, idCol)
-        try Par.run(Seq(
-          () => writePairs(merged),
-          () => swapInMerged(spark, sigPath, merged, foldedBatches)))
+        try Forks(spark) { forks =>
+          forks.fork("pairs")(writePairs(merged))
+          forks.fork("fold")(swapInMerged(spark, sigPath, merged, foldedBatches))
+        }
         finally graft.CacheScope.freeCheckpoint(merged)
       }
     } finally graft.CacheScope.freeCheckpoint(deltaSigs)

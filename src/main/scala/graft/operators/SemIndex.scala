@@ -235,7 +235,7 @@ object SemIndex {
           .partitionBy("batch_id")
           .parquet(pairsPath)
       // ONE stored-table scan per batch, and the two outputs overlap
-      // (optimization-guide §1.2 + §2.6): the edge emission's corpus
+      // (optimization-guide §1.2; Forks scaladoc): the edge emission's corpus
       // (live ∪ delta, delta wins) IS the merged frame the fold writes,
       // so both consume one eager checkpoint — previously each read the
       // stored parquet separately, serialized by the fold's rename-swap.
@@ -245,14 +245,16 @@ object SemIndex {
       // rename-swap idempotent — spec-pinned (SemIndexSpec fold-first
       // replay case).
       if (!exists(spark, asgPath))
-        Par.run(Seq( // first batch: the corpus IS the delta
-          () => writePairs(deltaAsg),
-          () => deltaAsg.write.options(WriteOpts.data).mode("overwrite").parquet(asgPath)))
+        Forks(spark) { forks => // first batch: the corpus IS the delta
+          forks.fork("pairs")(writePairs(deltaAsg))
+          forks.fork("fold")(deltaAsg.write.options(WriteOpts.data).mode("overwrite").parquet(asgPath))
+        }
       else {
         val (merged, foldedBatches) = mergedCheckpoint(asgPath, deltaAsg, idCol)
-        try Par.run(Seq(
-          () => writePairs(merged),
-          () => swapInMerged(spark, asgPath, merged, foldedBatches)))
+        try Forks(spark) { forks =>
+          forks.fork("pairs")(writePairs(merged))
+          forks.fork("fold")(swapInMerged(spark, asgPath, merged, foldedBatches))
+        }
         finally graft.CacheScope.freeCheckpoint(merged)
       }
     } finally graft.CacheScope.freeCheckpoint(deltaAsg)

@@ -691,22 +691,6 @@ object TableVersions {
       try body finally opTimes.add((what, (System.nanoTime() - t0) / 1e9))
     }
 
-  /** Start `body` on a daemon thread and return a join-handle: the CDC
-    * sidecar stage and the DV/rewrite stage of one upsert/merge are
-    * independent read-only jobs over the same snapshot, so they overlap
-    * (guide §2.6) — the commit forces the handle before referencing the
-    * sidecar. The first failure rethrows its cause at the join point.
-    */
-  private def asyncStage[A](body: => A): () => A = {
-    val task = new java.util.concurrent.FutureTask(
-      new java.util.concurrent.Callable[A] { def call(): A = body })
-    val th = new Thread(task, "graft-async-stage")
-    th.setDaemon(true)
-    th.start()
-    () => try task.get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-  }
-
   private def cacheKey(f: FileSystem, p: Path): Option[(String, Long, Long)] =
     try {
       val s = f.getFileStatus(p)
@@ -3579,17 +3563,18 @@ object TableVersions {
       if (matched.isEmpty || maxDvFraction <= 0.0) Map.empty
       else victimCounts(root,
         matched.get.select(col("__gv_file").as("file"), col("__gv_pos").as("pos")))
-    try {
+    try Forks(spark) { forks =>
       // EXACT change-data capture (table property `enableChangeFeed`):
       // matched keys' old/new rows become update_preimage/update_postimage
       // and unmatched batch rows insert — written as a `_cdf/` sidecar the
       // commit references, so [[readChanges]] serves update images instead
       // of diff-derived delete+insert. The pre/post/ins legs all derive
       // from the shared cached frame; off by default, same stance as
-      // Delta's `delta.enableChangeDataFeed`.
-      val cdfNameF: () => Option[String] =
-        if (!cdfEnabled(st)) () => None
-        else asyncStage {
+      // Delta's `delta.enableChangeDataFeed`. Staged on a fork that
+      // overlaps the DV/rewrite stage below (Forks scaladoc).
+      val cdf =
+        if (!cdfEnabled(st)) None
+        else Some(forks.fork("cdf") {
           import org.apache.spark.sql.functions.lit
           val pre = matched
             .map(_.drop("__gv_file", "__gv_pos"))
@@ -3601,29 +3586,31 @@ object TableVersions {
           val ins = updates.join(matchedKeys, Seq(keyCol), "left_anti")
             .withColumn("_change_type", lit("insert"))
           stageChangeData(spark, root, st, pre.unionByName(post).unionByName(ins))
-        }
-      if (maxDvFraction > 0.0 && candidates.nonEmpty)
+        })
+      val cdfNameF = () => cdf.flatMap(_.join())
+      // Some = committed (or true conflict); None = fraction exceeded /
+      // legacy stats — fall back to the rewrite
+      (if (maxDvFraction > 0.0 && candidates.nonEmpty)
         upsertViaDv(spark, root, st, candidates,
-            matched.get.select(col("__gv_file").as("file"), col("__gv_pos").as("pos")),
-            counts, updates, maxDvFraction, cdfNameF, planV) match {
-          case Some(result) => return result // committed (or true conflict)
-          case None => // fraction exceeded / legacy stats — fall back to rewrite
-        }
-      val cdfName = cdfNameF()
-      val cdfDirs = cdfName.map(n => new Path(cdfRootDir(root), n)).toSeq
-      val rewritten =
-        if (candidates.isEmpty) updates // pure insert
-        else {
-          val src = readWithDvs(spark, root, st, candidates) // rewrite re-materializes the DVs away
-          src.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti").unionByName(updates)
-        }
-      // restage through the (possibly partitioned) write path: a CDC
-      // batch spanning partitions keeps every row's partition metadata
-      val (outDir, added) = stageFiles(spark, root, rewritten, st.partCols, "upsert",
-        mapSchema = st.schema)
-      commitRewrite(spark, root, candidates.toSet, added, outDir,
-        dvSnapshotOf(st, candidates.toSet), op = "UPSERT",
-        cdf = cdfName.toSeq, extraCleanup = cdfDirs, planV = planV)
+          matched.get.select(col("__gv_file").as("file"), col("__gv_pos").as("pos")),
+          counts, updates, maxDvFraction, cdfNameF, planV)
+      else None).getOrElse {
+        val cdfName = cdfNameF()
+        val cdfDirs = cdfName.map(n => new Path(cdfRootDir(root), n)).toSeq
+        val rewritten =
+          if (candidates.isEmpty) updates // pure insert
+          else {
+            val src = readWithDvs(spark, root, st, candidates) // rewrite re-materializes the DVs away
+            src.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti").unionByName(updates)
+          }
+        // restage through the (possibly partitioned) write path: a CDC
+        // batch spanning partitions keeps every row's partition metadata
+        val (outDir, added) = stageFiles(spark, root, rewritten, st.partCols, "upsert",
+          mapSchema = st.schema)
+        commitRewrite(spark, root, candidates.toSet, added, outDir,
+          dvSnapshotOf(st, candidates.toSet), op = "UPSERT",
+          cdf = cdfName.toSeq, extraCleanup = cdfDirs, planV = planV)
+      }
     } finally { matched.foreach(_.unpersist()); () }
   }
 
@@ -3643,8 +3630,8 @@ object TableVersions {
   private def upsertViaDv(spark: SparkSession, root: String, st: CommitState,
       candidates: Seq[String], victims: DataFrame, counts: Map[String, Long],
       updates: DataFrame,
-      maxFraction: Double, cdfNameF: () => Option[String] = () => None,
-      planV: Option[Long] = None): Option[Option[Long]] = {
+      maxFraction: Double, cdfNameF: () => Option[String],
+      planV: Option[Long]): Option[Option[Long]] = {
     val candSet = candidates.toSet
     val candEntries = st.files.filter(fe => candSet(fe.path))
     if (candEntries.exists(_.rows < 0)) return None // legacy: unbounded fraction
@@ -3654,30 +3641,42 @@ object TableVersions {
     val newMatches = counts.values.sum
     if (newMatches > 0 && (totalRows == 0 || newMatches.toDouble / totalRows > maxFraction))
       return None // rewrite amortizes better (nothing staged yet)
-    // tombstone sidecar and image files are independent writes over
-    // decided inputs — stage them CONCURRENTLY (asyncStage scaladoc)
-    val sidecarF: () => Option[(Path, String, Map[String, Long])] =
-      if (newMatches == 0) () => None // pure insert against the candidates
-      else asyncStage(Some(stageDvSidecar(spark, root, st, candidates, victims, counts)))
-    // stage the update rows as NEW files (partition metadata exact)
-    val (outDir, added) = stageFiles(spark, root, updates, st.partCols, "upsert",
-      mapSchema = st.schema)
-    // join the overlapped CDC sidecar stage only now — everything above
-    // ran concurrently with it (asyncStage scaladoc)
+    // the update rows stage as NEW files (partition metadata exact)
+    Some(stageDvCommit(spark, root, st, candidates, candEntries, victims, counts,
+      updates, "upsert", st.schema, cdfNameF, "UPSERT dv", None, planV))
+  }
+
+  /** The merge-on-read tail of [[upsertViaDv]] and [[mergeViaDv]]: the
+    * tombstone sidecar (when `counts` has victims) and the `images`
+    * files are independent writes over decided inputs, so the sidecar
+    * stages on a fork CONCURRENTLY with the images (Forks scaladoc);
+    * the caller's overlapped CDC stage (`cdfNameF`) joins only after
+    * both were started, then ONE [[commitDvUpdate]] lands everything.
+    */
+  private def stageDvCommit(spark: SparkSession, root: String, st: CommitState,
+      candidates: Seq[String], candEntries: Seq[FileEntry], victims: DataFrame,
+      counts: Map[String, Long], images: DataFrame, stageTag: String,
+      stageSchema: Option[StructType], cdfNameF: () => Option[String], op: String,
+      schemaEvolved: Option[(String, Option[String])],
+      planV: Option[Long]): Option[Long] = Forks(spark) { forks =>
+    val sidecarF =
+      if (counts.values.sum == 0) None // no victim rows: pure insert images
+      else Some(forks.fork("dv-sidecar")(
+        stageDvSidecar(spark, root, st, candidates, victims, counts)))
+    val (outDir, added) = stageFiles(spark, root, images, st.partCols, stageTag,
+      mapSchema = stageSchema)
     val cdfName = cdfNameF()
     val cdfDirs = cdfName.map(n => new Path(cdfRootDir(root), n)).toSeq
-    sidecarF() match {
-      case None => // pure insert against the candidates: files only
-        Some(commitDvUpdate(spark, root, Map.empty, Map.empty, cdfDirs :+ outDir, added,
-          op = "UPSERT dv", cdf = cdfName.toSeq, planV = planV))
+    val (dvUpdates, dvDirs) = sidecarF.map(_.join()) match {
+      case None => (Map.empty[String, (String, Long)], Nil)
       case Some((dvDir, sidecar, perFile)) =>
-        val dvUpdates = candEntries.flatMap { fe =>
+        (candEntries.flatMap { fe =>
           perFile.get(relNorm(root, fe.path)).map(n => fe.path -> (sidecar, n))
-        }.toMap
-        val snapshot = dvUpdates.keySet.map(p => p -> st.dvs.get(p)).toMap
-        Some(commitDvUpdate(spark, root, dvUpdates, snapshot, cdfDirs ++ Seq(dvDir, outDir),
-          added, op = "UPSERT dv", cdf = cdfName.toSeq, planV = planV))
+        }.toMap, Seq(dvDir))
     }
+    val snapshot = dvUpdates.keySet.map(p => p -> st.dvs.get(p)).toMap
+    commitDvUpdate(spark, root, dvUpdates, snapshot, cdfDirs ++ dvDirs :+ outDir,
+      added, op = op, cdf = cdfName.toSeq, schemaEvolved = schemaEvolved, planV = planV)
   }
 
   // ------------------------------------------------------------------
@@ -4014,78 +4013,80 @@ object TableVersions {
             acted.filter(col("__g_action").isin(changedTags: _*)).select(outCols: _*),
             st.checks, "merge")
 
-        // EXACT change-data capture (table property `enableChangeFeed`):
-        // the classified frame already holds every image — update rows'
-        // old/new values become update_preimage/update_postimage,
-        // deleted rows' old values delete, insert rows insert — one
-        // sidecar write, identical for the DV and rewrite paths.
-        val cdfNameF: () => Option[String] =
-          if (!cdfEnabled(st)) () => None
-          else asyncStage {
-            val updTagSeq = updateTags.map(_._1)
-            val tCols: Seq[Column] = tblSchema.fields.toIndexedSeq.map(fd =>
-              tBase(fd.name).cast(fd.dataType).as(fd.name))
-            def img(ts: Seq[String], cs: Seq[Column], ct: String): Option[DataFrame] =
-              if (ts.isEmpty) None
-              else Some(acted.filter(col("__g_action").isin(ts: _*))
-                .select(cs: _*).withColumn("_change_type", lit(ct)))
-            val frames = Seq(
-              img(updTagSeq, tCols, "update_preimage"),
-              img(updTagSeq, outCols, "update_postimage"),
-              img(deleteTags, tCols, "delete"),
-              img(insertTags.map(_._1), outCols, "insert")).flatten
-            if (frames.isEmpty) None
-            else stageChangeData(spark, root, st, frames.reduce(_.unionByName(_)))
-          }
+        Forks(spark) { forks =>
+          // EXACT change-data capture (table property `enableChangeFeed`):
+          // the classified frame already holds every image — update rows'
+          // old/new values become update_preimage/update_postimage,
+          // deleted rows' old values delete, insert rows insert — one
+          // sidecar write, identical for the DV and rewrite paths, staged
+          // on a fork overlapping the DV/rewrite stage (Forks scaladoc).
+          val cdf =
+            if (!cdfEnabled(st)) None
+            else Some(forks.fork("cdf") {
+              val updTagSeq = updateTags.map(_._1)
+              val tCols: Seq[Column] = tblSchema.fields.toIndexedSeq.map(fd =>
+                tBase(fd.name).cast(fd.dataType).as(fd.name))
+              def img(ts: Seq[String], cs: Seq[Column], ct: String): Option[DataFrame] =
+                if (ts.isEmpty) None
+                else Some(acted.filter(col("__g_action").isin(ts: _*))
+                  .select(cs: _*).withColumn("_change_type", lit(ct)))
+              val frames = Seq(
+                img(updTagSeq, tCols, "update_preimage"),
+                img(updTagSeq, outCols, "update_postimage"),
+                img(deleteTags, tCols, "delete"),
+                img(insertTags.map(_._1), outCols, "insert")).flatten
+              if (frames.isEmpty) None
+              else stageChangeData(spark, root, st, frames.reduce(_.unionByName(_)))
+            })
+          val cdfNameF = () => cdf.flatMap(_.join())
 
-        // ---- merge-on-read attempt: tombstone changed rows, append images
-        if (maxDvFraction > 0.0 && rewriteSet.nonEmpty) {
-          mergeViaDv(spark, root, st, rewriteSet, acted, outCols,
-            updateTags.map(_._1) ++ deleteTags, changedTags, maxDvFraction,
-            cdfNameF, schemaEvolved,
-            if (schemaEvolved.isDefined) Some(tblSchema) else st.schema,
-            planV) match {
-            case Some(result) => return result
-            case None => // fraction exceeded / legacy stats: rewrite below
+          // ---- merge-on-read attempt: tombstone changed rows, append
+          // images; None = fraction exceeded / legacy stats: rewrite below
+          (if (maxDvFraction > 0.0 && rewriteSet.nonEmpty)
+            mergeViaDv(spark, root, st, rewriteSet, acted, outCols,
+              updateTags.map(_._1) ++ deleteTags, changedTags, maxDvFraction,
+              cdfNameF, schemaEvolved,
+              if (schemaEvolved.isDefined) Some(tblSchema) else st.schema,
+              planV)
+          else None).getOrElse {
+            // rewrite path: the classified frame holds EVERY candidate's
+            // rows, but only rewriteSet's files re-materialize — untouched
+            // candidates' rows stay in place (a broadcast semi-filter on
+            // the O(touched) file list; s-only insert rows pass through)
+            val result0 = acted.filter(keepPred)
+            val narrowed =
+              if (notMatchedBySource.nonEmpty || matched.isEmpty ||
+                rewriteSet.size == candidates.size) result0
+              else {
+                import org.apache.spark.sql.functions.{broadcast, regexp_replace}
+                import spark.implicits._
+                val tDf = rewriteSet.map(normPath).toDF("__g_tf")
+                result0.join(broadcast(tDf),
+                  regexp_replace(regexp_replace(col("__gv_file"),
+                    "^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", ""), "^file:/+", "/") === col("__g_tf"),
+                  "left_outer")
+                  .filter(col("__g_tf").isNotNull || col("__gv_file").isNull)
+                  .drop("__g_tf")
+              }
+            val result = narrowed.select(outCols: _*)
+            val (outDir, added) = stageFiles(spark, root, result, st.partCols, "merge",
+              mapSchema = if (schemaEvolved.isDefined) Some(tblSchema) else st.schema)
+            // join the overlapped CDC sidecar stage (Forks scaladoc)
+            val cdfName = cdfNameF()
+            val cdfDirs = cdfName.map(n => new Path(cdfRootDir(root), n)).toSeq
+            if (rewriteSet.isEmpty && added.isEmpty) {
+              // no file rewrites and no insert images: committing would
+              // write an identical version — make the no-op observable
+              val f = fs(spark, root)
+              f.delete(outDir, true)
+              cdfDirs.foreach(p => f.delete(p, true))
+              currentVersion(spark, root)
+            } else commitRewrite(spark, root, rewriteSet.toSet, added, outDir,
+              dvSnapshotOf(st, rewriteSet.toSet), op = "MERGE",
+              cdf = cdfName.toSeq, extraCleanup = cdfDirs, schemaEvolved = schemaEvolved,
+              planV = planV)
           }
         }
-
-        // rewrite path: the classified frame holds EVERY candidate's
-        // rows, but only rewriteSet's files re-materialize — untouched
-        // candidates' rows stay in place (a broadcast semi-filter on
-        // the O(touched) file list; s-only insert rows pass through)
-        val result0 = acted.filter(keepPred)
-        val narrowed =
-          if (notMatchedBySource.nonEmpty || matched.isEmpty ||
-            rewriteSet.size == candidates.size) result0
-          else {
-            import org.apache.spark.sql.functions.{broadcast, regexp_replace}
-            import spark.implicits._
-            val tDf = rewriteSet.map(normPath).toDF("__g_tf")
-            result0.join(broadcast(tDf),
-              regexp_replace(regexp_replace(col("__gv_file"),
-                "^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", ""), "^file:/+", "/") === col("__g_tf"),
-              "left_outer")
-              .filter(col("__g_tf").isNotNull || col("__gv_file").isNull)
-              .drop("__g_tf")
-          }
-        val result = narrowed.select(outCols: _*)
-        val (outDir, added) = stageFiles(spark, root, result, st.partCols, "merge",
-          mapSchema = if (schemaEvolved.isDefined) Some(tblSchema) else st.schema)
-        // join the overlapped CDC sidecar stage (asyncStage scaladoc)
-        val cdfName = cdfNameF()
-        val cdfDirs = cdfName.map(n => new Path(cdfRootDir(root), n)).toSeq
-        if (rewriteSet.isEmpty && added.isEmpty) {
-          // no file rewrites and no insert images: committing would
-          // write an identical version — make the no-op observable
-          val f = fs(spark, root)
-          f.delete(outDir, true)
-          cdfDirs.foreach(p => f.delete(p, true))
-          currentVersion(spark, root)
-        } else commitRewrite(spark, root, rewriteSet.toSet, added, outDir,
-          dvSnapshotOf(st, rewriteSet.toSet), op = "MERGE",
-          cdf = cdfName.toSeq, extraCleanup = cdfDirs, schemaEvolved = schemaEvolved,
-          planV = planV)
       } finally { acted.unpersist(); () }
     } finally { src.unpersist(); () }
   }
@@ -4099,10 +4100,10 @@ object TableVersions {
   private def mergeViaDv(spark: SparkSession, root: String, st: CommitState,
       rewriteSet: Seq[String], acted: DataFrame, outCols: Seq[Column],
       victimTags: Seq[String], changedTags: Seq[String],
-      maxFraction: Double, cdfNameF: () => Option[String] = () => None,
-      schemaEvolved: Option[(String, Option[String])] = None,
-      stageSchema: Option[StructType] = None,
-      planV: Option[Long] = None): Option[Option[Long]] = {
+      maxFraction: Double, cdfNameF: () => Option[String],
+      schemaEvolved: Option[(String, Option[String])],
+      stageSchema: Option[StructType],
+      planV: Option[Long]): Option[Option[Long]] = {
     import org.apache.spark.sql.functions.col
     val candSet = rewriteSet.toSet
     val candEntries = st.files.filter(fe => candSet(fe.path))
@@ -4121,32 +4122,11 @@ object TableVersions {
     val newMatches = counts.values.sum
     if (newMatches > 0 && (totalRows == 0 || newMatches.toDouble / totalRows > maxFraction))
       return None // rewrite amortizes better (nothing staged yet)
-    // tombstone sidecar and image files are independent writes over
-    // decided inputs — stage them CONCURRENTLY (asyncStage scaladoc)
-    val sidecarF: () => Option[(Path, String, Map[String, Long])] =
-      if (newMatches == 0) () => None // no victim rows: pure insert images
-      else asyncStage(Some(stageDvSidecar(spark, root, st, rewriteSet, victims, counts)))
     val images = acted.filter(col("__g_action").isin(changedTags: _*))
       .select(outCols: _*)
-    val (outDir, added) = stageFiles(spark, root, images, st.partCols, "merge",
-      mapSchema = stageSchema.orElse(st.schema))
-    // join the overlapped CDC sidecar stage (asyncStage scaladoc)
-    val cdfName = cdfNameF()
-    val cdfDirs = cdfName.map(n => new Path(cdfRootDir(root), n)).toSeq
-    sidecarF() match {
-      case None => // no victim rows materialized: pure insert images
-        Some(commitDvUpdate(spark, root, Map.empty, Map.empty, cdfDirs :+ outDir, added,
-          op = "MERGE dv", cdf = cdfName.toSeq, schemaEvolved = schemaEvolved,
-          planV = planV))
-      case Some((dvDir, sidecar, perFile)) =>
-        val dvUpdates = candEntries.flatMap { fe =>
-          perFile.get(relNorm(root, fe.path)).map(n => fe.path -> (sidecar, n))
-        }.toMap
-        val snapshot = dvUpdates.keySet.map(p => p -> st.dvs.get(p)).toMap
-        Some(commitDvUpdate(spark, root, dvUpdates, snapshot, cdfDirs ++ Seq(dvDir, outDir),
-          added, op = "MERGE dv", cdf = cdfName.toSeq, schemaEvolved = schemaEvolved,
-          planV = planV))
-    }
+    Some(stageDvCommit(spark, root, st, rewriteSet, candEntries, victims, counts,
+      images, "merge", stageSchema.orElse(st.schema), cdfNameF, "MERGE dv",
+      schemaEvolved, planV))
   }
 
   /** REPLACE exactly the partitions present in `df`, as ONE atomic
@@ -5138,17 +5118,19 @@ object TableVersions {
           totalRows > 0 && newMatches.toDouble / totalRows <= maxDvFraction) {
         // merge-on-read: the tombstone sidecar and the insert files are
         // independent writes over decided inputs — stage them
-        // CONCURRENTLY (asyncStage scaladoc)
-        val sidecarF =
-          asyncStage(stageDvSidecar(spark, root, st, candidates, victimRel, counts))
-        val (outDir, added) = stageInserts()
-        val (dvDir, sidecar, perFile) = sidecarF()
-        val updates = candEntries.flatMap { fe =>
-          perFile.get(relNorm(root, fe.path)).map(n => fe.path -> (sidecar, n))
-        }.toMap
-        val snapshot = updates.keySet.map(p => p -> st.dvs.get(p)).toMap
-        return commitDvUpdate(spark, root, updates, snapshot, Seq(dvDir) ++ outDir.toSeq,
-          added, op, planV = planV).getOrElse(conflict())
+        // CONCURRENTLY (Forks scaladoc)
+        return Forks(spark) { forks =>
+          val sidecarF = forks.fork("dv-sidecar")(
+            stageDvSidecar(spark, root, st, candidates, victimRel, counts))
+          val (outDir, added) = stageInserts()
+          val (dvDir, sidecar, perFile) = sidecarF.join()
+          val updates = candEntries.flatMap { fe =>
+            perFile.get(relNorm(root, fe.path)).map(n => fe.path -> (sidecar, n))
+          }.toMap
+          val snapshot = updates.keySet.map(p => p -> st.dvs.get(p)).toMap
+          commitDvUpdate(spark, root, updates, snapshot, Seq(dvDir) ++ outDir.toSeq,
+            added, op, planV = planV).getOrElse(conflict())
+        }
       }
       // fraction exceeded (or no DV budget / legacy row counts):
       // rewrite amortizes better — nothing was staged above

@@ -115,17 +115,18 @@ object TermIndex {
     val tf = TextAnalysis.bm25Postings(toks, idCol).localCheckpoint(true)
     try {
       // the three stores derive from the same checkpointed frame and
-      // write to disjoint paths — overlap them (Par scaladoc)
-      Par.run(Seq(
-        () => write(tf, postingsPath(root), batchId),
-        () => write(tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
-          dfPath(root), batchId),
+      // write to disjoint paths — overlap them (Forks scaladoc)
+      Forks(batch.sparkSession) { forks =>
+        forks.fork("postings")(write(tf, postingsPath(root), batchId))
+        forks.fork("df")(write(tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
+          dfPath(root), batchId))
         // corpus scalars from the postings themselves (dl repeats per
         // (doc, term); every doc has >= 1 posting since split() never
         // returns an empty array) — no second tokenization pass
-        () => write(tf.groupBy(col(idCol)).agg(max(col("dl")).as("dl"))
+        forks.fork("scalars")(write(tf.groupBy(col(idCol)).agg(max(col("dl")).as("dl"))
           .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
-          scalarsPath(root), batchId)))
+          scalarsPath(root), batchId))
+      }
     } finally graft.CacheScope.freeCheckpoint(tf)
   }
 
@@ -159,13 +160,15 @@ object TermIndex {
       if (victimPosts.isEmpty) return
       // disjoint idempotent partitions off one checkpointed frame —
       // overlap; a crash leaving any subset replays cleanly (above)
-      Par.run(Seq(
-        () => write(victimPosts.select(col(idCol)).distinct(), deletesPath(root), batchId),
-        () => write(victimPosts.groupBy(col("term")).agg((-count(lit(1))).as("df")),
-          dfPath(root), deleteStatsBatchId(batchId)),
-        () => write(victimPosts.groupBy(col(idCol)).agg(max(col("dl")).as("dl"))
+      Forks(spark) { forks =>
+        forks.fork("deletes")(write(victimPosts.select(col(idCol)).distinct(),
+          deletesPath(root), batchId))
+        forks.fork("df")(write(victimPosts.groupBy(col("term")).agg((-count(lit(1))).as("df")),
+          dfPath(root), deleteStatsBatchId(batchId)))
+        forks.fork("scalars")(write(victimPosts.groupBy(col(idCol)).agg(max(col("dl")).as("dl"))
           .agg((-count(lit(1))).as("n_docs"), (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl")),
-          scalarsPath(root), deleteStatsBatchId(batchId))))
+          scalarsPath(root), deleteStatsBatchId(batchId)))
+      }
     } finally graft.CacheScope.freeCheckpoint(victimPosts)
   }
 

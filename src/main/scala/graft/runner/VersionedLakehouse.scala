@@ -7,7 +7,7 @@ import graft.analytics.Reports
 import graft.etl.Etl
 import graft.marts.FactPatientEncounters
 import graft.model.Config
-import graft.operators.TableVersions
+import graft.operators.{Forks, TableVersions}
 import graft.staging.Staging
 
 /** The lakehouse pipeline RUNNING ON the versioned table format: the
@@ -61,12 +61,12 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
   }
 
   /** The three processed-table appends of one ETL batch. The tables are
-    * independent, so the three commits run CONCURRENTLY — the batch's
-    * wall time is the ETL materialization plus the SLOWEST route write,
-    * not their sum (on a real cluster these are three separate jobs the
-    * scheduler interleaves anyway). The cache is materialized once
-    * up-front so the racing routes read columnar cache instead of
-    * racing to compute the same blocks.
+    * independent, so the three commits run CONCURRENTLY (Forks scaladoc)
+    * — the batch's wall time is the ETL materialization plus the SLOWEST
+    * route write, not their sum (on a real cluster these are three
+    * separate jobs the scheduler interleaves anyway). The cache is
+    * materialized once up-front so the racing routes read columnar cache
+    * instead of racing to compute the same blocks.
     */
   private def appendRoutes(enriched: DataFrame, batchId: Long): Unit = {
     // replay fast path: when every table already recorded this batch,
@@ -77,18 +77,14 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
     if (apps.forall { case (r, a) =>
         TableVersions.lastTxn(spark, r, a).exists(_ >= batchId) }) return
     TableVersions.timedOp("etl.materialize") { enriched.count() }
-    val routes: Seq[() => Unit] = Seq(
-      () => { TableVersions.appendTxn(spark, vitalsRoot,
-        Etl.routeVitals(enriched), "etl_vitals", batchId); () },
-      () => { TableVersions.appendTxn(spark, claimsRoot,
-        Etl.routeClaims(enriched), "etl_claims", batchId); () },
-      () => { TableVersions.appendTxn(spark, ehrRoot,
-        Etl.routeEhr(enriched), "etl_ehr", batchId); () })
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = routes.map(r => new Thread(() =>
-      try r() catch { case t: Throwable => errs.add(t); () }))
-    ts.foreach(_.start()); ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    Forks(spark) { forks =>
+      forks.fork("etl-vitals")(TableVersions.appendTxn(spark, vitalsRoot,
+        Etl.routeVitals(enriched), "etl_vitals", batchId))
+      forks.fork("etl-claims")(TableVersions.appendTxn(spark, claimsRoot,
+        Etl.routeClaims(enriched), "etl_claims", batchId))
+      forks.fork("etl-ehr")(TableVersions.appendTxn(spark, ehrRoot,
+        Etl.routeEhr(enriched), "etl_ehr", batchId))
+    }
   }
 
   def processedVitals: DataFrame = TableVersions.read(spark, vitalsRoot)
@@ -109,7 +105,7 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
     TableVersions.overwrite(spark, factRoot, factFrame(stgVitals),
       partitionBy = Seq("measurement_date"))
 
-  /** PIPELINED bootstrap + first increment (guide §2.6): the full fact
+  /** PIPELINED bootstrap + first increment (Forks scaladoc): the full fact
     * rebuild and the next batch's ETL/route-appends are independent —
     * the rebuild reads the CURRENT processed snapshot, the appends only
     * write NEW processed versions — so the rebuild runs on a driver
@@ -129,22 +125,14 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
   def buildFactWithRefresh(raw: DataFrame, batchId: Long): Seq[java.sql.Date] = {
     // pin the rebuild's input snapshot NOW, before any append commits
     val pinned = factFrame(stgVitals)
-    val factTask = new java.util.concurrent.FutureTask(
-      new java.util.concurrent.Callable[Long] {
-        def call(): Long = TableVersions.overwrite(spark, factRoot, pinned,
-          partitionBy = Seq("measurement_date"))
-      })
-    val th = new Thread(factTask, "graft-fact-build")
-    th.setDaemon(true)
-    th.start()
-    val barrier: () => Unit = () =>
-      try { factTask.get(); () }
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    // the barrier runs inside the refresh right before the fact swap;
-    // re-join on every exit path so a refresh failure still surfaces a
-    // rebuild failure (and never leaves the build running unobserved)
-    try refreshImpl(raw, batchId, barrier)
-    finally barrier()
+    // the barrier joins the rebuild inside the refresh right before the
+    // fact swap; on a refresh failure the scope cancels and joins the
+    // rebuild, and the refresh's own error surfaces (Forks scaladoc)
+    Forks(spark) { forks =>
+      val rebuild = forks.fork("fact-build")(TableVersions.overwrite(spark, factRoot,
+        pinned, partitionBy = Seq("measurement_date")))
+      refreshImpl(raw, batchId, () => { rebuild.join(); () })
+    }
   }
 
   def fact: DataFrame = TableVersions.read(spark, factRoot).drop("measurement_date")
@@ -179,39 +167,29 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
         case None => // marker lost to the crash window: recompute below
       }
     val enriched = raw.transform(Etl.pipeline(cfg)).cache()
-    try {
+    try Forks(spark) { forks =>
+      // materialize the cache FIRST so the fork and the route appends
+      // read settled cache instead of racing compute (appendRoutes' own
+      // materialize count then reads cache)
+      TableVersions.timedOp("etl.materialize") { enriched.count() }
       // the affected-dates scan only needs the materialized ETL cache,
-      // not the processed-table commits — run it on a driver thread
-      // WHILE the three route appends land (guide-§2.6 overlap; the
-      // appends already run concurrently among themselves)
+      // not the processed-table commits — fork it WHILE the three route
+      // appends land (Forks scaladoc; the appends already run
+      // concurrently among themselves)
       val band = cfg.proximityDays
-      val affectedF = {
-        val task = new java.util.concurrent.FutureTask(
-          new java.util.concurrent.Callable[Seq[java.sql.Date]] {
-            def call(): Seq[java.sql.Date] = {
-              val vDates = Etl.routeVitals(enriched).select(to_date(col("timestamp")).as("d"))
-              val cDates = Etl.routeClaims(enriched)
-                .select(explode(sequence(date_sub(col("service_date"), band),
-                  date_add(col("service_date"), band))).as("d"))
-              val eDates = Etl.routeEhr(enriched)
-                .select(explode(sequence(date_sub(col("visit_date"), band),
-                  date_add(col("visit_date"), band))).as("d"))
-              vDates.unionByName(cDates).unionByName(eDates)
-                .distinct().collect().map(_.getDate(0)).sortBy(_.getTime).toSeq
-            }
-          })
-        // materialize the cache FIRST so the thread and the route
-        // appends read settled cache instead of racing compute
-        // (appendRoutes' own materialize count then reads cache)
-        TableVersions.timedOp("etl.materialize") { enriched.count() }
-        val th = new Thread(task, "graft-affected-dates")
-        th.setDaemon(true)
-        th.start()
-        task
+      val affectedF = forks.fork("affected-dates") {
+        val vDates = Etl.routeVitals(enriched).select(to_date(col("timestamp")).as("d"))
+        val cDates = Etl.routeClaims(enriched)
+          .select(explode(sequence(date_sub(col("service_date"), band),
+            date_add(col("service_date"), band))).as("d"))
+        val eDates = Etl.routeEhr(enriched)
+          .select(explode(sequence(date_sub(col("visit_date"), band),
+            date_add(col("visit_date"), band))).as("d"))
+        vDates.unionByName(cDates).unionByName(eDates)
+          .distinct().collect().map(_.getDate(0)).sortBy(_.getTime).toSeq
       }
       appendRoutes(enriched, batchId)
-      val affected = try affectedF.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      val affected = affectedF.join()
 
       val stgV = stgVitals.filter(to_date(col("measurement_timestamp"))
         .isin(affected.map(d => lit(d)): _*))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{LshIndex, SemIndex, TableVersions, TermIndex}
+import graft.operators.{Forks, LshIndex, SemIndex, TableVersions, TermIndex}
 
 /** UNIFIED incremental-index maintenance: one streaming job feeds the
   * same document batches — under the SAME Structured Streaming batch
@@ -67,18 +67,19 @@ object IndexPipeline {
         b.select(col(idCol), col(textCol), col(vecCol)), "index_pipeline", batchId)
       // the three stores are independent (disjoint paths, each
       // batch-id-idempotent) — overlap their maintenance jobs
-      // (optimization-guide §2.6); a crash leaving any subset updated
+      // (Forks scaladoc); a crash leaving any subset updated
       // is repaired by the same replay that repaired the serialized
       // form, order across stores never mattered (scaladoc above)
-      graft.operators.Par.run(Seq(
-        () => LshIndex.processBatch(roots.lshSignatures, roots.lshPairs,
+      Forks(b.sparkSession) { forks =>
+        forks.fork("lsh-index")(LshIndex.processBatch(roots.lshSignatures, roots.lshPairs,
           b.select(col(idCol), col(textCol)), batchId, idCol, textCol,
-          numHashes, bands, minJaccard, k, portable),
-        () => SemIndex.processBatch(roots.semAssignments, roots.semPairs,
+          numHashes, bands, minJaccard, k, portable))
+        forks.fork("sem-index")(SemIndex.processBatch(roots.semAssignments, roots.semPairs,
           b.select(col(idCol), col(vecCol)), batchId, idCol, vecCol,
-          centArr, threshold, subCellBits),
-        () => TermIndex.updateBatch(roots.term, b.select(col(idCol), col(textCol)),
-          batchId, idCol, textCol)))
+          centArr, threshold, subCellBits))
+        forks.fork("term-index")(TermIndex.updateBatch(roots.term,
+          b.select(col(idCol), col(textCol)), batchId, idCol, textCol))
+      }
     } finally b.unpersist(blocking = false)
   }
 
@@ -195,26 +196,28 @@ object IndexPipeline {
             "generations must take new ids (tombstoned ids cannot re-index)")
         // per store the delete→insert order holds (each store's thunk
         // is not split); ACROSS stores the updates are independent and
-        // overlap (guide §2.6) — the per-version marker below is still
+        // overlap (Forks scaladoc) — the per-version marker below is still
         // written only after ALL stores advance, so the crash-replay
         // window is unchanged
         if (nDel > 0L) {
           val victims = del.select(col(idCol))
-          graft.operators.Par.run(Seq(
-            () => LshIndex.deleteBatch(roots.lshSignatures, victims, idCol, v),
-            () => SemIndex.deleteBatch(roots.semAssignments, victims, idCol, v),
-            () => TermIndex.deleteBatch(roots.term, victims, v, idCol)))
+          Forks(spark) { forks =>
+            forks.fork("lsh-delete")(LshIndex.deleteBatch(roots.lshSignatures, victims, idCol, v))
+            forks.fork("sem-delete")(SemIndex.deleteBatch(roots.semAssignments, victims, idCol, v))
+            forks.fork("term-delete")(TermIndex.deleteBatch(roots.term, victims, v, idCol))
+          }
         }
         if (nIns > 0L) {
-          graft.operators.Par.run(Seq(
-            () => LshIndex.processBatch(roots.lshSignatures, roots.lshPairs,
+          Forks(spark) { forks =>
+            forks.fork("lsh-index")(LshIndex.processBatch(roots.lshSignatures, roots.lshPairs,
               ins.select(col(idCol), col(textCol)), v, idCol, textCol,
-              numHashes, bands, minJaccard, k, portable),
-            () => SemIndex.processBatch(roots.semAssignments, roots.semPairs,
+              numHashes, bands, minJaccard, k, portable))
+            forks.fork("sem-index")(SemIndex.processBatch(roots.semAssignments, roots.semPairs,
               ins.select(col(idCol), col(vecCol)), v, idCol, vecCol,
-              centArr, threshold, subCellBits),
-            () => TermIndex.updateBatch(roots.term, ins.select(col(idCol), col(textCol)),
-              v, idCol, textCol)))
+              centArr, threshold, subCellBits))
+            forks.fork("term-index")(TermIndex.updateBatch(roots.term,
+              ins.select(col(idCol), col(textCol)), v, idCol, textCol))
+          }
         }
         writeProgress(spark, roots, v)
       }
