@@ -178,16 +178,6 @@ final class HealthcareGenerator(seed: Long = 42L, asOf: LocalDate = LocalDate.pa
     spark.range(n).map((id: java.lang.Long) => vitals(id))
   }
 
-  def claimsDs(spark: SparkSession, n: Long): Dataset[InsuranceClaim] = {
-    import spark.implicits._
-    spark.range(n).map((id: java.lang.Long) => claim(id))
-  }
-
-  def ehrDs(spark: SparkSession, n: Long): Dataset[EhrRecord] = {
-    import spark.implicits._
-    spark.range(n).map((id: java.lang.Long) => ehr(id))
-  }
-
   /** JSON message stream as the publisher would emit it: payload plus the
     * `data_type` discriminator (`pubsub_publisher.py:105-117,222,241,261`),
     * mixed ~60/20/10 vitals/claims/EHR with ~10% junk-free margin

@@ -1,8 +1,9 @@
 package graft.marts
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.model.Config
 
@@ -10,9 +11,26 @@ import graft.model.Config
   *
   * Dataflow (SURVEY §3, entry point 2): three lookback-filtered staging
   * scans → proximity band LEFT JOIN vitals↔claims (J1) with ROW_NUMBER
-  * proximity rank (W1) → proximity band LEFT JOIN ↔EHR (J2, W2) → wide
-  * GROUP BY with mixed/conditional aggregates, complexity score, risk and
-  * encounter-type categorization (A1-A3).
+  * proximity rank (W1) → proximity band LEFT JOIN ↔EHR (J2, W2) →
+  * `encounter_metrics` aggregates (A1-A3), risk and encounter-type
+  * categorization.
+  *
+  * No GROUP BY: `encounter_metrics` groups by a 34-column grain (lines
+  * 229-238) holding `patient_id`, `measurement_timestamp` and
+  * `ehr_proximity_rank`, which W2's ROW_NUMBER makes unique, so every group
+  * is one row (hence SURVEY A1's 0-or-1 "distinct counts"). [[metrics]]
+  * takes each aggregate's one-row value: COUNT(DISTINCT id) (lines
+  * 188-189) is 0/1 by the id's non-nullness, SUM/AVG (190-191) the value,
+  * the conditional SUMs (193-196) the flag as 0/1, the complexity score
+  * (199-205) the same COALESCE/weight tree. Three edge cases are
+  * reproduced, so the output equals the GROUP BY's bit for bit:
+  *  - a one-row SUM is `0 + v`, turning -0.0 into +0.0: `try_add(0, v)`;
+  *  - the planner normalises double grouping keys (-0.0 → 0.0, any NaN →
+  *    the canonical NaN), so exposed double grain columns are too;
+  *  - SUM is NULL-able, and so is `try_add`, which keeps the four
+  *    `*_claims_count` columns nullable.
+  * (Under the default `Config` bounds staging's validation keeps -0.0 and
+  * NaN out anyway.) Rows come in join/window order, not hash order.
   *
   * Scale notes (SURVEY §7.4): the equi-part of each join is
   * `patient_id`, so both joins shuffle on the same key and the windows
@@ -27,21 +45,56 @@ import graft.model.Config
   */
 object FactPatientEncounters {
 
-  def build(cfg: Config = Config.default)(
-      stgVitals: DataFrame, stgClaims: DataFrame, stgEhr: DataFrame): DataFrame = {
+  // the vitals grain, exposed as-is in the fact
+  private val vitalsColumns = Seq(
+    "patient_id", "measurement_timestamp", "device_id", "location",
+    "heart_rate", "blood_pressure_systolic", "blood_pressure_diastolic",
+    "temperature", "oxygen_saturation", "respiratory_rate",
+    "heart_rate_category", "pulse_pressure", "rate_pressure_product",
+    "shift_category", "day_category", "quality_category",
+    "low_oxygen_alert", "elevated_heart_rate_alert", "low_heart_rate_alert", "fever_alert")
 
+  def build(cfg: Config = Config.default)(
+      stgVitals: DataFrame, stgClaims: DataFrame, stgEhr: DataFrame): DataFrame =
+    metrics(cfg)(encounters(cfg)(stgVitals, stgClaims, stgEhr))
+
+  /** The fact date partitions a batch of processed rows touches: its
+    * vitals dates ∪ its claim service and EHR visit dates ± the proximity
+    * band, the only reach of the band join residual. Sorted.
+    */
+  private[graft] def affectedDates(cfg: Config)(
+      vitals: DataFrame, claims: DataFrame, ehr: DataFrame): Seq[java.sql.Date] = {
+    def banded(c: String): Column =
+      explode(sequence(date_sub(col(c), cfg.proximityDays), date_add(col(c), cfg.proximityDays)))
+    vitals.select(to_date(col("timestamp")).as("d"))
+      .unionByName(claims.select(banded("service_date").as("d")))
+      .unionByName(ehr.select(banded("visit_date").as("d")))
+      .distinct().collect().map(_.getDate(0)).sortBy(_.getTime).toSeq
+  }
+
+  /** Staging inputs that rebuild exactly the `dates` fact partitions:
+    * vitals on those dates; claims and EHR pruned to dates ± band, beyond
+    * which the band residual attaches nothing (a refresh reads O(window)).
+    */
+  private[graft] def datesInputs(cfg: Config, dates: Seq[java.sql.Date])(stgVitals: DataFrame,
+      stgClaims: DataFrame, stgEhr: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val window = dates.flatMap(d => (-cfg.proximityDays to cfg.proximityDays)
+      .map(o => java.sql.Date.valueOf(d.toLocalDate.plusDays(o.toLong)))).distinct
+    def in(c: Column, ds: Seq[java.sql.Date]): Column = c.isin(ds.map(lit): _*)
+    (stgVitals.filter(in(to_date(col("measurement_timestamp")), dates)),
+      stgClaims.filter(in(col("service_date"), window)), stgEhr.filter(in(col("visit_date"), window)))
+  }
+
+  /** The joined, ranked rows `encounter_metrics` reads (lines 8-142). */
+  private[graft] def encounters(cfg: Config)(
+      stgVitals: DataFrame, stgClaims: DataFrame, stgEhr: DataFrame): DataFrame = {
     val asOfTs = lit(cfg.asOf)
     val asOfDate = to_date(asOfTs)
 
     // vitals CTE (fact_patient_encounters.sql:8-33): 30-day lookback (P6)
     val vitals = stgVitals
       .filter(col("measurement_timestamp") >= asOfTs - expr(s"INTERVAL ${cfg.lookbackDays} DAYS"))
-      .select("patient_id", "measurement_timestamp", "device_id", "location",
-        "heart_rate", "blood_pressure_systolic", "blood_pressure_diastolic",
-        "temperature", "oxygen_saturation", "respiratory_rate",
-        "heart_rate_category", "pulse_pressure", "rate_pressure_product",
-        "shift_category", "day_category", "quality_category",
-        "low_oxygen_alert", "elevated_heart_rate_alert", "low_heart_rate_alert", "fever_alert")
+      .select(vitalsColumns.map(col): _*)
       .alias("v")
 
     // claims CTE (lines 35-61)
@@ -85,7 +138,7 @@ object FactPatientEncounters {
 
     // encounters (lines 118-142): J2 + W2 against EHR
     val ehrDayDist = abs(datediff(to_date(col("vc.measurement_timestamp")), col("e.visit_date")))
-    val encounters = vitalsWithClaims
+    vitalsWithClaims
       .join(ehr,
         col("vc.patient_id") === col("e.patient_id") && ehrDayDist <= cfg.proximityDays,
         "left")
@@ -99,89 +152,73 @@ object FactPatientEncounters {
         row_number().over(
           Window.partitionBy(col("vc.patient_id"), col("vc.measurement_timestamp"))
             .orderBy(ehrDayDist)).as("ehr_proximity_rank"))
+  }
 
-    // encounter_metrics (lines 145-239): wide GROUP BY over the full grain
-    // (34 columns incl. the proximity ranks and joined ids — reproduced
-    // as-is for parity, SURVEY A1 note), mixed + conditional aggregates.
-    val grain = Seq(
-      "patient_id", "measurement_timestamp", "device_id", "location",
-      "heart_rate", "blood_pressure_systolic", "blood_pressure_diastolic",
-      "temperature", "oxygen_saturation", "respiratory_rate", "heart_rate_category",
-      "pulse_pressure", "rate_pressure_product", "shift_category", "day_category",
-      "quality_category", "low_oxygen_alert", "elevated_heart_rate_alert",
-      "low_heart_rate_alert", "fever_alert", "claim_proximity_rank", "ehr_proximity_rank",
-      "claim_id", "service_date", "total_amount", "insurance_type", "claim_status",
-      "processing_days", "record_id", "visit_date", "diagnosis", "treatment",
-      "medication_count", "lab_test_count")
+  /** `encounter_metrics` and the final select (lines 145-239), one output
+    * row per [[encounters]] row (object scaladoc). */
+  private[graft] def metrics(cfg: Config)(encounters: DataFrame): DataFrame = {
+    val asOfTs = lit(cfg.asOf)
 
-    def cnt(flagCol: String): org.apache.spark.sql.Column =
-      sum(when(col(flagCol), 1).otherwise(0))
+    // a grain column as GROUP BY outputs it (double keys normalised)
+    def groupKey(c: String): Column = encounters.schema(c).dataType match {
+      case DoubleType => when(isnan(col(c)), Double.NaN).otherwise(lit(0.0) + col(c))
+      case _ => col(c)
+    }
+    // Spark's SUM over one row: `0 + v` (so -0.0 becomes 0.0), NULL-able
+    def rowSum(zero: Any, v: Column): Column = try_add(lit(zero), v)
+    // COUNT(DISTINCT id) over one row
+    def rowCount(id: String): Column = when(col(id).isNotNull, 1L).otherwise(0L)
+    // SUM(CASE WHEN flag THEN 1 ELSE 0 END) over one row (A2, lines 193-196)
+    def flagCount(flag: String): Column = rowSum(0L, when(col(flag), 1).otherwise(0))
+    // closest-match projection (lines 173-186): rank=1 keeps the
+    // temporally nearest claim/EHR per vitals row (J3/O2)
+    def primaryClaim(c: String): Column = when(col("claim_proximity_rank") === 1, groupKey(c))
+    def primaryEhr(c: String): Column = when(col("ehr_proximity_rank") === 1, groupKey(c))
 
-    val aggregated = encounters
-      .groupBy(grain.map(col): _*)
-      .agg(
-        countDistinct(col("claim_id")).as("total_claims"),
-        countDistinct(col("record_id")).as("total_ehr_records"),
-        sum(col("total_amount")).as("total_claim_value"),
-        avg(col("processing_days")).as("avg_processing_days"),
-        cnt("denied_claim").as("denied_claims_count"),
-        cnt("paid_claim").as("paid_claims_count"),
-        cnt("pending_claim").as("pending_claims_count"),
-        cnt("high_value_claim").as("high_value_claims_count"),
-        // Weighted composite (A3, lines 199-205)
-        (coalesce(countDistinct(col("claim_id")), lit(0)) * 0.3 +
-          coalesce(countDistinct(col("record_id")), lit(0)) * 0.2 +
-          coalesce(sum(col("diagnosis_count")), lit(0)) * 0.2 +
-          coalesce(sum(col("procedure_count")), lit(0)) * 0.2 +
-          coalesce(sum(col("medication_count")), lit(0)) * 0.1).as("encounter_complexity_score"))
+    val totalClaims = rowCount("claim_id")
+    val totalEhrRecords = rowCount("record_id")
 
-    aggregated
-      // closest-match projection (lines 173-186): rank=1 keeps the
-      // temporally nearest claim/EHR per vitals row (J3/O2)
-      .withColumn("primary_claim_id", when(col("claim_proximity_rank") === 1, col("claim_id")))
-      .withColumn("primary_service_date", when(col("claim_proximity_rank") === 1, col("service_date")))
-      .withColumn("primary_claim_amount", when(col("claim_proximity_rank") === 1, col("total_amount")))
-      .withColumn("primary_insurance_type", when(col("claim_proximity_rank") === 1, col("insurance_type")))
-      .withColumn("primary_claim_status", when(col("claim_proximity_rank") === 1, col("claim_status")))
-      .withColumn("primary_processing_days", when(col("claim_proximity_rank") === 1, col("processing_days")))
-      .withColumn("primary_ehr_record_id", when(col("ehr_proximity_rank") === 1, col("record_id")))
-      .withColumn("primary_visit_date", when(col("ehr_proximity_rank") === 1, col("visit_date")))
-      .withColumn("primary_diagnosis", when(col("ehr_proximity_rank") === 1, col("diagnosis")))
-      .withColumn("primary_treatment", when(col("ehr_proximity_rank") === 1, col("treatment")))
-      .withColumn("primary_medication_count", when(col("ehr_proximity_rank") === 1, col("medication_count")))
-      .withColumn("primary_lab_test_count", when(col("ehr_proximity_rank") === 1, col("lab_test_count")))
+    // final column list (lines 148-227): the grain's join/rank columns are
+    // grouped on but not exposed
+    encounters.select(vitalsColumns.map(c => groupKey(c).as(c)) ++ Seq(
+      primaryClaim("claim_id").as("primary_claim_id"),
+      primaryClaim("service_date").as("primary_service_date"),
+      primaryClaim("total_amount").as("primary_claim_amount"),
+      primaryClaim("insurance_type").as("primary_insurance_type"),
+      primaryClaim("claim_status").as("primary_claim_status"),
+      primaryClaim("processing_days").as("primary_processing_days"),
+      primaryEhr("record_id").as("primary_ehr_record_id"),
+      primaryEhr("visit_date").as("primary_visit_date"),
+      primaryEhr("diagnosis").as("primary_diagnosis"),
+      primaryEhr("treatment").as("primary_treatment"),
+      primaryEhr("medication_count").as("primary_medication_count"),
+      primaryEhr("lab_test_count").as("primary_lab_test_count"),
+      // mixed aggregates (A1, lines 188-192)
+      totalClaims.as("total_claims"),
+      totalEhrRecords.as("total_ehr_records"),
+      rowSum(0.0, col("total_amount")).as("total_claim_value"),
+      col("processing_days").cast(DoubleType).as("avg_processing_days"),
+      flagCount("denied_claim").as("denied_claims_count"),
+      flagCount("paid_claim").as("paid_claims_count"),
+      flagCount("pending_claim").as("pending_claims_count"),
+      flagCount("high_value_claim").as("high_value_claims_count"),
+      // weighted composite (A3, lines 199-205)
+      (coalesce(totalClaims, lit(0)) * 0.3 +
+        coalesce(totalEhrRecords, lit(0)) * 0.2 +
+        coalesce(rowSum(0L, col("diagnosis_count")), lit(0)) * 0.2 +
+        coalesce(rowSum(0L, col("procedure_count")), lit(0)) * 0.2 +
+        coalesce(rowSum(0L, col("medication_count")), lit(0)) * 0.1).as("encounter_complexity_score"),
       // risk (lines 208-214) — BigQuery NULL semantics: NULL conditions fall through
-      .withColumn("risk_level",
-        when(col("low_oxygen_alert") || col("elevated_heart_rate_alert") ||
-          col("low_heart_rate_alert") || col("fever_alert"), "high_risk")
-          .when(col("heart_rate_category") =!= "normal" || col("temperature") > 37.5, "medium_risk")
-          .otherwise("low_risk"))
+      when(col("low_oxygen_alert") || col("elevated_heart_rate_alert") ||
+        col("low_heart_rate_alert") || col("fever_alert"), "high_risk")
+        .when(col("heart_rate_category") =!= "normal" || col("temperature") > 37.5, "medium_risk")
+        .otherwise("low_risk").as("risk_level"),
       // encounter type (lines 217-222) — lateral references to the agg aliases
-      .withColumn("encounter_type",
-        when(col("total_claims") > 0 && col("total_ehr_records") > 0, "comprehensive")
-          .when(col("total_claims") > 0, "claims_only")
-          .when(col("total_ehr_records") > 0, "ehr_only")
-          .otherwise("vitals_only"))
-      .withColumn("created_at", asOfTs)
-      .withColumn("updated_at", asOfTs)
-      // final column list (lines 148-227): the grain's join/rank columns are
-      // grouped on but not exposed
-      .select(
-        col("patient_id"), col("measurement_timestamp"), col("device_id"), col("location"),
-        col("heart_rate"), col("blood_pressure_systolic"), col("blood_pressure_diastolic"),
-        col("temperature"), col("oxygen_saturation"), col("respiratory_rate"),
-        col("heart_rate_category"), col("pulse_pressure"), col("rate_pressure_product"),
-        col("shift_category"), col("day_category"), col("quality_category"),
-        col("low_oxygen_alert"), col("elevated_heart_rate_alert"),
-        col("low_heart_rate_alert"), col("fever_alert"),
-        col("primary_claim_id"), col("primary_service_date"), col("primary_claim_amount"),
-        col("primary_insurance_type"), col("primary_claim_status"), col("primary_processing_days"),
-        col("primary_ehr_record_id"), col("primary_visit_date"), col("primary_diagnosis"),
-        col("primary_treatment"), col("primary_medication_count"), col("primary_lab_test_count"),
-        col("total_claims"), col("total_ehr_records"), col("total_claim_value"),
-        col("avg_processing_days"), col("denied_claims_count"), col("paid_claims_count"),
-        col("pending_claims_count"), col("high_value_claims_count"),
-        col("encounter_complexity_score"), col("risk_level"), col("encounter_type"),
-        col("created_at"), col("updated_at"))
+      when(totalClaims > 0 && totalEhrRecords > 0, "comprehensive")
+        .when(totalClaims > 0, "claims_only")
+        .when(totalEhrRecords > 0, "ehr_only")
+        .otherwise("vitals_only").as("encounter_type"),
+      asOfTs.as("created_at"),
+      asOfTs.as("updated_at")): _*)
   }
 }

@@ -673,10 +673,14 @@ object TableVersions {
   }
 
   /** Drain recorded (phase, seconds) pairs, aggregated per phase. */
-  private[graft] def opTimingDrain(): Map[String, Double] = {
-    val out = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
+  private[graft] def opTimingDrain(): Map[String, Double] =
+    opTimingDrainCalls().map { case (k, (_, s)) => k -> s }
+
+  /** [[opTimingDrain]] with each phase's number of recorded calls. */
+  private[graft] def opTimingDrainCalls(): Map[String, (Int, Double)] = {
+    val out = scala.collection.mutable.Map.empty[String, (Int, Double)].withDefaultValue((0, 0.0))
     var e = opTimes.poll()
-    while (e != null) { out(e._1) += e._2; e = opTimes.poll() }
+    while (e != null) { val (n, s) = out(e._1); out(e._1) = (n + 1, s + e._2); e = opTimes.poll() }
     out.toMap
   }
 

@@ -129,8 +129,8 @@ final class Lakehouse(spark: SparkSession, root: String, cfg: Config = Config.de
     *     new-vitals dates ∪ (new-claim service dates ± band) ∪
     *     (new-EHR visit dates ± band);
     *  3. ONLY those partitions are rebuilt (staging vitals filtered to
-    *     the affected dates; claims/EHR inputs stay unfiltered so band
-    *     context is complete) and written with DYNAMIC partition
+    *     the affected dates; claims/EHR pruned to affected ± band, which
+    *     keeps band context complete) and written with DYNAMIC partition
     *     overwrite — untouched dates keep their existing files.
     *
     * At 100 TB this turns the 15-minute fact refresh from a full
@@ -148,28 +148,10 @@ final class Lakehouse(spark: SparkSession, root: String, cfg: Config = Config.de
       write(Etl.routeClaims(enriched), SaveMode.Append, s"$processedDir/insurance_claims")
       write(Etl.routeEhr(enriched), SaveMode.Append, s"$processedDir/ehr_records")
 
-      val vDates = Etl.routeVitals(enriched)
-        .select(to_date(col("timestamp")).as("d"))
-      val band = cfg.proximityDays
-      val cDates = Etl.routeClaims(enriched)
-        .select(explode(sequence(date_sub(col("service_date"), band),
-          date_add(col("service_date"), band))).as("d"))
-      val eDates = Etl.routeEhr(enriched)
-        .select(explode(sequence(date_sub(col("visit_date"), band),
-          date_add(col("visit_date"), band))).as("d"))
-      val affected = vDates.unionByName(cDates).unionByName(eDates)
-        .distinct().collect().map(_.getDate(0)).toSeq
-
-      val stgV = stgVitals.filter(to_date(col("measurement_timestamp"))
-        .isin(affected.map(d => lit(d)): _*))
-      // prune the claims/EHR legs to affected±band: attachments only
-      // happen through the ±band join residual, so the candidate set
-      // per rebuilt vitals row is identical (same rationale as
-      // VersionedLakehouse.refreshFactIncremental)
-      val expanded = affected.flatMap(d => (-band to band)
-        .map(o => java.sql.Date.valueOf(d.toLocalDate.plusDays(o.toLong)))).distinct
-      val stgC = stgClaims.filter(col("service_date").isin(expanded.map(d => lit(d)): _*))
-      val stgE = stgEhr.filter(col("visit_date").isin(expanded.map(d => lit(d)): _*))
+      val affected = graft.marts.FactPatientEncounters.affectedDates(cfg)(
+        Etl.routeVitals(enriched), Etl.routeClaims(enriched), Etl.routeEhr(enriched))
+      val (stgV, stgC, stgE) = graft.marts.FactPatientEncounters
+        .datesInputs(cfg, affected)(stgVitals, stgClaims, stgEhr)
       val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try {

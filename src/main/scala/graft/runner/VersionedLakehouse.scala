@@ -1,5 +1,6 @@
 package graft.runner
 
+import org.apache.hadoop.fs.{ChecksumException, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,29 +55,29 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
     * vitals and claims commits replays into "vitals no-op, claims
     * applies" — each table exactly-once, jointly idempotent).
     */
-  def runEtl(raw: DataFrame, batchId: Long): Unit = {
-    val enriched = raw.transform(Etl.pipeline(cfg)).cache()
-    try { appendRoutes(enriched, batchId) }
-    finally { enriched.unpersist(); () }
-  }
+  def runEtl(raw: DataFrame, batchId: Long): Unit =
+    if (!routesRecorded(batchId)) {
+      val enriched = raw.transform(Etl.pipeline(cfg)).cache()
+      try {
+        TableVersions.timedOp("etl.materialize") { enriched.count() }
+        appendRoutes(enriched, batchId)
+      } finally { enriched.unpersist(); () }
+    }
+
+  // replay fast path: a crash REPLAY pays metadata reads, not an ETL pass
+  private def routesRecorded(batchId: Long): Boolean =
+    Seq(vitalsRoot -> "etl_vitals", claimsRoot -> "etl_claims", ehrRoot -> "etl_ehr")
+      .forall { case (r, a) => TableVersions.lastTxn(spark, r, a).exists(_ >= batchId) }
 
   /** The three processed-table appends of one ETL batch. The tables are
     * independent, so the three commits run CONCURRENTLY (Forks scaladoc)
     * — the batch's wall time is the ETL materialization plus the SLOWEST
     * route write, not their sum (on a real cluster these are three
-    * separate jobs the scheduler interleaves anyway). The cache is
-    * materialized once up-front so the racing routes read columnar cache
-    * instead of racing to compute the same blocks.
+    * separate jobs the scheduler interleaves anyway). The caller
+    * materializes the cache once up-front, so the racing routes read
+    * columnar cache instead of racing to compute the same blocks.
     */
-  private def appendRoutes(enriched: DataFrame, batchId: Long): Unit = {
-    // replay fast path: when every table already recorded this batch,
-    // skip the materialization and the route scans entirely — a crash
-    // REPLAY pays metadata reads, not a second ETL pass
-    val apps = Seq(vitalsRoot -> "etl_vitals", claimsRoot -> "etl_claims",
-      ehrRoot -> "etl_ehr")
-    if (apps.forall { case (r, a) =>
-        TableVersions.lastTxn(spark, r, a).exists(_ >= batchId) }) return
-    TableVersions.timedOp("etl.materialize") { enriched.count() }
+  private def appendRoutes(enriched: DataFrame, batchId: Long): Unit =
     Forks(spark) { forks =>
       forks.fork("etl-vitals")(TableVersions.appendTxn(spark, vitalsRoot,
         Etl.routeVitals(enriched), "etl_vitals", batchId))
@@ -85,7 +86,6 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
       forks.fork("etl-ehr")(TableVersions.appendTxn(spark, ehrRoot,
         Etl.routeEhr(enriched), "etl_ehr", batchId))
     }
-  }
 
   def processedVitals: DataFrame = TableVersions.read(spark, vitalsRoot)
   def processedClaims: DataFrame = TableVersions.read(spark, claimsRoot)
@@ -157,51 +157,26 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
     // FULL-REPLAY fast path: when all four tables already recorded the
     // batch, the swap is done — serve the affected dates from the
     // marker written at swap time instead of re-running the batch's
-    // ETL parse. (A crash between the swap and the marker write is the
-    // only window where a full replay still pays the recompute below.)
+    // ETL parse.
     if (TableVersions.lastTxn(spark, factRoot, "fact_refresh").exists(_ >= batchId) &&
-        Seq("etl_vitals" -> vitalsRoot, "etl_claims" -> claimsRoot, "etl_ehr" -> ehrRoot)
-          .forall { case (a, r) => TableVersions.lastTxn(spark, r, a).exists(_ >= batchId) })
+        routesRecorded(batchId))
       readAffectedMarker(batchId) match {
         case Some(dates) => return dates
-        case None => // marker lost to the crash window: recompute below
+        case None => // a crash between swap and marker write: recompute below
       }
     val enriched = raw.transform(Etl.pipeline(cfg)).cache()
     try Forks(spark) { forks =>
       // materialize the cache FIRST so the fork and the route appends
-      // read settled cache instead of racing compute (appendRoutes' own
-      // materialize count then reads cache)
+      // read settled cache instead of racing compute
       TableVersions.timedOp("etl.materialize") { enriched.count() }
-      // the affected-dates scan only needs the materialized ETL cache,
-      // not the processed-table commits — fork it WHILE the three route
-      // appends land (Forks scaladoc; the appends already run
-      // concurrently among themselves)
-      val band = cfg.proximityDays
-      val affectedF = forks.fork("affected-dates") {
-        val vDates = Etl.routeVitals(enriched).select(to_date(col("timestamp")).as("d"))
-        val cDates = Etl.routeClaims(enriched)
-          .select(explode(sequence(date_sub(col("service_date"), band),
-            date_add(col("service_date"), band))).as("d"))
-        val eDates = Etl.routeEhr(enriched)
-          .select(explode(sequence(date_sub(col("visit_date"), band),
-            date_add(col("visit_date"), band))).as("d"))
-        vDates.unionByName(cDates).unionByName(eDates)
-          .distinct().collect().map(_.getDate(0)).sortBy(_.getTime).toSeq
-      }
-      appendRoutes(enriched, batchId)
+      // the affected-dates scan needs only the cache, not the route
+      // commits: fork it WHILE the appends land (Forks scaladoc)
+      val affectedF = forks.fork("affected-dates")(FactPatientEncounters.affectedDates(cfg)(
+        Etl.routeVitals(enriched), Etl.routeClaims(enriched), Etl.routeEhr(enriched)))
+      if (!routesRecorded(batchId)) appendRoutes(enriched, batchId)
       val affected = affectedF.join()
-
-      val stgV = stgVitals.filter(to_date(col("measurement_timestamp"))
-        .isin(affected.map(d => lit(d)): _*))
-      // the claims/EHR legs attach ONLY through the ±band join residual
-      // (|datediff| <= proximityDays, FactPatientEncounters), so rows
-      // outside affected±band cannot reach a rebuilt partition — prune
-      // both scans to that window (exact same candidate set per vitals
-      // row; at scale the refresh reads O(window), not O(history))
-      val expanded = affected.flatMap(d => (-band to band)
-        .map(o => java.sql.Date.valueOf(d.toLocalDate.plusDays(o.toLong)))).distinct
-      val stgC = stgClaims.filter(col("service_date").isin(expanded.map(d => lit(d)): _*))
-      val stgE = stgEhr.filter(col("visit_date").isin(expanded.map(d => lit(d)): _*))
+      val (stgV, stgC, stgE) =
+        FactPatientEncounters.datesInputs(cfg, affected)(stgVitals, stgClaims, stgEhr)
       factBarrier() // an overlapped fact rebuild must commit before the swap plans
       if (TableVersions.currentVersion(spark, factRoot).isEmpty) // refresh before any build
         TableVersions.appendTxn(spark, factRoot, factFrame(stgV, stgC, stgE),
@@ -215,14 +190,23 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
   }
 
   private def affectedMarkerPath(batchId: Long) =
-    new org.apache.hadoop.fs.Path(factRoot, s"_refresh/b$batchId.dates")
+    new Path(factRoot, s"_refresh/b$batchId.dates")
 
+  /** Sorted dates, one per line, then `#<count>`, renamed into place from
+    * a temp file (as the admin-lock heartbeat does). A marker that fails
+    * its checksum or whose last line is not its date count reads as lost.
+    */
   private def writeAffectedMarker(batchId: Long, dates: Seq[java.sql.Date]): Unit = {
     val p = affectedMarkerPath(batchId)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(dates.map(_.toString).sorted.mkString("\n").getBytes("UTF-8"))
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write((dates.map(_.toString).sorted :+ s"#${dates.size}")
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
+    try FileContext.getFileContext(tmp.toUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, p, Options.Rename.OVERWRITE)
+    catch { case scala.util.control.NonFatal(e) => fs.delete(tmp, false); throw e }
   }
 
   private def readAffectedMarker(batchId: Long): Option[Seq[java.sql.Date]] = {
@@ -231,8 +215,11 @@ final class VersionedLakehouse(spark: SparkSession, root: String, cfg: Config = 
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Some(txt.split("\n").filter(_.nonEmpty).map(java.sql.Date.valueOf).toSeq)
+      // a torn write on a checksummed file system fails its checksum
+      val lines = try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
+        catch { case _: ChecksumException => Nil } finally in.close()
+      lines.lastOption.filter(_ == s"#${lines.size - 1}")
+        .map(_ => lines.init.map(java.sql.Date.valueOf))
     }
   }
 

@@ -38,9 +38,8 @@ class BucketedSpec extends SparkSpec {
       assert(bucketedFact.exceptAll(plainFact).isEmpty)
 
       // plan: below every SortMergeJoin there must be NO shuffle — the
-      // joins and proximity windows ride the bucket clustering. (The
-      // final wide groupBy keeps its exchanges: COUNT(DISTINCT) pairs
-      // expand via gid and are layout-independent.)
+      // joins and proximity windows ride the bucket clustering (and the
+      // per-row metrics above them add none)
       import org.apache.spark.sql.execution.joins.SortMergeJoinExec
       val executed = bucketedFact.queryExecution.executedPlan
       val joins = executed.collect { case j: SortMergeJoinExec => j }
