@@ -164,6 +164,7 @@ object TableVersions {
       * calls this so a removed file's tombstones never outlive it.
       */
     def pruneDvs: CommitState = {
+      if (dvs.isEmpty) return this
       val livePaths = files.map(_.path).toSet
       if (dvs.keys.forall(livePaths)) this
       else copy(dvs = dvs.filter { case (p, _) => livePaths(p) })
@@ -1056,6 +1057,83 @@ object TableVersions {
     l.scalar.schema.map(toLogical(withDvs, _)).getOrElse(withDvs)
   }
 
+  /** The pushed listing of `version` (default: latest) when the pushed
+    * checkpoint path serves it — the threshold is on, the snapshot is
+    * at or above it, and it records a schema. None ⇒ plan over the
+    * materialized listing. Every planner's gate.
+    */
+  private[graft] def pushedSnapshot(spark: SparkSession, root: String,
+      version: Option[Long] = None): Option[PushedListing] = {
+    val t = pushedPruneThreshold(spark)
+    if (t <= 0) None
+    else pushedListing(spark, root, version)
+      .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
+  }
+
+  /** THE SURVIVOR SELECTOR: the planning state of a snapshot restricted
+    * to the entries `exact` keeps, with DVs restricted to theirs. On a
+    * materialized snapshot (`pushed = None`) that is `st.files` filtered.
+    * On a pushed one (`st` is then its scalar state) `coarse` narrows the
+    * checkpoint rows inside the distributed read — it must keep every
+    * row whose entry `exact` keeps — the tail's removes drop, its adds
+    * join, and `exact` refines them all on the driver: O(survivors +
+    * tail), never O(#files).
+    */
+  private[graft] def select(spark: SparkSession, st: CommitState,
+      pushed: Option[PushedListing])(coarse: DataFrame => DataFrame,
+      exact: FileEntry => Boolean): CommitState = pushed match {
+    case None => st.copy(files = st.files.filter(exact)).pruneDvs
+    case Some(l) =>
+      import spark.implicits._
+      val survivors = coarse(spark.read.schema(ckptRowSchema).parquet(l.ckptDir))
+        .as[CkptFileRow].collect()
+      val kept = (survivors.iterator.map(l.toEntry).filterNot(fe => l.tailRemoves(fe.path)) ++
+        l.tailAdds.iterator).filter(exact).toVector
+      val dv = l.dvMap(spark)
+      l.scalar.copy(files = kept,
+        dvs = kept.iterator.flatMap(fe => dv.get(fe.path).map(fe.path -> _)).toMap)
+  }
+
+  /** The partition test of every partition-scoped planner: does tuple
+    * `p` EQUAL one of `tuples`, or hold every pair of one of `subsets`?
+    */
+  private def partMatch(tuples: Set[Map[String, String]],
+      subsets: Seq[Map[String, String]])(p: Map[String, String]): Boolean =
+    tuples.contains(p) || subsets.exists(_.forall { case (k, v) => p.get(k).contains(v) })
+
+  /** [[partMatch]] over checkpoint rows. Partition values are exact per
+    * entry, so this is the decision itself, not a coarse bound.
+    */
+  private def partCol(tuples: Set[Map[String, String]],
+      subsets: Seq[Map[String, String]]): Column = {
+    import org.apache.spark.sql.functions.{col, lit, map_keys, size}
+    def pairs(m: Map[String, String]): Column =
+      if (m.isEmpty) lit(true) // unpartitioned: the one tuple matches all
+      else m.map { case (k, v) => col("part").getItem(k) === lit(v) }.reduce(_ && _)
+    // tuple EQUALITY: every partition column agrees AND the entry has no
+    // extra keys (writers stamp exactly the partition columns)
+    val equal = tuples.toSeq.map(m => pairs(m) && size(map_keys(col("part"))) === lit(m.size))
+    (equal ++ subsets.map(pairs)).reduceOption(_ || _).getOrElse(lit(false))
+  }
+
+  /** Partition-scoped planning state — the per-partition maintenance
+    * shape (compact / OPTIMIZE ZORDER of one partition of a 1M-file
+    * table) and [[readPartitions]]: entries holding every pair of
+    * `partition`, selected inside the checkpoint read on a pushed
+    * snapshot, plus the version a pushed plan read (commits then
+    * conflict-check and render O(delta) against it). An unscoped pass
+    * keeps the materialized listing — the whole listing is the work
+    * there.
+    */
+  private def partitionState(spark: SparkSession, root: String,
+      partition: Map[String, String],
+      version: Option[Long] = None): (CommitState, Option[Long]) = {
+    val pushed = if (partition.isEmpty) None else pushedSnapshot(spark, root, version)
+    val st = pushed.fold(commitState(spark, root, version))(_.scalar)
+    (select(spark, st, pushed)(_.where(partCol(Set.empty, Seq(partition))),
+      fe => partMatch(Set.empty, Seq(partition))(fe.part)), pushed.map(_.version))
+  }
+
   /** Read the table at `version` (default: latest) under that version's
     * COMMITTED schema: files written before an additive evolution
     * null-fill the later columns directly from the declared schema — no
@@ -1073,13 +1151,9 @@ object TableVersions {
     */
   def read(spark: SparkSession, root: String, version: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
-    val pushedT = pushedPruneThreshold(spark)
-    if (pushedT > 0) {
-      pushedListing(spark, root, version) match {
-        case Some(l) if l.totalFiles >= pushedT && l.scalar.schema.isDefined =>
-          return readPushed(spark, root, l)
-        case _ =>
-      }
+    pushedSnapshot(spark, root, version) match {
+      case Some(l) => return readPushed(spark, root, l)
+      case None =>
     }
     val st = commitState(spark, root, version)
     if (st.files.isEmpty) {
@@ -1087,7 +1161,7 @@ object TableVersions {
       // reads as zero rows under its committed schema; only legacy
       // schema-less empties are unreadable
       require(st.schema.isDefined, s"empty version at $root")
-      return emptyLike(spark, st)
+      return emptyLike(spark, root, st)
     }
     if (st.schema.isDefined) readState(spark, root, st)
     else readWithDvs(spark, root, st, st.files.map(_.path), mergeSchema)
@@ -2600,11 +2674,7 @@ object TableVersions {
     // commit renders O(delta) directly ([[tryCommitDelta]]). Below the
     // threshold the cached materialized state stays cheaper.
     def snapFor(v: Long): (CommitState, Boolean) = {
-      val t = pushedPruneThreshold(spark)
-      val pl = if (t <= 0) None
-        else pushedListing(spark, root, Some(v))
-          .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
-      pl.map(l => (l.scalar, true))
+      pushedSnapshot(spark, root, Some(v)).map(l => (l.scalar, true))
         // no parquet checkpoint below yet (the bulk-load bootstrap):
         // appends still commit O(delta) from a SCALAR-ONLY chain walk —
         // the append needs schema/checks/partCols/txns, never the
@@ -2781,43 +2851,6 @@ object TableVersions {
     throw new IllegalStateException(s"rewrite: lost $attempt commit races at $root")
   }
 
-  private def entriesMatching(st: CommitState, partition: Map[String, String]): Seq[FileEntry] =
-    st.files.filter(fe => partition.forall { case (k, v) => fe.part.get(k).contains(v) })
-
-
-  /** Partition-scoped planning state through the pushed checkpoint
-    * read — the per-partition MAINTENANCE shape (compact / OPTIMIZE
-    * ZORDER of one partition of a 1M-file table): entries whose
-    * partition values subset-match `partition` are selected inside the
-    * distributed read (partition values are exact per entry), the
-    * bounded tail folds on the driver, and the scalar state restricts
-    * to exactly those files and their DVs. None below the threshold or
-    * for an unscoped pass (the whole-table listing is the work there).
-    */
-  private def pushedPartPlan(spark: SparkSession, root: String,
-      partition: Map[String, String]): Option[(CommitState, Long)] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
-    val t = pushedPruneThreshold(spark)
-    if (t <= 0 || partition.isEmpty) return None
-    val l = pushedListing(spark, root, None)
-      .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
-      .getOrElse(return None)
-    val pred = partition.map { case (k, v) => col("part").getItem(k) === lit(v) }
-      .reduce(_ && _)
-    val survivors = spark.read.schema(ckptRowSchema).parquet(l.ckptDir)
-      .where(pred).as[CkptFileRow].collect()
-    def matches(m: Map[String, String]): Boolean =
-      partition.forall { case (k, v) => m.get(k).contains(v) }
-    val kept = (survivors.iterator.map(l.toEntry)
-      .filterNot(fe => l.tailRemoves(fe.path)) ++
-      l.tailAdds.iterator.filter(fe => matches(fe.part))).toVector
-    val dv = l.dvMap(spark)
-    Some((l.scalar.copy(files = kept,
-      dvs = kept.iterator.flatMap(fe => dv.get(fe.path).map(fe.path -> _)).toMap),
-      l.version))
-  }
-
   /** Times the PARTITION-BATCHED unscoped-maintenance driver ran
     * (spec pin: unscoped compact/zorder of a pushed partitioned table
     * iterates pushed per-partition plans, zero full materializations).
@@ -2834,11 +2867,7 @@ object TableVersions {
   private def partitionTuplesPushed(spark: SparkSession,
       root: String): Option[Seq[Map[String, String]]] = {
     import org.apache.spark.sql.functions.col
-    val t = pushedPruneThreshold(spark)
-    if (t <= 0) return None
-    val l = pushedListing(spark, root, None)
-      .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
-      .getOrElse(return None)
+    val l = pushedSnapshot(spark, root).getOrElse(return None)
     val pcs = l.scalar.partCols
     if (pcs.isEmpty) return None
     val fromCkpt = spark.read.schema(ckptRowSchema).parquet(l.ckptDir)
@@ -2875,11 +2904,7 @@ object TableVersions {
       targetBytes: Long): Option[Option[Long]] = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
-    val t = pushedPruneThreshold(spark)
-    if (t <= 0) return None
-    val l = pushedListing(spark, root, None)
-      .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined &&
-        l.scalar.partCols.isEmpty)
+    val l = pushedSnapshot(spark, root).filter(_.scalar.partCols.isEmpty)
       .getOrElse(return None)
     maintBatchedSweeps.incrementAndGet()
     val baseListing = spark.read.schema(ckptRowSchema).parquet(l.ckptDir)
@@ -2961,9 +2986,8 @@ object TableVersions {
     // per-partition maintenance of a pushed snapshot plans inside the
     // checkpoint read and commits O(delta); unscoped passes (and small
     // tables) keep the materialized listing — it IS their work list
-    val pst = pushedPartPlan(spark, root, partition)
-    val st = pst.map(_._1).getOrElse(commitState(spark, root, None))
-    val scope = pst.map(_._1.files).getOrElse(entriesMatching(st, partition))
+    val (st, planV) = partitionState(spark, root, partition)
+    val scope = st.files
     import spark.implicits._
     // bins are planned WITHIN each partition tuple (the tuple rendered
     // as a stable string key): a whole-table compact of a partitioned
@@ -2979,7 +3003,7 @@ object TableVersions {
     val toMerge = planned.filter(_._5 > 1).groupBy(p => (p._3, p._4))
       .view.mapValues(_.map(_._1).toSeq).toMap // only multi-file bins rewrite
     val partOf = scope.map(fe => fe.path -> fe.part).toMap
-    compactCommit(spark, root, st, partOf, toMerge, pst.map(_._2))
+    compactCommit(spark, root, st, partOf, toMerge, planV)
   }
 
   /** Rewrite the multi-file bins of ONE planned batch and commit — the
@@ -3046,155 +3070,58 @@ object TableVersions {
 
   /** Driver-side candidate-entry evaluations — the write-path twin of
     * [[graft.sources.GraftFileIndex.driverEvals]]: pushed planning
-    * ([[pushedPlanState]]) must grow this O(candidates + tail), never
-    * O(#files); the materialized [[candidatePaths]] loop counts every
-    * file. Tests pin the bound.
+    * ([[boxState]] over a pushed listing) must grow this O(candidates +
+    * tail), never O(#files); the materialized loop counts every file.
+    * Tests pin the bound.
     */
   private[graft] val candidateEvals = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def intersects(fe: FileEntry, bounds: Map[String, (Double, Double)]): Boolean = {
-    candidateEvals.incrementAndGet()
-    bounds.forall { case (c, (lo, hi)) =>
-      fe.stats.get(c) match {
-        case Some(cs) if cs.minNum.isDefined && cs.maxNum.isDefined =>
-          !(cs.maxNum.get < lo || cs.minNum.get > hi)
-        case _ => true // no stats recorded: conservative — always a candidate
-      }
-    }
-  }
-
-  private def allAsciiStr(s: String): Boolean = s.forall(_ < 0x80)
-
-  /** String-box twin of [[intersects]] — the CDC shape where the merge
-    * key is a string/UUID. Sound only when BOTH the stored bounds and
-    * the probe values are ASCII (Java string order and Spark's
-    * UTF8String byte order agree only below U+0080 — the same guard as
-    * [[graft.sources.GraftFileIndex.mayMatch]]); anything else keeps
-    * the file. Stored bounds may be TRUNCATED (sound: min rounded
-    * down, max rounded up — Iceberg-style), so the interval check
-    * stays conservative.
+  /** Candidate planning for a DML key box — merge phase 1, DELETE /
+    * UPSERT stats pruning, [[prunedRead]]: `st` (the scalar state when
+    * `pushed`) restricted through [[select]] to the files whose stats
+    * may intersect the box, DVs to theirs. Numeric/temporal keys prune
+    * on the numeric stats (`num`, in the double domain); string keys on
+    * the string stats (`str`). The box is the scan index's predicate
+    * ([[graft.sources.GraftFileIndex.boxPredicate]]), so the
+    * file-skipping rules are [[graft.sources.GraftFileIndex]]'s. Legacy
+    * commits whose files carry no stats for any numeric key fall back
+    * to a one-off footer collection ([[FileManifest.collectFiles]]).
     */
-  private def intersectsStr(fe: FileEntry,
-      bounds: Map[String, (String, String)]): Boolean = {
-    candidateEvals.incrementAndGet()
-    bounds.forall { case (c, (lo, hi)) =>
-      fe.stats.get(c) match {
-        case Some(cs) => (cs.minStr, cs.maxStr) match {
-          case (Some(mn), Some(mx)) if allAsciiStr(mn) && allAsciiStr(mx) &&
-              allAsciiStr(lo) && allAsciiStr(hi) => !(mx < lo || mn > hi)
-          case _ => true
-        }
-        case _ => true // no stats recorded: conservative — always a candidate
-      }
-    }
-  }
-
-  /** Candidate files for a numeric box, planned from commit stats
-    * alone. Legacy commits without stats fall back to a one-off footer
-    * collection ([[FileManifest.collectFiles]]).
-    */
-  private def candidatePaths(spark: SparkSession, st: CommitState,
-      bounds0: Map[String, (Double, Double)]): Seq[String] = {
-    if (bounds0.isEmpty) return st.files.map(_.path)
+  private[graft] def boxState(spark: SparkSession, st: CommitState,
+      pushed: Option[PushedListing], num0: Map[String, (Double, Double)],
+      str0: Map[String, (String, String)]): CommitState = {
+    import graft.sources.GraftFileIndex.{boxPredicate, ckptKeep, mayMatch}
+    import org.apache.spark.sql.functions.lit
     // stats (and the files themselves) are keyed by PHYSICAL names;
     // callers pass logical bounds
-    val bounds = bounds0.map { case (k, v) => physicalName(st.schema, k) -> v }
-    val anyStats = st.files.exists(fe => bounds.keys.exists(fe.stats.contains))
-    if (anyStats || st.files.isEmpty) st.files.filter(intersects(_, bounds)).map(_.path)
-    else FileManifest.candidateFiles(
-      FileManifest.collectFiles(spark, st.files.map(fe => (fe.path, fe.bytes)), bounds.keys.toSeq),
-      bounds)
-  }
-
-  /** [[candidatePaths]] plus a STRING box: the numeric prune first,
-    * then [[intersectsStr]] over the survivors' entries. Used by the
-    * string/UUID-keyed merge and upsert shapes.
-    */
-  private def candidatePathsB(spark: SparkSession, st: CommitState,
-      num: Map[String, (Double, Double)],
-      str: Map[String, (String, String)]): Seq[String] = {
-    val numPruned = candidatePaths(spark, st, num)
-    if (str.isEmpty) numPruned
-    else {
-      val strP = str.map { case (k, v) => physicalName(st.schema, k) -> v }
-      val keep = numPruned.toSet
-      st.files.filter(fe => keep(fe.path) && intersectsStr(fe, strP)).map(_.path)
-    }
-  }
-
-  /** WRITER-SIDE PUSHED PLANNING — the write-path half of filtered
-    * checkpoint reconstruction: candidate selection for a rewrite
-    * (merge phase 1, DELETE/UPSERT stats pruning, [[prunedRead]])
-    * served through the snapshot's parquet checkpoint instead of a
-    * driver loop over the materialized listing. The coarse bounds
-    * predicate evaluates INSIDE a distributed columnar read of the
-    * `ckptpq` dataset (conservative: stats-less entries always
-    * survive — it may keep more than [[intersects]], never less), and
-    * only the survivors plus the bounded delta tail refine with the
-    * exact driver-side check. Returns the version's scalar state with
-    * `files` restricted to exactly the candidates and `dvs` to theirs
-    * — a planning state every downstream consumer (candidate rows, DV
-    * snapshots, partitioned restage) uses unchanged. Driver cost:
-    * O(candidates), not O(#files × #bounds).
-    */
-  private def pushedCandState(spark: SparkSession, l: PushedListing,
-      bounds0: Map[String, (Double, Double)],
-      strBounds0: Map[String, (String, String)] = Map.empty): CommitState = {
-    import org.apache.spark.sql.functions.{col, lit}
-    // stats are keyed by PHYSICAL names; callers pass logical bounds
-    val bounds = bounds0.map { case (k, v) => physicalName(l.scalar.schema, k) -> v }
-    val strBounds = strBounds0.map { case (k, v) => physicalName(l.scalar.schema, k) -> v }
-    val asciiRe = "^[\\x00-\\x7F]*$"
-    val numTerms = bounds.map { case (c, (lo, hi)) =>
-      val s = col("stats").getItem(c)
-      // CONTRACT (same as GraftFileIndex.ckptKeep): TRUE whenever the
-      // driver's intersects() would keep the entry — absent stats and
-      // unbounded sides keep; only a provably-disjoint range drops
-      s.isNull || s.getField("minNum").isNull || s.getField("maxNum").isNull ||
-        (s.getField("maxNum") >= lit(lo) && s.getField("minNum") <= lit(hi))
-    }
-    val strTerms = strBounds.map { case (c, (lo, hi)) =>
-      if (!allAsciiStr(lo) || !allAsciiStr(hi)) lit(true)
+    val num = num0.map { case (k, v) => physicalName(st.schema, k) -> v }
+    val str = str0.map { case (k, v) => physicalName(st.schema, k) -> v }
+    val box = boxPredicate(num, str)
+    val legacy = pushed.isEmpty && num.nonEmpty && st.files.nonEmpty &&
+      !st.files.exists(fe => num.keys.exists(fe.stats.contains))
+    val base =
+      if (!legacy) st
       else {
-        val s = col("stats").getItem(c)
-        val mn = s.getField("minStr")
-        val mx = s.getField("maxStr")
-        // keep when stats/bounds absent or stored bounds non-ASCII —
-        // the coarse twin of intersectsStr's soundness guard
-        s.isNull || mn.isNull || mx.isNull ||
-          !(mn.rlike(asciiRe) && mx.rlike(asciiRe)) ||
-          (mx >= lit(lo) && mn <= lit(hi))
+        val keep = FileManifest.candidateFiles(FileManifest.collectFiles(spark,
+          st.files.map(fe => (fe.path, fe.bytes)), num.keys.toSeq), num).toSet
+        st.copy(files = st.files.filter(fe => keep(fe.path)))
       }
-    }
-    val coarse = (numTerms ++ strTerms).reduceOption(_ && _).getOrElse(lit(true))
-    import spark.implicits._
-    val survivors = spark.read.schema(ckptRowSchema).parquet(l.ckptDir)
-      .where(coarse).as[CkptFileRow].collect()
-    val kept = (survivors.iterator.map(l.toEntry)
-      .filterNot(fe => l.tailRemoves(fe.path)) ++ l.tailAdds.iterator)
-      .filter(fe => intersects(fe, bounds) && intersectsStr(fe, strBounds)).toVector
-    val dv = l.dvMap(spark)
-    l.scalar.copy(files = kept,
-      dvs = kept.iterator.flatMap(fe => dv.get(fe.path).map(fe.path -> _)).toMap)
+    select(spark, base, pushed)(
+      _.where(box.map(ckptKeep).reduceOption(_ && _).getOrElse(lit(true))),
+      fe => { candidateEvals.incrementAndGet(); box.forall(mayMatch(fe, _)) })
   }
 
-  /** [[pushedCandState]] for the CURRENT version of `root`, when the
-    * pushed path serves it: at or above the pushed threshold, with a
-    * recorded schema, and with non-empty `bounds` to prune on. None ⇒
-    * the caller materializes as before. PLANNING ONLY: the commit's
-    * conflict check re-reads the live state, so a snapshot raced by a
-    * concurrent writer is caught there exactly as on the materialized
-    * path.
+  /** [[boxState]] for `version` (default latest) of `root`, planned
+    * through the pushed listing when it serves the snapshot and the box
+    * is non-empty, plus the version a pushed plan read.
     */
-  private def pushedPlanState(spark: SparkSession, root: String,
-      bounds: Map[String, (Double, Double)],
-      version: Option[Long] = None,
-      strBounds: Map[String, (String, String)] = Map.empty): Option[(CommitState, Long)] = {
-    val t = pushedPruneThreshold(spark)
-    if (t <= 0 || (bounds.isEmpty && strBounds.isEmpty)) return None
-    pushedListing(spark, root, version)
-      .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
-      .map(l => (pushedCandState(spark, l, bounds, strBounds), l.version))
+  private def boxPlan(spark: SparkSession, root: String,
+      num: Map[String, (Double, Double)], str: Map[String, (String, String)] = Map.empty,
+      version: Option[Long] = None): (CommitState, Option[Long]) = {
+    val pushed =
+      if (num.isEmpty && str.isEmpty) None else pushedSnapshot(spark, root, version)
+    val st = pushed.fold(commitState(spark, root, version))(_.scalar)
+    (boxState(spark, st, pushed, num, str), pushed.map(_.version))
   }
 
   /** Stats-pruned read of `version` (default latest): candidate files
@@ -3206,32 +3133,34 @@ object TableVersions {
   def prunedRead(spark: SparkSession, root: String, statCols: Seq[String],
       bounds: Map[String, (Double, Double)], version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val pst = pushedPlanState(spark, root, bounds, version).map(_._1)
-    val st = pst.getOrElse(commitState(spark, root, version))
-    // pushed planning already restricted st.files to the candidates
-    val files = pst.map(_.files.map(_.path)).getOrElse(candidatePaths(spark, st, bounds))
+    val st = boxPlan(spark, root, bounds, version = version)._1
     val df =
-      if (files.isEmpty) emptyLike(spark, st)
-      else readWithDvs(spark, root, st, files)
+      if (st.files.isEmpty) emptyLike(spark, root, st)
+      else readWithDvs(spark, root, st, st.files.map(_.path))
     bounds.foldLeft(df) { case (d, (cn, (lo, hi))) => d.filter(col(cn) >= lo && col(cn) <= hi) }
   }
 
-  private def emptyLike(spark: SparkSession, st: CommitState): DataFrame =
+  /** A zero-row frame under `st`'s schema. A legacy schemaless state
+    * takes its first file's schema — the current listing's first file
+    * when `st` is a planning state of `root` restricted to no files.
+    */
+  private def emptyLike(spark: SparkSession, root: String, st: CommitState): DataFrame =
     st.schema match {
       case Some(s) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-      case None => spark.read.parquet(st.files.head.path).limit(0)
+      case None => spark.read.parquet(
+        st.files.headOption.getOrElse(commitState(spark, root, None).files.head).path).limit(0)
     }
 
   /** Partition-pruned read: only the files whose recorded partition
-    * values match every `filter` entry — selected from commit metadata,
-    * no directory listing, no footer reads.
+    * values match every `filter` entry — selected from commit metadata
+    * (inside the checkpoint read on a pushed snapshot), no directory
+    * listing, no footer reads.
     */
   def readPartitions(spark: SparkSession, root: String, filter: Map[String, String],
       version: Option[Long] = None): DataFrame = {
-    val st = commitState(spark, root, version)
-    val files = entriesMatching(st, filter).map(_.path)
-    if (files.isEmpty) emptyLike(spark, st)
-    else readWithDvs(spark, root, st, files)
+    val st = partitionState(spark, root, filter, version)._1
+    if (st.files.isEmpty) emptyLike(spark, root, st)
+    else readWithDvs(spark, root, st, st.files.map(_.path))
   }
 
   /** Distinct partition tuples of `version` with file/row counts —
@@ -3272,12 +3201,9 @@ object TableVersions {
       maxDvFraction: Double = 0.0): Option[Long] = {
     import org.apache.spark.sql.functions.lit
     // candidate planning through the pushed checkpoint read when it
-    // serves this snapshot (st.files = exactly the candidates there)
-    val pst = pushedPlanState(spark, root, bounds)
-    val st = pst.map(_._1).getOrElse(commitState(spark, root, None))
-    val planV = pst.map(_._2)
-    val candidates = pst.map(_._1.files.map(_.path))
-      .getOrElse(candidatePaths(spark, st, bounds))
+    // serves this snapshot; st.files = exactly the candidates
+    val (st, planV) = boxPlan(spark, root, bounds)
+    val candidates = st.files.map(_.path)
     if (candidates.isEmpty) return None
     if (maxDvFraction > 0.0)
       deleteViaDv(spark, root, st, candidates, predicate, maxDvFraction, planV) match {
@@ -3544,13 +3470,9 @@ object TableVersions {
     val strBounds: Map[String, (String, String)] =
       if (!stringKey || rangeRow.isNullAt(1)) Map.empty
       else Map(keyCol -> (rangeRow.getString(1), rangeRow.getString(2)))
-    val pst = pushedPlanState(spark, root, bounds, strBounds = strBounds)
-    val st = pst.map(_._1).getOrElse(commitState(spark, root, None))
-    val planV = pst.map(_._2)
+    val (st, planV) = boxPlan(spark, root, bounds, strBounds)
     validateChecks(updates, st.checks, "upsert") // new rows must satisfy the checks
-    val candidates =
-      if ((bounds.isEmpty && strBounds.isEmpty) || pst.isDefined) st.files.map(_.path)
-      else candidatePathsB(spark, st, bounds, strBounds)
+    val candidates = st.files.map(_.path)
     // ONE candidate scan serves both row-level legs: the MATCHED rows
     // (candidates ⋉ the batch's keys, row identity kept) feed the CDC
     // pre-images AND the merge-on-read victims — persisted so the scan
@@ -3582,7 +3504,7 @@ object TableVersions {
           import org.apache.spark.sql.functions.lit
           val pre = matched
             .map(_.drop("__gv_file", "__gv_pos"))
-            .getOrElse(emptyLike(spark, st))
+            .getOrElse(emptyLike(spark, root, st))
             .withColumn("_change_type", lit("update_preimage"))
           val matchedKeys = pre.select(col(keyCol)).distinct()
           val post = updates.join(matchedKeys, Seq(keyCol), "left_semi")
@@ -3803,12 +3725,7 @@ object TableVersions {
     // O(#files) entries just to resolve column names. The SAME
     // PushedListing then serves phase 1's candidate selection — one
     // consistent planning version.
-    val pushedL: Option[PushedListing] = {
-      val t = pushedPruneThreshold(spark)
-      if (t <= 0) None
-      else pushedListing(spark, root, None)
-        .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
-    }
+    val pushedL = pushedSnapshot(spark, root)
     val st0 = pushedL.map(_.scalar).getOrElse(commitState(spark, root, None))
     val tblSchema0 = st0.schema.getOrElse(
       spark.read.parquet(st0.files.head.path).schema)
@@ -3905,23 +3822,18 @@ object TableVersions {
         }
       if (srcRows == 0L)
         return currentVersion(spark, root) // nothing to match, nothing to insert
-      // phase-1 planning state: candidate selection through the pushed
-      // checkpoint read when it serves this snapshot and the bounds
-      // can prune (st.files = exactly the candidates there); the
-      // materialized listing otherwise
-      val canPrune = bounds.nonEmpty || strBounds.nonEmpty
-      val st: CommitState = pushedL match {
-        case Some(l) if canPrune => pushedCandState(spark, l, bounds, strBounds)
-        case Some(_) => commitState(spark, root, None)
-        case None => st0
-      }
+      // phase-1 planning state (st.files = exactly the candidates):
+      // selected through the pushed checkpoint read when it serves this
+      // snapshot and the bounds can prune; the materialized listing
+      // otherwise
+      val pushed = pushedL.filter(_ => bounds.nonEmpty || strBounds.nonEmpty)
+      val st = boxState(spark,
+        if (pushedL.isDefined && pushed.isEmpty) commitState(spark, root, None) else st0,
+        pushed, bounds, strBounds)
       // the version the pushed plan read — commits then conflict-check
       // and render O(delta) against it
-      val planV: Option[Long] =
-        if (pushedL.isDefined && canPrune) pushedL.map(_.version) else None
-      val candidates: Seq[String] =
-        if (!canPrune || pushedL.isDefined) st.files.map(_.path)
-        else candidatePathsB(spark, st, bounds, strBounds)
+      val planV = pushed.map(_.version)
+      val candidates = st.files.map(_.path)
       def joinCond: Column = {
         val keys = on.map(k => col("t." + k) === col("s." + k)).reduce(_ && _)
         extraOn.map(e => keys && expr(e)).getOrElse(keys)
@@ -3934,7 +3846,7 @@ object TableVersions {
       // merge scans its candidates exactly once.
       val tRows =
         if (candidates.isEmpty)
-          emptyLike(spark, st)
+          emptyLike(spark, root, st)
             .withColumn("__gv_file", lit(null).cast("string"))
             .withColumn("__gv_pos", lit(null).cast("long"))
         else candidateRowsWithPos(spark, root, st, candidates)
@@ -4162,38 +4074,6 @@ object TableVersions {
     * serializing on one — see [[stageFiles]].
     */
 
-  /** The files of pushed snapshot `l` whose partition tuple EQUALS one
-    * of `tuples` or subset-matches one of `drop` — replace-partitions
-    * planning through the checkpoint dataset. Partition values are
-    * exact per entry (not stats), so the distributed filter IS the
-    * decision; only the bounded tail folds on the driver. Callers cap
-    * the tuple counts (the OR-of-ANDs predicate is linear in them).
-    */
-  private def pushedPartMatches(spark: SparkSession, l: PushedListing,
-      tuples: Set[Map[String, String]],
-      drop: Seq[Map[String, String]]): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def tupleCol(m: Map[String, String]): Column =
-      if (m.isEmpty) lit(true) // unpartitioned: the one tuple matches all
-      else m.map { case (k, v) => col("part").getItem(k) === lit(v) }.reduce(_ && _)
-    val exact = tuples.toSeq.map { m =>
-      // tuple EQUALITY: every partition column agrees AND the entry has
-      // no extra keys (writers stamp exactly the partition columns, and
-      // size equality pins it)
-      tupleCol(m) && org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.map_keys(col("part"))) === lit(m.size)
-    }
-    val subset = drop.map(tupleCol)
-    val pred = (exact ++ subset).reduceOption(_ || _).getOrElse(lit(false))
-    val fromCkpt = spark.read.schema(ckptRowSchema).parquet(l.ckptDir)
-      .where(pred).select("path").collect()
-      .map(r => resolvePath(l.root, r.getString(0)))
-    def matches(m: Map[String, String]): Boolean =
-      tuples.contains(m) || drop.exists(d => d.forall { case (k, v) => m.get(k).contains(v) })
-    (fromCkpt.iterator.filterNot(l.tailRemoves) ++
-      l.tailAdds.iterator.filter(fe => matches(fe.part)).map(_.path)).toSeq.distinct
-  }
-
   def replacePartitions(spark: SparkSession, root: String, df: DataFrame,
       txn: Option[(String, Long)] = None,
       drop: Seq[Map[String, String]] = Seq.empty,
@@ -4238,10 +4118,7 @@ object TableVersions {
     // scalar-first, like appendInternal: a pushed snapshot validates and
     // commits a partition replace without materializing its listing
     def snapFor(v: Long): (CommitState, Option[PushedListing]) = {
-      val t = pushedPruneThreshold(spark)
-      val pl = if (t <= 0) None
-        else pushedListing(spark, root, Some(v))
-          .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
+      val pl = pushedSnapshot(spark, root, Some(v))
       pl.map(l => (l.scalar, pl)).getOrElse((commitState(spark, root, Some(v)), None))
     }
     val st0 = snapFor(base0)._1
@@ -4256,6 +4133,7 @@ object TableVersions {
     val (batchDir, added) = stageFiles(spark, root, df, effPart, "replace", splitTargetRows,
       mapSchema = st0.schema)
     val stagedTuples = added.map(_.part).toSet
+    val replaced = partMatch(stagedTuples, drop) _
     var attempt = 0
     while (attempt < 100) {
       txn.foreach { case (app, b) =>
@@ -4278,7 +4156,9 @@ object TableVersions {
           val sc = l.scalar
           val unseen = sc.checks -- validated.keys
           if (unseen.nonEmpty) { validateChecks(df, unseen, "replace"); validated ++= unseen }
-          val removed = pushedPartMatches(spark, l, stagedTuples, drop).toSet
+          // the exact partition tuples select inside the checkpoint read
+          val removed = select(spark, sc, plNow)(
+            _.where(partCol(stagedTuples, drop)), fe => replaced(fe.part)).files.map(_.path).toSet
           val newSchema = sc.schema.map(checkEvolution(_, df.schema, sc.dropped))
             .getOrElse(df.schema)
           val v = nextVersion(spark, root, Some(baseV))
@@ -4294,8 +4174,7 @@ object TableVersions {
           if (unseen.nonEmpty) { validateChecks(df, unseen, "replace"); validated ++= unseen }
           val kept =
             if (replaceAll) Seq.empty
-            else cur.files.filterNot(fe => stagedTuples(fe.part) ||
-              drop.exists(d => d.forall { case (k, vv) => fe.part.get(k).contains(vv) }))
+            else cur.files.filterNot(fe => replaced(fe.part))
           val newSchema = cur.schema.map(checkEvolution(_, df.schema, cur.dropped))
             .getOrElse(df.schema)
           val v = nextVersion(spark, root, Some(baseV))
@@ -4338,9 +4217,8 @@ object TableVersions {
       }
     }
     val f = fs(spark, root)
-    val pst = pushedPartPlan(spark, root, partition) // scoped pass: pushed planning
-    val st = pst.map(_._1).getOrElse(commitState(spark, root, None))
-    val scope = pst.map(_._1.files).getOrElse(entriesMatching(st, partition))
+    val (st, planV) = partitionState(spark, root, partition)
+    val scope = st.files
     if (scope.isEmpty) return None
     val tuples = scope.map(_.part).distinct
     require(st.partCols.isEmpty || tuples.size == 1,
@@ -4356,7 +4234,7 @@ object TableVersions {
       st.schema.map(physicalSchema).getOrElse(src.schema), _ => binPart)
     commitRewrite(spark, root, scope.map(_.path).toSet, added, outDir,
       dvSnapshotOf(st, scope.map(_.path).toSet), op = s"ZORDER ${keys.mkString(",")}",
-      planV = pst.map(_._2))
+      planV = planV)
   }
 
   /** Delete data files unreachable from the newest `keepVersions`
@@ -4993,13 +4871,6 @@ object TableVersions {
     l.scalar.schema.map(toLogical(withDvs, _)).getOrElse(withDvs)
   }
 
-  /** Planning state for an explicit TOUCHED-FILE set (the SQL DML
-    * shape: the victims' row identities name their files), selected
-    * inside the checkpoint's distributed read — the by-path twin of
-    * [[pushedCandState]]. `touched` carries root-relative canonical
-    * keys (foreign files stay absolute), exactly the ckpt row `path`
-    * encoding.
-    */
   /** Touched-file counts above this plan through a BROADCAST SEMI-JOIN
     * against the checkpoint dataset instead of an In predicate — a 50k+
     * file statement (wide UPDATE/DELETE) must not build a 50k-literal
@@ -5013,36 +4884,33 @@ object TableVersions {
   /** Times the wide-DML semi-join planning form was chosen (spec pin). */
   private[graft] val candSemiJoins = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Planning state for an explicit TOUCHED-FILE set (the SQL DML
+    * shape: the victims' row identities name their files), selected
+    * through [[select]] inside the checkpoint's distributed read — the
+    * by-path twin of [[boxState]]. `touched` carries root-relative
+    * canonical keys (foreign files stay absolute), exactly the ckpt row
+    * `path` encoding.
+    */
   private[graft] def pushedCandStateByPath(spark: SparkSession, l: PushedListing,
       touched: Set[String]): CommitState = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     import spark.implicits._
-    val survivors =
-      if (touched.isEmpty) Array.empty[CkptFileRow]
+    select(spark, l.scalar, Some(l))(rows =>
+      if (touched.isEmpty) rows.where(lit(false)) // folds to an empty relation: no job
+      else if (touched.size <= dmlInPredicateMax(spark))
+        rows.where(col("path").isInCollection(touched.toSeq))
       else {
-        val base = spark.read.schema(ckptRowSchema).parquet(l.ckptDir)
-        val filtered =
-          if (touched.size <= dmlInPredicateMax(spark))
-            base.where(col("path").isInCollection(touched.toSeq))
-          else {
-            candSemiJoins.incrementAndGet()
-            base.join(broadcast(touched.toSeq.toDF("path")), Seq("path"), "left_semi")
-          }
-        filtered.as[CkptFileRow].collect()
-      }
-    val kept = (survivors.iterator.map(l.toEntry)
-      .filterNot(fe => l.tailRemoves(fe.path)) ++
-      l.tailAdds.iterator.filter(fe => touched(relNorm(l.root, fe.path)))).toVector
-    val dv = l.dvMap(spark)
-    l.scalar.copy(files = kept,
-      dvs = kept.iterator.flatMap(fe => dv.get(fe.path).map(fe.path -> _)).toMap)
+        candSemiJoins.incrementAndGet()
+        rows.join(broadcast(touched.toSeq.toDF("path")), Seq("path"), "left_semi")
+      },
+      fe => touched(relNorm(l.root, fe.path)))
   }
 
   private[graft] def readStateWithRowId(spark: SparkSession, root: String,
       st: CommitState): DataFrame = {
     import org.apache.spark.sql.functions.lit
     if (st.files.isEmpty)
-      return emptyLike(spark, st)
+      return emptyLike(spark, root, st)
         .withColumn(RowIdFileCol, lit(null).cast("string"))
         .withColumn(RowIdPosCol, lit(null).cast("long"))
     candidateRowsWithPos(spark, root, st, st.files.map(_.path))
@@ -5603,7 +5471,7 @@ object TableVersions {
           "re-bootstrap the consumer from a snapshot read or raise vacuum keepVersions")
     def emptyCdf: DataFrame = { // zero-row frame in CDF shape
       val st = commitState(spark, root, Some(goodVersions.last))
-      emptyLike(spark, st)
+      emptyLike(spark, root, st)
         .withColumn("_change_type", lit(0L).cast("string"))
         .withColumn("_commit_version", lit(0L))
         .withColumn("_commit_timestamp", lit(null).cast("timestamp"))
@@ -5868,7 +5736,7 @@ object TableVersions {
         live.filter(p => admitted(normPath(p)) || !indexed(normPath(p)))
       }
     val base =
-      if (candidates.isEmpty) emptyLike(spark, st)
+      if (candidates.isEmpty) emptyLike(spark, root, st)
       else readWithDvs(spark, root, st, candidates) // a tombstoned row must not resurface here
     base.filter(col(keyCol) === key)
   }

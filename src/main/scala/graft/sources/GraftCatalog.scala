@@ -608,13 +608,8 @@ private[sources] class GraftTable(root: String, version: Option[Long])
     * checkpoint's distributed read, and only write/row-level paths —
     * which need the full listing anyway — materialize `snapshot`.
     */
-  private val pushedSnap: Option[TableVersions.PushedListing] = {
-    val t = TableVersions.pushedPruneThreshold(spark)
-    if (t > 0)
-      TableVersions.pushedListing(spark, root, version)
-        .filter(l => l.totalFiles >= t && l.scalar.schema.isDefined)
-    else None
-  }
+  private val pushedSnap: Option[TableVersions.PushedListing] =
+    TableVersions.pushedSnapshot(spark, root, version)
   private lazy val snapshot = TableVersions.commitState(spark, root, version)
   private def scalarState: TableVersions.CommitState =
     pushedSnap.map(_.scalar).getOrElse(snapshot)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, isnan, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,25 +30,43 @@ import graft.operators.TableVersions.{ColStats, CommitState, FileEntry, PushedLi
   * same stats path, because a partition-pure file has min = max = the
   * partition value.
   *
+  * THE FILE-SKIPPING RULES of the table format live here, once, and
+  * every planner uses them: scans through this index, and the DML
+  * planners ([[TableVersions]] delete / upsert / merge / `prunedRead`),
+  * whose key box `(lo, hi)` becomes the Catalyst conjunction
+  * `k >= lo AND k <= hi` on the key's physical column. Two forms:
+  *   - [[GraftFileIndex.mayMatch]], the EXACT driver rule over one
+  *     commit entry;
+  *   - [[GraftFileIndex.ckptKeep]], its COARSE Column twin over
+  *     checkpoint rows, evaluated inside the distributed checkpoint
+  *     read. Contract: it keeps every entry `mayMatch` keeps (it may
+  *     keep more), so the exact rule refines its survivors.
   * Pruning is conservative by construction: only provably-disjoint
-  * files are dropped. Unsupported expressions, columns without stats,
-  * decimal columns (parquet footer stats carry the UNSCALED value —
-  * comparing against a scaled literal would prune wrongly), and
-  * non-`StringType` string-stat comparisons all keep the file.
+  * files are dropped. Anything else keeps the file:
+  *   - unsupported expressions and columns without stats, or with only
+  *     one of min/max recorded;
+  *   - decimal columns (parquet footer stats carry the UNSCALED value —
+  *     comparing against a scaled literal would prune wrongly) and
+  *     binary-backed types;
+  *   - a NaN float/double literal (Spark orders NaN above every double,
+  *     so `d <= NaN` holds for every row) and NaN stored bounds;
+  *   - string comparisons unless the literal AND both stored bounds are
+  *     ASCII: Java-String order (how footer min/max were folded) and
+  *     Spark's UTF8String byte order agree only below U+0080. Stored
+  *     string bounds may be TRUNCATED (min rounded down, max rounded
+  *     up), which keeps the interval check sound.
   *
-  * At 100 TB the listing itself is the scale problem, so two shapes:
-  *   - MATERIALIZED (`pushed = None`): `listFiles` is a driver loop
-  *     over the already-parsed commit entries — right below the pushed
+  * Which listing the rules run over is [[TableVersions.select]]'s
+  * decision:
+  *   - MATERIALIZED (`pushed = None`): a driver loop over the
+  *     already-parsed commit entries — right below the pushed
   *     threshold, where a Spark job per query costs more than the loop.
   *   - PUSHED (`pushed = Some(listing)`): the listing stays in the
-  *     version's parquet checkpoint; `listFiles` translates the query's
-  *     filters into a CONSERVATIVE Column predicate evaluated inside a
-  *     distributed columnar read of the checkpoint (never dropping a
-  *     file [[GraftFileIndex.mayMatch]] would keep), then refines the
-  *     survivors — plus the bounded delta tail — with the EXACT
-  *     driver-side check. Per-query driver cost: O(survivors), not
-  *     O(#files). [[driverEvals]] counts driver-side entry evaluations
-  *     so tests can pin that bound.
+  *     version's parquet checkpoint; the coarse rule runs inside a
+  *     distributed columnar read of it, and only the survivors — plus
+  *     the bounded delta tail — reach the exact rule. Per-query driver
+  *     cost: O(survivors), not O(#files). [[driverEvals]] counts
+  *     driver-side entry evaluations so tests can pin that bound.
   */
 class GraftFileIndex(spark: SparkSession, root: String, st: CommitState,
     val dataSchema: StructType, pushed: Option[PushedListing] = None)
@@ -73,28 +91,12 @@ class GraftFileIndex(spark: SparkSession, root: String, st: CommitState,
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val filters = partitionFilters ++ dataFilters
-    val kept = pushed match {
-      case Some(l) =>
-        val coarse = filters.map(f => GraftFileIndex.ckptKeep(f))
-          .reduceOption(_ && _).getOrElse(lit(true))
-        import spark.implicits._
-        val survivors = spark.read.schema(TableVersions.ckptRowSchema)
-          .parquet(l.ckptDir).where(coarse)
-          .as[TableVersions.CkptFileRow].collect()
-        val base = survivors.iterator.map(l.toEntry)
-          .filterNot(fe => l.tailRemoves(fe.path))
-          .filter(fe => { GraftFileIndex.driverEvals.incrementAndGet()
-            filters.forall(f => GraftFileIndex.mayMatch(fe, f)) })
-        val tail = l.tailAdds.iterator
-          .filter(fe => { GraftFileIndex.driverEvals.incrementAndGet()
-            filters.forall(f => GraftFileIndex.mayMatch(fe, f)) })
-        (base ++ tail).toSeq
-      case None =>
-        st.files.filter { fe =>
-          GraftFileIndex.driverEvals.incrementAndGet()
-          filters.forall(f => GraftFileIndex.mayMatch(fe, f))
-        }
-    }
+    val kept = TableVersions.select(spark, st, pushed)(
+      _.where(filters.map(GraftFileIndex.ckptKeep).reduceOption(_ && _).getOrElse(lit(true))),
+      fe => {
+        GraftFileIndex.driverEvals.incrementAndGet()
+        filters.forall(f => GraftFileIndex.mayMatch(fe, f))
+      }).files
     val statuses = kept.map { fe =>
       new FileStatus(fe.bytes, false, 1, 128L << 20, 0L, new Path(fe.path))
     }
@@ -110,11 +112,29 @@ object GraftFileIndex {
     */
   val driverEvals = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** A DML key box as file-skipping predicates over PHYSICAL column
+    * names: `k >= lo` and `k <= hi` per key. A NaN side keeps every file
+    * (the rules refuse NaN literals), and a string key whose box has a
+    * non-ASCII end is dropped whole, so the box keeps a file exactly
+    * when every key's stats may intersect it.
+    */
+  private[graft] def boxPredicate(num: Map[String, (Double, Double)],
+      str: Map[String, (String, String)]): Seq[Expression] = {
+    def sides(c: String, dt: DataType, lo: Literal, hi: Literal) = {
+      val a = AttributeReference(c, dt)()
+      Seq(GreaterThanOrEqual(a, lo), LessThanOrEqual(a, hi))
+    }
+    num.toSeq.flatMap { case (c, (lo, hi)) => sides(c, DoubleType, Literal(lo), Literal(hi)) } ++
+      str.toSeq.flatMap { case (c, (lo, hi)) =>
+        if (allAscii(lo) && allAscii(hi)) sides(c, StringType, Literal(lo), Literal(hi)) else Nil
+      }
+  }
+
   /** Can `fe` contain a row satisfying `expr`? (false ⇒ provably not —
     * safe to skip the file.) Three-valued in spirit: anything not
     * understood is "maybe" = keep.
     */
-  private[sources] def mayMatch(fe: FileEntry, expr: Expression): Boolean = expr match {
+  private[graft] def mayMatch(fe: FileEntry, expr: Expression): Boolean = expr match {
     case And(l, r) => mayMatch(fe, l) && mayMatch(fe, r)
     case Or(l, r) => mayMatch(fe, l) || mayMatch(fe, r)
     case EqualTo(a: Attribute, Literal(v, dt)) => rangeMayContain(fe, a.name, dt, v, v)
@@ -152,19 +172,15 @@ object GraftFileIndex {
     case _ => true // casts / UDFs / …: no safe prune
   }
 
-  // ------------------------------------------------------------------
-  // Coarse Column translation of [[mayMatch]] over the checkpoint-row
-  // schema (`stats: map<string, struct<minNum, maxNum, minStr, maxStr,
-  // nulls>>`, `rows`): evaluated inside the distributed checkpoint
-  // read. CONTRACT: for every entry, ckptKeep(f) is TRUE whenever
-  // mayMatch(entry, f) is true — it may keep more (untranslatable
-  // shapes become `true`), never less; the driver's exact refinement
-  // over the survivors restores mayMatch parity.
-  // ------------------------------------------------------------------
-
   private val AsciiRe = "^[\\x00-\\x7F]*$"
 
-  private[sources] def ckptKeep(expr: Expression): Column = expr match {
+  /** [[mayMatch]] as a Column over the checkpoint-row schema (`stats:
+    * map<string, struct<minNum, maxNum, minStr, maxStr, nulls>>`,
+    * `rows`). TRUE whenever `mayMatch(entry, expr)` is true for the
+    * row's entry — it may keep more (untranslatable shapes become
+    * `true`), never less.
+    */
+  private[graft] def ckptKeep(expr: Expression): Column = expr match {
     case And(l, r) => ckptKeep(l) && ckptKeep(r)
     case Or(l, r) => ckptKeep(l) || ckptKeep(r)
     case EqualTo(a: Attribute, Literal(v, dt)) => keepRange(a.name, dt, v, v)
@@ -225,7 +241,9 @@ object GraftFileIndex {
           return lit(true) // untranslatable literal domain: keep all
         val mn = s.getField("minNum")
         val mx = s.getField("maxNum")
-        s.isNull || mn.isNull || mx.isNull ||
+        // SQL orders NaN above every double; the driver rule keeps a
+        // NaN bound, so the coarse form must too
+        s.isNull || mn.isNull || mx.isNull || isnan(mn) || isnan(mx) ||
           (loD.map(x => mx >= lit(x)).getOrElse(lit(true)) &&
             hiD.map(x => mn <= lit(x)).getOrElse(lit(true)))
     }
@@ -269,7 +287,8 @@ object GraftFileIndex {
           case _ =>
             (numLit(dt, lo), numLit(dt, hi), cs.minNum, cs.maxNum) match {
               case (l, h, Some(mn), Some(mx)) if (lo == null || l.isDefined) && (hi == null || h.isDefined) =>
-                l.forall(lv => mx >= lv) && h.forall(hv => mn <= hv)
+                // negated so a NaN stored bound keeps the file
+                l.forall(lv => !(mx < lv)) && h.forall(hv => !(mn > hv))
               case _ => true
             }
         }
@@ -288,13 +307,14 @@ object GraftFileIndex {
     }
 
   /** Literal → the double domain the footer stats were recorded in.
-    * None ⇒ this type cannot be compared safely (decimal: footer stats
-    * are UNSCALED; binary-backed types: garbage) — caller keeps the
-    * file.
+    * None ⇒ this literal cannot be compared safely — caller keeps the
+    * file: decimal (footer stats are UNSCALED), binary-backed types,
+    * and NaN (Spark orders it above every double, IEEE comparisons
+    * make it disjoint from every range).
     */
   private def numLit(dt: DataType, v: Any): Option[Double] = {
     if (v == null) return None
-    dt match {
+    (dt match {
       case ByteType => Some(v.asInstanceOf[Byte].toDouble)
       case ShortType => Some(v.asInstanceOf[Short].toDouble)
       case IntegerType => Some(v.asInstanceOf[Int].toDouble)
@@ -304,6 +324,6 @@ object GraftFileIndex {
       case DateType => Some(v.asInstanceOf[Int].toDouble) // days since epoch
       case TimestampType | TimestampNTZType => Some(v.asInstanceOf[Long].toDouble) // micros
       case _ => None
-    }
+    }).filterNot(_.isNaN)
   }
 }

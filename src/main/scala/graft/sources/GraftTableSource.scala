@@ -209,15 +209,12 @@ object GraftTableSource {
     // big snapshots serve their listing straight from the parquet
     // checkpoint (filtered reconstruction) — same dispatch as
     // TableVersions.read
-    val pushedT = TableVersions.pushedPruneThreshold(spark)
-    if (pushedT > 0) {
-      TableVersions.pushedListing(spark, root, version) match {
-        case Some(l) if l.totalFiles >= pushedT && l.scalar.schema.isDefined =>
-          return if (l.dvMap(spark).isEmpty && !TableVersions.mappingActive(l.scalar))
-            relationFor(spark, root, l.scalar, Some(l))
-          else new PushedDvTableRelation(spark, root, l)
-        case _ =>
-      }
+    TableVersions.pushedSnapshot(spark, root, version) match {
+      case Some(l) =>
+        return if (l.dvMap(spark).isEmpty && !TableVersions.mappingActive(l.scalar))
+          relationFor(spark, root, l.scalar, Some(l))
+        else new PushedDvTableRelation(spark, root, l)
+      case None =>
     }
     val st = TableVersions.commitState(spark, root, version)
     if (st.dvs.isEmpty && !TableVersions.mappingActive(st)) relationFor(spark, root, st)

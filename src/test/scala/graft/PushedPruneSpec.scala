@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 import graft.operators.TableVersions
@@ -124,6 +124,33 @@ class PushedPruneSpec extends SparkSpec {
       paths(pushedIdx, probes.head._2)
       val querySecs = (System.nanoTime() - t1) / 1e9
       assert(querySecs < 30.0, s"pushed prune of 200k entries took $querySecs s")
+    }
+  }
+
+  test("a NaN literal keeps the file on both paths: reads agree with plain parquet") {
+    withConf("graft.table.parquetCheckpointThreshold" -> "1",
+        "graft.table.checkpointInterval" -> "1") {
+      val root = newRoot()
+      TableVersions.append(spark, root, Seq(1.0, 2.0, 3.0).toDF("d").coalesce(1))
+      // a metadata-only commit, so a parquet checkpoint exists to push into
+      TableVersions.setTableProperty(spark, root, "comment", "nan")
+      val files = TableVersions.commitState(spark, root).files.map(_.path)
+      assert(files.size === 1)
+      // Spark orders NaN above every double: each predicate holds for all rows
+      val preds = Seq(col("d") <= Double.NaN, col("d") < Double.NaN,
+        lit(Double.NaN) > col("d"))
+      Seq("0", "1").foreach { threshold =>
+        withConf("graft.table.pushedPruneThreshold" -> threshold) {
+          TableVersions.clearStateCache()
+          if (threshold == "1") assert(TableVersions.pushedListing(spark, root, None).isDefined,
+            "precondition: the snapshot serves a pushed listing")
+          preds.foreach { p =>
+            assert(spark.read.parquet(files: _*).filter(p).count() === 3L)
+            assert(TableVersions.read(spark, root).filter(p).count() === 3L,
+              s"$p pruned the file at threshold $threshold")
+          }
+        }
+      }
     }
   }
 

@@ -163,6 +163,12 @@ class PushedWritePlanSpec extends SparkSpec {
         assert(txt.contains("#BASE "), s"v$v must be an incremental commit")
       }
 
+      // readPartitions plans inside the checkpoint read too
+      resolvesBefore = TableVersions.ckptResolves.get()
+      assert(realRows(root).size === 5)
+      assert(TableVersions.ckptResolves.get() === resolvesBefore,
+        "a pushed readPartitions must never materialize the checkpoint dataset")
+
       // every fake entry carried by reference through three commits
       val st = TableVersions.commitState(spark, root, None)
       assert(st.files.count(_.path.contains("/f")) === N,
@@ -260,10 +266,14 @@ class PushedWritePlanSpec extends SparkSpec {
   }
 
   test("pushed write planning: end-to-end parity with the materialized planner") {
-    def build(root: String, pushed: Boolean): Unit = withConf(
+    // catalog tables, so SQL UPDATE/DELETE run the by-path planner too
+    val w = TestCatalog.warehouse(spark)
+    def twin[A](pushed: Boolean)(body: => A): A = withConf(
       "graft.table.parquetCheckpointThreshold" -> "1",
       "graft.table.checkpointInterval" -> "1",
-      "graft.table.pushedPruneThreshold" -> (if (pushed) "1" else "0")) {
+      "graft.table.pushedPruneThreshold" -> (if (pushed) "1" else "0"))(body)
+    def build(name: String, pushed: Boolean): Unit = twin(pushed) {
+      val root = s"$w/db/$name"
       TableVersions.append(spark, root,
         (0 until 40).map(i => (i.toLong, s"a$i", i % 4)).toDF("k", "s", "p"), Seq("p"))
       TableVersions.append(spark, root,
@@ -291,18 +301,37 @@ class PushedWritePlanSpec extends SparkSpec {
       TableVersions.merge(spark, root,
         Seq((13L, "D")).toDF("k", "v"), Seq("k"),
         matched = Seq(MergeDelete()), maxDvFraction = 0.9)
+      // string-keyed upsert and merge (string-stats box)
+      TableVersions.upsert(spark, root,
+        Seq((555L, "a5", 1), (556L, "zz", 0)).toDF("k", "s", "p"), "s")
+      TableVersions.merge(spark, root,
+        Seq(("b41", 4141L)).toDF("s", "nk"), Seq("s"),
+        matched = Seq(MergeUpdate(Map("k" -> "s.nk"))))
+      // partition-scoped compaction
+      TableVersions.compact(spark, root, 1L << 30, partition = Map("p" -> "1"))
+      // SQL row-level statements: the by-path planner
+      spark.sql(s"UPDATE graft.db.$name SET s = concat(s, '_u') WHERE k % 5 = 1")
+      spark.sql(s"DELETE FROM graft.db.$name WHERE k % 11 = 2")
       ()
     }
-    val pushedRoot = newRoot()
-    val matRoot = newRoot()
-    build(pushedRoot, pushed = true)
-    build(matRoot, pushed = false)
+    val (pushedName, matName) = ("pwp_parity_pushed", "pwp_parity_mat")
+    val pushedRoot = s"$w/db/$pushedName"
+    val matRoot = s"$w/db/$matName"
+    build(pushedName, pushed = true)
+    build(matName, pushed = false)
     val a = TableVersions.read(spark, pushedRoot).orderBy("k")
       .collect().map(_.toSeq).toSeq
     val b = TableVersions.read(spark, matRoot).orderBy("k")
       .collect().map(_.toSeq).toSeq
     assert(a === b, "pushed write planning must be invisible in the results")
     assert(a.nonEmpty && !a.map(_.head.asInstanceOf[Long]).exists(k => k % 7 == 0 && k <= 50))
+    // partition-pruned reads agree, each on its own planner
+    def partRows(root: String, pushed: Boolean) = twin(pushed) {
+      TableVersions.readPartitions(spark, root, Map("p" -> "1"))
+        .orderBy("k").collect().map(_.toSeq).toSeq
+    }
+    assert(partRows(pushedRoot, pushed = true) === partRows(matRoot, pushed = false))
+    assert(partRows(matRoot, pushed = false).nonEmpty)
     // the exact change feed is identical too (delta-direct commits
     // reference the same sidecar images the materialized ones do)
     def feed(root: String) = {
@@ -314,6 +343,19 @@ class PushedWritePlanSpec extends SparkSpec {
     }
     assert(feed(pushedRoot) === feed(matRoot),
       "change feeds must match across the two planners")
+    // the same operations committed the same file motion, version by version
+    def steps(root: String): Seq[(Long, String, Map[String, Long])] =
+      TableVersions.history(spark, root).select("version", "operation").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+        .map { case (v, op) =>
+          val motion =
+            if (v == 0L) Map.empty[String, Long]
+            else TableVersions.diffListing(spark, root, v - 1, v).collect()
+              .groupBy(_.getString(2)).map { case (c, rs) => c -> rs.length.toLong }
+          (v, op, motion)
+        }
+    assert(steps(pushedRoot) === steps(matRoot),
+      "history operations and per-version file adds/removes must match")
   }
 
   test("distributed vacuum sweep: same survivors as the driver sweep, retained reads intact") {
