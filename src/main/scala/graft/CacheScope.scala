@@ -27,7 +27,8 @@ import org.apache.spark.sql.DataFrame
   *
   * Deliberately NOT used for `HealthcareQueries.perSession` (a
   * cross-query memo by design) or for operator-internal caches whose
-  * callers already unpersist in `finally` (Lakehouse, StreamingEtl).
+  * callers already unpersist in `finally` (`runner.Lakehouse`, which
+  * `StreamingEtl` runs its micro-batches through).
   */
 object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()

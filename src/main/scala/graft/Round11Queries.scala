@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.model.Config
 import graft.operators.TableVersions
-import graft.runner.VersionedLakehouse
+import graft.runner.Lakehouse
 
 /** Round-11 oracle query: the VERSIONED LAKEHOUSE end-to-end (q134) —
   * the flagship runner itself under the DuckDB hash gate, not just
@@ -112,10 +112,10 @@ object Round11Queries {
         try body
         finally println(f"QTIME_PHASE q134/$tag ${(System.nanoTime() - t0) / 1e9}%.2f")
       }
-    val lake = new VersionedLakehouse(spark, s"$base/vlake", cfg)
+    val lake = new Lakehouse(spark, s"$base/vlake", cfg)
     phase("etl1") { lake.runEtl(batch1, batchId = 0L) }
     // full fact rebuild PIPELINED with batch 2's ETL + appends
-    // (VersionedLakehouse.buildFactWithRefresh: the rebuild's input
+    // (Lakehouse.buildFactWithRefresh: the rebuild's input
     // snapshot pins before the appends start, so the committed fact and
     // the swap are bit-identical to the serial buildFact+refresh flow)
     val affected = phase("fact+refresh") {

@@ -59,18 +59,9 @@ object ChangeFeed {
     * only a hidden temp file, never a truncated marker that would wedge
     * or misdirect every subsequent [[follow]].
     */
-  private def writeProgress(spark: SparkSession, checkpointDir: String, v: Long): Unit = {
-    val p = markerPath(checkpointDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    fs.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".cdf_progress.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def writeProgress(spark: SparkSession, checkpointDir: String, v: Long): Unit =
+    Replace.file(spark.sparkContext.hadoopConfiguration, markerPath(checkpointDir))(
+      _.write(v.toString.getBytes))
 
   /** Catch the consumer up to the source's current version
     * (AvailableNow semantics): `apply(version, changes)` runs once per

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * dynamic partition overwrite, so a replayed batch overwrites its own
   * partition instead of appending duplicates — the same idempotent-sink
   * stance as `SketchRollup.updateSummaryTable` and the Lakehouse
-  * partition swap.
+  * refresh's `ZoneSink.replacePartitions`.
   *
   * DELETION (shared mechanics in [[IndexTombstones]]; [[SemIndex]] uses
   * the same, [[TermIndex]] adds stats deltas): [[deleteBatch]] records a
@@ -58,7 +58,7 @@ object LshIndex {
   /** Merge a batch's signatures into the parquet summary table
     * (replace semantics on id → idempotent under replay). The merged
     * table is written to a temp sibling and rename-swapped into place
-    * (same mechanics as `Lakehouse.compact`): an in-place overwrite has
+    * ([[Replace.dir]], as `ZoneSink.compact`): an in-place overwrite has
     * a window — post-delete, pre-commit — where a crash loses the whole
     * historical table; with the swap the live path always holds either
     * the old table or the new one. localCheckpoint is still taken so the
@@ -113,22 +113,8 @@ object LshIndex {
     */
   private def swapInMerged(spark: org.apache.spark.sql.SparkSession, path: String,
       merged: DataFrame, foldedBatches: Seq[Long]): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__merging")
-    merged.write.options(WriteOpts.data).mode("overwrite").parquet(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(path + "__premerge")
-    fs.delete(old, true) // stale leftover from a crashed earlier swap
-    require(fs.rename(p, old), s"updateSignatureTable: could not move $p aside")
-    if (!fs.rename(tmp, p)) {
-      val restored = fs.rename(old, p)
-      throw new IllegalStateException(
-        s"updateSignatureTable: could not activate $tmp; " +
-          (if (restored) s"restored original at $p"
-           else s"RESTORE FAILED — signatures are at $old, manual rename required"))
-    }
-    fs.delete(old, true)
+    Replace.dir(spark.sparkContext.hadoopConfiguration, path, "updateSignatureTable")(
+      merged.write.options(WriteOpts.data).mode("overwrite").parquet(_))
     IndexTombstones.clearBatches(spark, path, foldedBatches) // exactly what was folded
   }
 

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * is pure projection — `coalesce` per column with source priority —
   * so the whole merge is two exchanges max and stays in whole-stage
   * codegen. Pair with `Lakehouse.refreshFactIncremental`-style
-  * partition-scoped rewrites to apply the result to parquet zones:
+  * partition-scoped rewrites (`Zones.replacePartitions`) to apply it:
   * at 100 TB you merge per affected partition, not the whole table.
   *
   * Requirements: `source` columns ⊆ `target` columns (missing target

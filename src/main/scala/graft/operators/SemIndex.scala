@@ -133,22 +133,8 @@ object SemIndex {
     */
   private def swapInMerged(spark: org.apache.spark.sql.SparkSession, path: String,
       merged: DataFrame, foldedBatches: Seq[Long]): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__merging")
-    merged.write.options(WriteOpts.data).mode("overwrite").parquet(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(path + "__premerge")
-    fs.delete(old, true)
-    require(fs.rename(p, old), s"updateAssignmentTable: could not move $p aside")
-    if (!fs.rename(tmp, p)) {
-      val restored = fs.rename(old, p)
-      throw new IllegalStateException(
-        s"updateAssignmentTable: could not activate $tmp; " +
-          (if (restored) s"restored original at $p"
-           else s"RESTORE FAILED — assignments are at $old, manual rename required"))
-    }
-    fs.delete(old, true)
+    Replace.dir(spark.sparkContext.hadoopConfiguration, path, "updateAssignmentTable")(
+      merged.write.options(WriteOpts.data).mode("overwrite").parquet(_))
     IndexTombstones.clearBatches(spark, path, foldedBatches) // exactly what was folded
   }
 

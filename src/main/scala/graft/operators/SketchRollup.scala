@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    only the groups present in the delta (bitmap_or_agg is
   *    idempotent on re-delivered rows ONLY at the bitmap level, so
   *    exactly-once writing still comes from the sink swap, same as
-  *    `Lakehouse.refreshFactIncremental`).
+  *    `Lakehouse.refreshFactIncremental`'s `Zones.replacePartitions`).
   *  - [[distinctRollup]]: summary rows → exact distinct counts at any
   *    coarser grain (week/month/all-time), reading zero raw rows.
   */

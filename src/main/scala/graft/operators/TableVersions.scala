@@ -997,7 +997,11 @@ object TableVersions {
     * chain reaches a full commit or an inline-text checkpoint first
     * (small-table shape: the materialized path is the right one), or
     * when the checkpoint dataset is incomplete. Cached per target
-    * commit-file identity.
+    * commit-file identity while the checkpoint dataset it names stands:
+    * a version listed before its own checkpoint existed names an older
+    * one, which vacuum may drop (its retention contract keeps a
+    * resolvable checkpoint AT every retained version, not below), so a
+    * hit whose dataset is gone walks again and finds the version's own.
     */
   private[graft] def pushedListing(spark: SparkSession, root: String,
       version: Option[Long] = None): Option[PushedListing] = {
@@ -1006,6 +1010,7 @@ object TableVersions {
     if (!f.exists(commitPath(root, v))) return None // probe contract
     val key = cacheKey(f, commitPath(root, v))
     val hit = key.flatMap(k => Option(pushedCache.get(k)))
+      .filter(l => f.exists(new Path(l.ckptDir, "_SUCCESS")))
     if (hit.isDefined) return hit
     var chain = List.empty[DeltaCommit] // oldest-first after the walk
     var cur = v

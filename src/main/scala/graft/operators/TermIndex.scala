@@ -198,23 +198,9 @@ object TermIndex {
     * renames. See the object scaladoc for the crash-window contract. */
   private def swapIn(spark: SparkSession, path: String, merged: DataFrame): Unit = {
     val chk = merged.localCheckpoint(true)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    try chk.write.mode("overwrite").partitionBy("batch_id").parquet(tmp.toString)
+    try Replace.dir(spark.sparkContext.hadoopConfiguration, path, "compact")(
+      chk.write.mode("overwrite").partitionBy("batch_id").parquet(_))
     finally graft.CacheScope.freeCheckpoint(chk)
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    fs.delete(old, true)
-    require(fs.rename(p, old), s"compact: could not move $p aside")
-    if (!fs.rename(tmp, p)) {
-      val restored = fs.rename(old, p)
-      throw new IllegalStateException(
-        s"compact: could not activate $tmp; " +
-          (if (restored) s"restored original at $p"
-           else s"RESTORE FAILED — table is at $old, manual rename required"))
-    }
-    fs.delete(old, true)
   }
 
   /** Fold the df/scalars delta partitions into the single base partition

@@ -1,6 +1,7 @@
 package graft.runner
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{ChecksumException, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Reports
@@ -8,262 +9,211 @@ import graft.etl.Etl
 import graft.gen.HealthcareGenerator
 import graft.marts.FactPatientEncounters
 import graft.model.Config
+import graft.operators.{Forks, Replace, TableVersions}
 import graft.staging.Staging
-
-/** Zone sink configuration — the pluggable-connector surface of the
-  * lakehouse. `format` is any DataSource V1/V2 short name or class;
-  * `options` pass verbatim to the writer/reader. Three support tiers:
-  *
-  *  - **verified columnar** (`parquet`, `orc`): the zone contracts —
-  *    schema preservation, dynamic partition overwrite, predicate
-  *    pushdown on read-back — are proven by FormatsSpec in this repo;
-  *  - **connector formats** (anything else non-textual, e.g. a
-  *    `bigquery` warehouse sink with
-  *    `Map("table" -> "dataset.fact", "temporaryGcsBucket" -> ...,
-  *    "writeMethod" -> "indirect")` — the reference's BigQuery
-  *    WRITE_APPEND sinks (`healthcare_etl_pipeline.py:296-339`)
-  *    expressed as writer config, or `jdbc`/`delta`/`iceberg`):
-  *    ACCEPTED as configuration and resolved by Spark at write time; in
-  *    an environment without the connector jar the write raises Spark's
-  *    standard unresolvable-data-source error naming the format
-  *    (spec-pinned), in production it routes to the warehouse with no
-  *    code change;
-  *  - **textual formats** (`csv`, `json`, `text`): rejected eagerly —
-  *    zones require schema-preserving files (the raw-zone INGEST of
-  *    csv/json lives in `sources.Ingest`, not here).
-  */
-final case class ZoneSink(format: String = "parquet",
-    options: Map[String, String] = Map.empty) {
-  require(!Seq("csv", "json", "text").contains(format.toLowerCase),
-    s"zone format must be schema-preserving; raw-zone $format ingest belongs to sources.Ingest")
-}
 
 /** Orchestrator replacing the Airflow DAG
   * (`airflow/dags/healthcare_data_pipeline_dag.py:139-147` wiring):
   * ingest/ETL → processed tables → staging views → fact table → reports →
-  * health gates. Zones map to columnar directories (Parquet by default;
-  * ORC and warehouse connectors pluggable via [[ZoneSink]])
-  * (`raw/ processed/ curated/`, mirroring the three GCS buckets + BQ
-  * datasets, `terraform/main.tf:118-245`).
+  * health gates, over one pair of zones (`processed/`, `curated/`,
+  * mirroring the GCS buckets + BQ datasets, `terraform/main.tf:118-245`).
+  * Where the zone tables live is the [[Zones]] argument: graft's table
+  * format by default ([[TableZones]]: exactly-once, atomic refresh, time
+  * travel), or plain directories in any DataSource format ([[ZoneSink]]:
+  * parquet, orc, warehouse connectors; at-least-once). Every batch call
+  * takes a batch id; table zones record it, sink zones ignore it.
   *
-  * Scale: the fact table is written `partitionBy(measurement_date)` —
-  * the date-partitioning the reference documents as intent
-  * (`docs/architecture/technical_architecture.md:162-165`) — which gives
-  * dynamic partition pruning on the 24h/30d report filters for free.
+  * Scale: the fact table is partitioned by `measurement_date` — the
+  * date-partitioning the reference documents as intent
+  * (`docs/architecture/technical_architecture.md:162-165`) — so report
+  * windows prune to their dates and a refresh rewrites only the dates a
+  * batch touched.
   */
 final class Lakehouse(spark: SparkSession, root: String, cfg: Config = Config.default,
-    sink: ZoneSink = ZoneSink()) {
-
-  def this(spark: SparkSession, root: String, cfg: Config, format: String) =
-    this(spark, root, cfg, ZoneSink(format))
+    zones: Zones = TableZones) {
 
   val processedDir = s"$root/processed"
   val curatedDir = s"$root/curated"
+  val vitalsRoot = s"$processedDir/patient_vitals"
+  val claimsRoot = s"$processedDir/insurance_claims"
+  val ehrRoot = s"$processedDir/ehr_records"
+  val factRoot = s"$curatedDir/fact_patient_encounters"
 
-  private def write(df: DataFrame, mode: SaveMode, path: String,
-      partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(mode).format(sink.format).options(sink.options)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).save(path)
-  }
-  private def read(path: String): DataFrame =
-    spark.read.format(sink.format).options(sink.options).load(path)
-
-  /** Run the ETL over a raw message DataFrame (one string column `value`)
-    * and append the three processed tables + dead-letter output (R1/S3/S4).
+  /** One ETL batch into the three processed tables (R1/S3/S4), and the
+    * dead-letter channel. On table zones each table takes the batch
+    * exactly once (separate txn app ids per table: a crash between the
+    * vitals and claims commits replays into "vitals no-op, claims
+    * applies"), and a replay of a fully recorded batch pays metadata
+    * reads, not an ETL pass.
     */
-  def runEtl(raw: DataFrame, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val enriched = raw.transform(Etl.pipeline(cfg)).cache()
-    try {
-      write(Etl.routeVitals(enriched), mode, s"$processedDir/patient_vitals")
-      write(Etl.routeClaims(enriched), mode, s"$processedDir/insurance_claims")
-      write(Etl.routeEhr(enriched), mode, s"$processedDir/ehr_records")
-    } finally enriched.unpersist()
-    // Dead-letter channel gets the un-filtered parse output (errors kept)
-    raw.transform(Etl.parse(cfg)).transform(Etl.routeUnknown)
-      .select(to_json(struct(col("*"))).as("value"))
-      .write.mode(mode).text(s"$root/errors/unknown_data")
-  }
+  def runEtl(raw: DataFrame, batchId: Long): Unit =
+    if (!routesRecorded(batchId)) {
+      val enriched = raw.transform(Etl.pipeline(cfg)).cache()
+      try {
+        TableVersions.timedOp("etl.materialize") { enriched.count() }
+        appendRoutes(enriched, batchId)
+      } finally { enriched.unpersist(); () }
+      // the dead letter gets the un-filtered parse output (errors kept)
+      raw.transform(Etl.parse(cfg)).transform(Etl.routeUnknown)
+        .select(to_json(struct(col("*"))).as("value"))
+        .write.mode("append").text(s"$root/errors/unknown_data")
+    }
 
-  def processedVitals: DataFrame = read(s"$processedDir/patient_vitals")
-  def processedClaims: DataFrame = read(s"$processedDir/insurance_claims")
-  def processedEhr: DataFrame = read(s"$processedDir/ehr_records")
+  private def routesRecorded(batchId: Long): Boolean =
+    Seq(vitalsRoot -> "etl_vitals", claimsRoot -> "etl_claims", ehrRoot -> "etl_ehr")
+      .forall { case (r, a) => zones.recorded(spark, r, a -> batchId) }
+
+  /** The three processed-table appends of one ETL batch, CONCURRENTLY
+    * (Forks scaladoc): wall time is the slowest route, not the sum. The
+    * caller materializes the cache first, so the routes read settled
+    * columnar cache instead of racing to compute it.
+    */
+  private def appendRoutes(enriched: DataFrame, batchId: Long): Unit =
+    Forks(spark) { forks =>
+      forks.fork("etl-vitals")(zones.append(spark, vitalsRoot,
+        Etl.routeVitals(enriched), "etl_vitals" -> batchId))
+      forks.fork("etl-claims")(zones.append(spark, claimsRoot,
+        Etl.routeClaims(enriched), "etl_claims" -> batchId))
+      forks.fork("etl-ehr")(zones.append(spark, ehrRoot,
+        Etl.routeEhr(enriched), "etl_ehr" -> batchId))
+    }
+
+  def processedVitals: DataFrame = zones.read(spark, vitalsRoot)
+  def processedClaims: DataFrame = zones.read(spark, claimsRoot)
+  def processedEhr: DataFrame = zones.read(spark, ehrRoot)
 
   /** Staging views (dbt `+materialized: view`, `dbt_project.yml:25-26`). */
   def stgVitals: DataFrame = processedVitals.transform(Staging.stgPatientVitals(cfg))
   def stgClaims: DataFrame = processedClaims.transform(Staging.stgInsuranceClaims(cfg))
   def stgEhr: DataFrame = processedEhr.transform(Staging.stgEhrRecords(cfg))
 
-  /** Materialize the fact table (dbt `+materialized: table`), partitioned
-    * by measurement date for pruning at scale.
-    */
+  private def factFrame(stgV: DataFrame,
+      stgC: DataFrame = stgClaims, stgE: DataFrame = stgEhr): DataFrame =
+    FactPatientEncounters.build(cfg)(stgV, stgC, stgE)
+      .withColumn("measurement_date", to_date(col("measurement_timestamp")))
+
+  /** Materialize the whole fact table (dbt `+materialized: table`). */
   def buildFact(): Unit =
-    write(FactPatientEncounters.build(cfg)(stgVitals, stgClaims, stgEhr)
-        .withColumn("measurement_date", to_date(col("measurement_timestamp"))),
-      SaveMode.Overwrite, s"$curatedDir/fact_patient_encounters",
-      partitionCols = Seq("measurement_date"))
+    zones.overwrite(spark, factRoot, factFrame(stgVitals), Seq("measurement_date"))
 
-  def fact: DataFrame =
-    read(s"$curatedDir/fact_patient_encounters").drop("measurement_date")
+  /** `buildFact()` then `refreshFactIncremental(raw, batchId)`, PIPELINED
+    * (Forks scaladoc): the rebuild runs on a driver thread while the
+    * batch's ETL and route appends land, and the swap joins it just
+    * before touching the fact. Zone reads resolve their file listing
+    * EAGERLY, so the rebuild is pinned to the pre-batch snapshot and the
+    * result is bit-identical to the serial flow; wall time is
+    * max(rebuild, ETL + appends) + swap. The rebuild is not txn-keyed,
+    * like `buildFact()` itself.
+    */
+  def buildFactWithRefresh(raw: DataFrame, batchId: Long): Seq[java.sql.Date] = {
+    // pin the rebuild's input snapshot NOW, before any append lands
+    val pinned = factFrame(stgVitals)
+    // the barrier joins the rebuild inside the refresh right before the
+    // fact swap; on a refresh failure the scope cancels and joins the
+    // rebuild, and the refresh's own error surfaces (Forks scaladoc)
+    Forks(spark) { forks =>
+      val rebuild = forks.fork("fact-build")(
+        zones.overwrite(spark, factRoot, pinned, Seq("measurement_date")))
+      refreshImpl(raw, batchId, () => rebuild.join())
+    }
+  }
 
-  /** Fact slice for time-bounded report queries WITH partition pruning:
-    * the timestamp predicate alone cannot prune (the table is partitioned
-    * on `measurement_date`), so we add the implied date predicate —
-    * `ts >= X ⇒ date(ts) >= date(X)` — which reaches the scan as a
-    * PartitionFilter. At 100 TB this is the difference between scanning
-    * one day and scanning seven years for the 24h monitoring report.
+  def fact: DataFrame = zones.read(spark, factRoot).drop("measurement_date")
+
+  /** Fact slice for time-bounded reports WITH date pruning: the
+    * timestamp predicate alone cannot prune a `measurement_date`
+    * partitioning, so the implied `date(ts) >= date(X)` is added — one
+    * day scanned instead of seven years for the 24h monitoring report.
     */
   def factSince(since: java.sql.Timestamp): DataFrame =
-    read(s"$curatedDir/fact_patient_encounters")
+    zones.read(spark, factRoot)
       .filter(col("measurement_date") >= to_date(lit(since)) &&
         col("measurement_timestamp") >= lit(since))
       .drop("measurement_date")
 
-  /** Incremental fact refresh for an append batch (streaming-friendly
-    * 15-minute-cadence alternative to the full `buildFact`):
-    *
-    *  1. the batch flows through the same ETL and APPENDS to the
-    *     processed tables;
-    *  2. the set of affected fact partitions is computed — a fact
-    *     partition (measurement_date) depends only on that date's vitals
-    *     plus claims/EHR within the ±proximity band, so affected =
-    *     new-vitals dates ∪ (new-claim service dates ± band) ∪
-    *     (new-EHR visit dates ± band);
-    *  3. ONLY those partitions are rebuilt (staging vitals filtered to
-    *     the affected dates; claims/EHR pruned to affected ± band, which
-    *     keeps band context complete) and written with DYNAMIC partition
-    *     overwrite — untouched dates keep their existing files.
-    *
-    * At 100 TB this turns the 15-minute fact refresh from a full
-    * 30-day rebuild into a rewrite of ≤ a handful of date partitions.
-    *
-    * Semantics are at-least-once per batch: re-applying an identical
-    * batch appends duplicate processed rows. Exactly-once belongs to the
-    * ingest layer — route batches through `StreamingEtl.dedupStream`
-    * (or idempotent batch ids) before this call.
+  /** Incremental fact refresh for an append batch (the 15-minute-cadence
+    * alternative to `buildFact`): the batch APPENDS to the processed
+    * tables, and only the affected fact dates are rebuilt from full
+    * staging history and swapped in. Affected = new-vitals dates ∪
+    * (new-claim/EHR dates ± the proximity band), since a date's fact rows
+    * depend only on that date's vitals and the claims/EHR in its band.
+    * Returns the affected dates. On table zones the appends and the swap
+    * are keyed by `batchId`, so replaying the call after a crash at ANY
+    * point re-commits nothing, and a full replay serves the dates from a
+    * marker written at swap time. On sink zones it is at-least-once.
     */
-  def refreshFactIncremental(raw: DataFrame): Seq[java.sql.Date] = {
-    val enriched = raw.transform(Etl.pipeline(cfg)).cache()
-    try {
-      write(Etl.routeVitals(enriched), SaveMode.Append, s"$processedDir/patient_vitals")
-      write(Etl.routeClaims(enriched), SaveMode.Append, s"$processedDir/insurance_claims")
-      write(Etl.routeEhr(enriched), SaveMode.Append, s"$processedDir/ehr_records")
+  def refreshFactIncremental(raw: DataFrame, batchId: Long): Seq[java.sql.Date] =
+    refreshImpl(raw, batchId, () => ())
 
-      val affected = graft.marts.FactPatientEncounters.affectedDates(cfg)(
-        Etl.routeVitals(enriched), Etl.routeClaims(enriched), Etl.routeEhr(enriched))
-      val (stgV, stgC, stgE) = graft.marts.FactPatientEncounters
-        .datesInputs(cfg, affected)(stgVitals, stgClaims, stgEhr)
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        write(graft.marts.FactPatientEncounters.build(cfg)(stgV, stgC, stgE)
-            .withColumn("measurement_date", to_date(col("measurement_timestamp"))),
-          SaveMode.Overwrite, s"$curatedDir/fact_patient_encounters",
-          partitionCols = Seq("measurement_date"))
-      } finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+  /** `factBarrier` joins an overlapped fact job ([[buildFactWithRefresh]])
+    * right before the refresh reads or writes the fact table.
+    */
+  private def refreshImpl(raw: DataFrame, batchId: Long,
+      factBarrier: () => Unit): Seq[java.sql.Date] = {
+    // FULL-REPLAY fast path: when all four tables already recorded the
+    // batch, the swap is done — serve the affected dates from the
+    // marker instead of re-running the batch's ETL parse
+    if (zones.recorded(spark, factRoot, "fact_refresh" -> batchId) && routesRecorded(batchId))
+      readAffectedMarker(batchId) match {
+        case Some(dates) => return dates
+        case None => // a crash between swap and marker write: recompute below
       }
+    val enriched = raw.transform(Etl.pipeline(cfg)).cache()
+    try Forks(spark) { forks =>
+      // materialize the cache FIRST so the fork and the route appends
+      // read settled cache instead of racing compute
+      TableVersions.timedOp("etl.materialize") { enriched.count() }
+      // the affected-dates scan needs only the cache, not the route
+      // writes: fork it WHILE the appends land (Forks scaladoc)
+      val affectedF = forks.fork("affected-dates")(FactPatientEncounters.affectedDates(cfg)(
+        Etl.routeVitals(enriched), Etl.routeClaims(enriched), Etl.routeEhr(enriched)))
+      if (!routesRecorded(batchId)) appendRoutes(enriched, batchId)
+      val affected = affectedF.join()
+      val (stgV, stgC, stgE) =
+        FactPatientEncounters.datesInputs(cfg, affected)(stgVitals, stgClaims, stgEhr)
+      factBarrier() // an overlapped fact rebuild must land before the swap plans
+      zones.replacePartitions(spark, factRoot, factFrame(stgV, stgC, stgE),
+        Seq("measurement_date"), "fact_refresh" -> batchId)
+      writeAffectedMarker(batchId, affected)
       affected
-    } finally enriched.unpersist()
+    } finally { enriched.unpersist(); () }
   }
 
-  /** Full DAG cycle on generated data; returns the health alerts. */
+  private def affectedMarkerPath(batchId: Long) =
+    new Path(factRoot, s"_refresh/b$batchId.dates")
+
+  /** Sorted dates, one per line, then `#<count>`, replaced whole
+    * ([[Replace.file]]). A marker that fails its checksum or whose last
+    * line is not its date count reads as lost.
+    */
+  private def writeAffectedMarker(batchId: Long, dates: Seq[java.sql.Date]): Unit =
+    Replace.file(spark.sparkContext.hadoopConfiguration, affectedMarkerPath(batchId))(
+      _.write((dates.map(_.toString).sorted :+ s"#${dates.size}")
+        .mkString("", "\n", "\n").getBytes("UTF-8")))
+
+  private def readAffectedMarker(batchId: Long): Option[Seq[java.sql.Date]] = {
+    val p = affectedMarkerPath(batchId)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      // a torn write on a checksummed file system fails its checksum
+      val lines = try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
+        catch { case _: ChecksumException => Nil } finally in.close()
+      lines.lastOption.filter(_ == s"#${lines.size - 1}")
+        .map(_ => lines.init.map(java.sql.Date.valueOf))
+    }
+  }
+
+  /** Health gates over the current processed vitals and fact. */
+  def gates(): Seq[Reports.HealthAlert] =
+    Reports.evaluateGates(cfg)(processedVitals, fact)
+
+  /** Full DAG cycle on generated data as batch 0; returns the health alerts. */
   def runAll(messages: Long = 10000): Seq[Reports.HealthAlert] = {
     val gen = new HealthcareGenerator(seed = 42L, asOf = cfg.asOf.toLocalDateTime.toLocalDate)
-    runEtl(gen.messagesJson(spark, messages).toDF("value"))
+    runEtl(gen.messagesJson(spark, messages).toDF("value"), 0L)
     buildFact()
-    Reports.evaluateGates(cfg)(processedVitals, fact)
-  }
-
-  /** Small-files compaction for a (non-partitioned) zone table — the
-    * operational complement to [[refreshFactIncremental]]: every
-    * append-mode micro-batch leaves one-or-more files per trigger, and
-    * after a day of 15-minute cycles a 100 TB table is tens of
-    * thousands of KB-sized files whose open/footer costs dominate scan
-    * time. Compaction rewrites the table into ⌈bytes/targetFileBytes⌉
-    * files: read → repartition → write to a temp sibling → atomic-ish
-    * directory swap (the two-rename window is the standard non-
-    * transactional lakehouse tradeoff; table formats with a metadata
-    * log do the swap in the log instead — same data motion).
-    * Partitioned tables compact per partition directory with the same
-    * routine. Returns the new file count.
-    */
-  def compact(path: String, targetFileBytes: Long = 128L << 20): Int =
-    swapRewrite(path, targetFileBytes)((df, n) => df.repartition(n))
-
-  /** Z-order layout job ([[graft.operators.ZOrder.cluster]]) with the
-    * same swap-rewrite mechanics as [[compact]]: rewrites the table so
-    * every file's min/max range is narrow in EVERY `keys` dimension —
-    * parquet's footer stats then let scans with a predicate on any one
-    * key skip most files. Run periodically like compaction (it IS a
-    * compaction with a smarter row order).
-    */
-  def optimizeZOrder(path: String, keys: Seq[String],
-      targetFileBytes: Long = 128L << 20, bits: Int = 12): Int =
-    swapRewrite(path, targetFileBytes)((df, n) =>
-      graft.operators.ZOrder.cluster(df, keys, numFiles = n, bits = bits))
-
-  /** Shared rewrite-and-swap: relayout to ⌈bytes/target⌉ files via
-    * `relayout`, write to a temp sibling, swap directories. Returns the
-    * new file count.
-    */
-  private def swapRewrite(path: String, targetFileBytes: Long)(
-      relayout: (DataFrame, Int) => DataFrame): Int = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    // Refuse partitioned roots: a flat read+rewrite would inline the
-    // partition columns into the data files and silently destroy the
-    // layout. Rewrite each leaf partition directory instead.
-    val subdirs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-    require(subdirs.isEmpty,
-      s"compact: $path contains partition directories (${subdirs.take(3).mkString(", ")}…) — " +
-        "compact each leaf partition directory individually")
-    val bytes = fs.getContentSummary(p).getLength
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    relayout(read(path), nFiles)
-      .write.format(sink.format).options(sink.options).mode(SaveMode.Overwrite).save(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    require(fs.rename(p, old), s"compact: could not move $p aside")
-    // If activating the new layout fails, put the original back before
-    // rethrowing — otherwise a transient FS error between the two renames
-    // strands the table in __precompact with NOTHING at `path`.
-    if (!fs.rename(tmp, p)) {
-      val restored = fs.rename(old, p)
-      throw new IllegalStateException(
-        s"compact: could not activate $tmp; " +
-          (if (restored) s"restored original at $p"
-           else s"RESTORE FAILED — data is at $old, manual rename required"))
-    }
-    fs.delete(old, true)
-    fs.listStatus(p).count(_.getPath.getName.endsWith(formatSuffix))
-  }
-
-  private def formatSuffix: String = sink.format match {
-    case "orc" => ".orc"
-    case _ => ".parquet"
-  }
-
-  /** [[compact]] for a partitioned table: walk to the leaf partition
-    * directories (those containing data files, not further `k=v` dirs)
-    * and compact each independently. Partition independence is the
-    * scale property: at 100 TB the sweep parallelizes trivially across
-    * partitions and a failed leaf leaves every other partition intact.
-    * Returns (leaf directories compacted, total files after).
-    */
-  def compactPartitioned(root: String, targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = rp.getFileSystem(hconf)
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val subdirs = fs.listStatus(p).filter(_.isDirectory)
-        .filterNot(_.getPath.getName.startsWith("_")) // _SUCCESS markers etc.
-      if (subdirs.isEmpty) Seq(p) else subdirs.toSeq.flatMap(s => leaves(s.getPath))
-    }
-    val ls = leaves(rp).filter(p => fs.listStatus(p)
-      .exists(_.getPath.getName.endsWith(formatSuffix)))
-    val counts = ls.map(p => compact(p.toString, targetFileBytes))
-    (ls.length, counts.sum)
+    gates()
   }
 }

@@ -261,14 +261,8 @@ private[sources] class CdfSource(spark: org.apache.spark.sql.SparkSession,
     math.max(startExclusive, persisted)
   }
 
-  private def persistFloor(v: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(floorPath.getParent,
-      s".graft_cdf_floor.tmp-${java.util.UUID.randomUUID()}")
-    val out = ffs.create(tmp, true)
-    try out.write(v.toString.getBytes) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri, hadoopConf)
-    fc.rename(tmp, floorPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def persistFloor(v: Long): Unit =
+    graft.operators.Replace.file(hadoopConf, floorPath)(_.write(v.toString.getBytes))
 
   override def getOffset: Option[V1Offset] = {
     val cur = TableVersions.currentVersion(spark, path).getOrElse(return None)

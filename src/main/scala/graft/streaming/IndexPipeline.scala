@@ -127,12 +127,9 @@ object IndexPipeline {
     }
   }
 
-  private def writeProgress(spark: SparkSession, roots: Roots, v: Long): Unit = {
-    val p = progressPath(roots)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(v.toString.getBytes) finally out.close()
-  }
+  private def writeProgress(spark: SparkSession, roots: Roots, v: Long): Unit =
+    graft.operators.Replace.file(spark.sparkContext.hadoopConfiguration, progressPath(roots))(
+      _.write(v.toString.getBytes))
 
   /** Advance all three indexes to the corpus table's CURRENT version by
     * consuming its change feed from the last followed version: inserts

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.etl.Etl
 import graft.model.Config
+import graft.runner.{Lakehouse, ZoneSink}
 
 /** Structured Streaming twin of the batch ETL (SURVEY §2.9).
   *
@@ -76,7 +77,8 @@ object StreamingEtl {
     readMessages(spark, FileSource(inputDir, maxFilesPerTrigger))
 
   /** The full streaming ETL with foreachBatch fan-out. Each micro-batch
-    * runs the identical batch pipeline then routes to the three
+    * runs the batch ETL of [[graft.runner.Lakehouse.runEtl]] on parquet
+    * [[graft.runner.ZoneSink]] zones under `outRoot`: the three
     * processed tables + dead-letter — R1's 4-way tagged output.
     */
   def start(spark: SparkSession, inputDir: String, outRoot: String,
@@ -85,68 +87,35 @@ object StreamingEtl {
     start(spark, FileSource(inputDir), outRoot, cfg, trigger)
 
   def start(spark: SparkSession, src: MessageSource, outRoot: String,
-      cfg: Config, trigger: Trigger): StreamingQuery =
+      cfg: Config, trigger: Trigger): StreamingQuery = {
+    val lake = new Lakehouse(spark, outRoot, cfg, ZoneSink())
     readMessages(spark, src)
       .writeStream
       .queryName("healthcare_etl")
       .option("checkpointLocation", s"$outRoot/_checkpoints/etl")
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val parsed = batch.transform(Etl.parse(cfg)).cache()
-        try {
-          val enriched = parsed.transform(Etl.qualityFilter).transform(Etl.enrich(cfg))
-          Etl.routeVitals(enriched).write.mode("append").parquet(s"$outRoot/processed/patient_vitals")
-          Etl.routeClaims(enriched).write.mode("append").parquet(s"$outRoot/processed/insurance_claims")
-          Etl.routeEhr(enriched).write.mode("append").parquet(s"$outRoot/processed/ehr_records")
-          Etl.routeUnknown(parsed)
-            .select(to_json(struct(col("*"))).as("value"))
-            .write.mode("append").text(s"$outRoot/errors/unknown_data")
-        } finally parsed.unpersist()
-        ()
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => lake.runEtl(batch, batchId) }
       .start()
+  }
 
   /** Streaming incremental fact maintenance: each micro-batch of raw
     * messages flows through [[graft.runner.Lakehouse.refreshFactIncremental]]
-    * — append to the processed zone, then rebuild ONLY the fact
-    * partitions the batch touched (dynamic partition overwrite). The
-    * curated fact stays continuously fresh at the cost of a few date
-    * partitions per trigger instead of the reference's full 15-minute
-    * dbt rebuild. Pair with [[dedupStream]] upstream for
-    * effectively-once processed rows (the refresh itself is
-    * at-least-once per batch, see Lakehouse scaladoc).
+    * with its engine batch id — append to the processed zone, then
+    * rebuild ONLY the fact partitions the batch touched. The curated fact
+    * stays continuously fresh at the cost of a few date partitions per
+    * trigger instead of the reference's full 15-minute dbt rebuild. On
+    * table zones this is exactly-once END-TO-END: a foreachBatch replay
+    * after a crash at ANY point (including between the table commits and
+    * the streaming checkpoint write) re-commits nothing on any of the
+    * four tables. On sink zones the refresh is at-least-once per batch;
+    * pair it with [[dedupStream]] upstream.
     */
   def startIncrementalFact(spark: SparkSession, src: MessageSource,
-      lake: graft.runner.Lakehouse, checkpoint: String,
+      lake: Lakehouse, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
     readMessages(spark, src)
       .writeStream
       .queryName("incremental_fact")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { lake.refreshFactIncremental(batch); () }
-      }
-      .start()
-
-  /** Streaming incremental fact maintenance on the VERSIONED lakehouse
-    * — exactly-once END-TO-END by construction: each micro-batch flows
-    * through [[graft.runner.VersionedLakehouse.refreshFactIncremental]]
-    * with its batchId, so every processed-table append and the fact's
-    * atomic partition swap are txn-keyed and a foreachBatch replay
-    * after a crash at ANY point (including between the table commits
-    * and the streaming checkpoint write) re-commits nothing on any of
-    * the four tables. This closes the at-least-once caveat the
-    * plain-parquet [[startIncrementalFact]] documents — the reference's
-    * streaming-ingest + 15-minute-dbt cadence collapsed into one
-    * continuously-fresh transactional pipeline.
-    */
-  def startIncrementalFact(spark: SparkSession, src: MessageSource,
-      lake: graft.runner.VersionedLakehouse, checkpoint: String,
-      trigger: Trigger): StreamingQuery =
-    readMessages(spark, src)
-      .writeStream
-      .queryName("incremental_fact_versioned")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

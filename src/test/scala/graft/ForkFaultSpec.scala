@@ -12,7 +12,7 @@ import graft.gen.HealthcareGenerator
 import graft.model.Config
 import graft.operators.{IvfIndex, TableVersions}
 import graft.operators.TableVersions.MergeUpdate
-import graft.runner.VersionedLakehouse
+import graft.runner.Lakehouse
 import graft.streaming.IndexPipeline
 
 /** Failure exits of the operations that overlap driver threads. Each
@@ -158,7 +158,7 @@ class ForkFaultSpec extends SparkSpec {
 
   test("refreshFactIncremental: a failed route append joins its sibling routes and the affected-dates fork") {
     val g = gen
-    val lake = new VersionedLakehouse(spark, tmp("fault_refresh"), cfg)
+    val lake = new Lakehouse(spark, tmp("fault_refresh"), cfg)
     lake.runEtl(g.messagesJson(spark, 2000).toDF("value"), batchId = 0L)
     lake.buildFact()
     val batch = g.messagesJson(spark, 1000, offset = 2000).toDF("value")
@@ -181,7 +181,7 @@ class ForkFaultSpec extends SparkSpec {
 
   test("buildFactWithRefresh: the refresh's own error surfaces, the rebuild's is suppressed") {
     val g = gen
-    val lake = new VersionedLakehouse(spark, tmp("fault_pipelined"), cfg)
+    val lake = new Lakehouse(spark, tmp("fault_pipelined"), cfg)
     lake.runEtl(g.messagesJson(spark, 2000).toDF("value"), batchId = 0L)
     // the pinned rebuild reads a vitals file that is gone...
     Files.delete(Paths.get(norm(TableVersions.listing(spark, lake.vitalsRoot).head._1)))

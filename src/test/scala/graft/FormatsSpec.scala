@@ -2,7 +2,7 @@ package graft
 
 import graft.gen.HealthcareGenerator
 import graft.model.Config
-import graft.runner.Lakehouse
+import graft.runner.{Lakehouse, ZoneSink}
 
 /** Zone format pluggability: the same pipeline over ORC zones produces a
   * byte-equal fact to the Parquet default (SURVEY §1's "everything is
@@ -17,10 +17,10 @@ class FormatsSpec extends SparkSpec {
     try {
       val pRoot = java.nio.file.Files.createTempDirectory("graft_fmt_parquet_").toString
       val oRoot = java.nio.file.Files.createTempDirectory("graft_fmt_orc_").toString
-      val pLake = new Lakehouse(spark, pRoot, cfg)
-      val oLake = new Lakehouse(spark, oRoot, cfg, format = "orc")
-      pLake.runEtl(raw); pLake.buildFact()
-      oLake.runEtl(raw); oLake.buildFact()
+      val pLake = new Lakehouse(spark, pRoot, cfg, ZoneSink())
+      val oLake = new Lakehouse(spark, oRoot, cfg, ZoneSink("orc"))
+      pLake.runEtl(raw, 0L); pLake.buildFact()
+      oLake.runEtl(raw, 0L); oLake.buildFact()
 
       val p = pLake.fact
       val o = oLake.fact
@@ -38,7 +38,7 @@ class FormatsSpec extends SparkSpec {
 
   test("textual zone format is rejected eagerly") {
     intercept[IllegalArgumentException] {
-      new Lakehouse(spark, "/tmp/never", Config.default, format = "csv")
+      new Lakehouse(spark, "/tmp/never", Config.default, ZoneSink("csv"))
     }
   }
 
@@ -50,7 +50,7 @@ class FormatsSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_fmt_zstd_").toString
     val lake = new Lakehouse(spark, root, cfg,
       ZoneSink("parquet", Map("compression" -> "zstd")))
-    lake.runEtl(raw)
+    lake.runEtl(raw, 0L)
     def zstdFiles(f: java.io.File): Int =
       if (f.isDirectory) f.listFiles().map(zstdFiles).sum
       else if (f.getName.endsWith(".zstd.parquet")) 1 else 0
@@ -70,7 +70,7 @@ class FormatsSpec extends SparkSpec {
     val cfg = Config.default
     val gen = new HealthcareGenerator(42L, cfg.asOf.toLocalDateTime.toLocalDate)
     val raw = gen.messagesJson(spark, 50).toDF("value")
-    val e = intercept[Exception] { lake.runEtl(raw) }
+    val e = intercept[Exception] { lake.runEtl(raw, 0L) }
     assert(e.getMessage.toLowerCase.contains("bigquery"),
       s"error should name the missing connector: ${e.getMessage}")
   }

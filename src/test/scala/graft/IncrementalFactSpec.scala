@@ -2,7 +2,7 @@ package graft
 
 import graft.gen.HealthcareGenerator
 import graft.model.Config
-import graft.runner.Lakehouse
+import graft.runner.{Lakehouse, ZoneSink}
 
 /** Incremental fact refresh ≡ full rebuild (dynamic partition overwrite
   * correctness): applying batch 2 incrementally over batch 1's lakehouse
@@ -17,17 +17,17 @@ class IncrementalFactSpec extends SparkSpec {
 
     // lakehouse A: batch 1 full build, then batch 2 incrementally
     val rootA = java.nio.file.Files.createTempDirectory("inc_a_").toString
-    val lakeA = new Lakehouse(spark, rootA, cfg)
-    lakeA.runEtl(gen.messagesJson(spark, 2000).toDF("value"))
+    val lakeA = new Lakehouse(spark, rootA, cfg, ZoneSink())
+    lakeA.runEtl(gen.messagesJson(spark, 2000).toDF("value"), batchId = 0L)
     lakeA.buildFact()
     val affected = lakeA.refreshFactIncremental(
-      gen.messagesJson(spark, 1000, offset = 2000).toDF("value"))
+      gen.messagesJson(spark, 1000, offset = 2000).toDF("value"), batchId = 1L)
     assert(affected.nonEmpty)
 
     // lakehouse B: one full build over both batches
     val rootB = java.nio.file.Files.createTempDirectory("inc_b_").toString
-    val lakeB = new Lakehouse(spark, rootB, cfg)
-    lakeB.runEtl(gen.messagesJson(spark, 3000).toDF("value"))
+    val lakeB = new Lakehouse(spark, rootB, cfg, ZoneSink())
+    lakeB.runEtl(gen.messagesJson(spark, 3000).toDF("value"), batchId = 0L)
     lakeB.buildFact()
 
     val a = lakeA.fact
@@ -43,8 +43,8 @@ class IncrementalFactSpec extends SparkSpec {
     // stream side: 2 message files replayed one per micro-batch into an
     // incrementally-maintained lakehouse (seeded with an empty full build)
     val rootS = java.nio.file.Files.createTempDirectory("inc_stream_").toString
-    val lakeS = new Lakehouse(spark, rootS, cfg)
-    lakeS.runEtl(gen.messagesJson(spark, 1500).toDF("value"))
+    val lakeS = new Lakehouse(spark, rootS, cfg, ZoneSink())
+    lakeS.runEtl(gen.messagesJson(spark, 1500).toDF("value"), batchId = -1L)
     lakeS.buildFact()
     gen.messagesJson(spark, 800, offset = 1500).toDF("value")
       .coalesce(1).write.mode("overwrite").text(s"$rootS/in/b1")
@@ -58,8 +58,8 @@ class IncrementalFactSpec extends SparkSpec {
 
     // batch side: one full build over all 3000 messages
     val rootB = java.nio.file.Files.createTempDirectory("inc_stream_full_").toString
-    val lakeB = new Lakehouse(spark, rootB, cfg)
-    lakeB.runEtl(gen.messagesJson(spark, 3000).toDF("value"))
+    val lakeB = new Lakehouse(spark, rootB, cfg, ZoneSink())
+    lakeB.runEtl(gen.messagesJson(spark, 3000).toDF("value"), batchId = 0L)
     lakeB.buildFact()
 
     val s = lakeS.fact

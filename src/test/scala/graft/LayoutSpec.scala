@@ -108,7 +108,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("optimizeZOrder: on-disk file stats narrow on both keys; most files skippable") {
-    import graft.runner.Lakehouse
+    import graft.runner.ZoneSink
     val root = java.nio.file.Files.createTempDirectory("zopt_").toString
     val path = s"$root/t"
     val n = 4096
@@ -116,10 +116,10 @@ class LayoutSpec extends SparkSpec {
       .orderBy(rand(42)) // worst-case starting layout: random
       .repartition(8).write.parquet(path)
 
-    val lake = new Lakehouse(spark, root, graft.model.Config.default)
+    val sink = ZoneSink()
     // ~16 files: z-segments of 256 cells = 16×16 blocks, so a point
     // predicate on either key touches ~1/4 of the files
-    val nFiles = lake.optimizeZOrder(path, Seq("x", "y"), targetFileBytes = 1L << 10, bits = 6)
+    val nFiles = sink.optimizeZOrder(spark, path, Seq("x", "y"), targetFileBytes = 1L << 10, bits = 6)
     assert(nFiles > 8, s"want many files to make skipping meaningful, got $nFiles")
 
     // read each FILE separately: its real parquet footer range

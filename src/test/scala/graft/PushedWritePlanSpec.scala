@@ -420,13 +420,51 @@ class PushedWritePlanSpec extends SparkSpec {
     val dTop = TableVersions.currentVersion(spark, dRoot).get
     val mTop = TableVersions.currentVersion(spark, mRoot).get
     assert(dTop === mTop + 1, "the pushed build commits one compaction per partition tuple")
-    assert(TableVersions.read(spark, dRoot, Some(dTop)).count() ===
-      TableVersions.read(spark, mRoot, Some(mTop)).count())
-    assert(TableVersions.read(spark, dRoot, Some(dTop - 1)).count() > 0,
-      "the retained predecessor still reconstructs after the distributed sweep")
-    assert(TableVersions.read(spark, mRoot, Some(mTop - 1)).count() > 0)
-    assert(TableVersions.read(spark, dRoot).where(col("k") === 7L).count() === 0L,
-      "the DV delete must hold after the distributed vacuum")
+    // on the materialized planner and on the pushed one
+    for (t <- Seq("0", "1")) withConf("graft.table.pushedPruneThreshold" -> t) {
+      assert(TableVersions.read(spark, dRoot, Some(dTop)).count() ===
+        TableVersions.read(spark, mRoot, Some(mTop)).count())
+      assert(TableVersions.read(spark, dRoot, Some(dTop - 1)).count() > 0,
+        "the retained predecessor still reconstructs after the distributed sweep")
+      assert(TableVersions.read(spark, mRoot, Some(mTop - 1)).count() > 0)
+      assert(TableVersions.read(spark, dRoot).where(col("k") === 7L).count() === 0L,
+        "the DV delete must hold after the distributed vacuum")
+    }
+  }
+
+  test("vacuum: every retained version reads whole at thresholds 0 and 1, after either sweep, with and without compaction") {
+    // the version below the head was planned by its incremental
+    // checkpoint write BEFORE it had a checkpoint of its own, so that
+    // planning named its predecessor's checkpoint dataset, which the
+    // vacuum drops
+    for (distributed <- Seq(false, true); compacted <- Seq(false, true)) {
+      val root = newRoot()
+      def rows(v: Long): Seq[String] =
+        TableVersions.read(spark, root, Some(v)).collect().map(_.toString).toSeq.sorted
+      val retained = withConf(
+        "graft.table.parquetCheckpointThreshold" -> "1",
+        "graft.table.checkpointInterval" -> "1",
+        "graft.table.pushedPruneThreshold" -> (if (distributed) "1" else "0")) {
+        (0 until 4).foreach { b =>
+          TableVersions.append(spark, root,
+            (0 until 25).map(i => ((b * 25 + i).toLong, s"v$b-$i", b % 2)).toDF("k", "s", "p"),
+            Seq("p"))
+        }
+        if (compacted) TableVersions.compact(spark, root, targetBytes = 1L << 26)
+        TableVersions.deleteWhere(spark, root, col("k") === 7L,
+          bounds = Map("k" -> (7.0, 7.0)), maxDvFraction = 0.5)
+        val top = TableVersions.currentVersion(spark, root).get
+        val want = withConf("graft.table.pushedPruneThreshold" -> "0") {
+          (top - 1 to top).map(v => v -> rows(v)) }
+        TableVersions.vacuum(spark, root, keepVersions = 2, graceMs = 10 * 60 * 1000L)
+        want
+      }
+      for (t <- Seq("0", "1"); (v, want) <- retained)
+        withConf("graft.table.pushedPruneThreshold" -> t) {
+          assert(rows(v) === want, s"v$v at threshold $t " +
+            s"(${if (distributed) "distributed" else "driver"} sweep, compacted=$compacted)")
+        }
+    }
   }
 
   test("delta-direct commits race: disjoint rewrites rebase, overlapping inputs refuse") {

@@ -16,6 +16,8 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    // -Dgraft.test.pushedPruneThreshold=1 sends every non-empty table through the pushed planner
+    sys.props.get("graft.test.pushedPruneThreshold").foreach(s.conf.set("graft.table.pushedPruneThreshold", _))
     s
   }
 }

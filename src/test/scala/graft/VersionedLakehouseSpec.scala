@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.gen.HealthcareGenerator
 import graft.model.Config
 import graft.operators.{ChangeFeed, TableVersions}
-import graft.runner.{Lakehouse, VersionedLakehouse}
+import graft.runner.{Lakehouse, ZoneSink}
 
 /** The lakehouse pipeline running ON the versioned table format:
   * incremental refresh through [[TableVersions.replacePartitions]]
@@ -23,7 +23,7 @@ class VersionedLakehouseSpec extends SparkSpec {
   test("versioned refresh equals full rebuild; crash-replay is a no-op; matches plain lakehouse") {
     val g = gen
     val rootA = java.nio.file.Files.createTempDirectory("vlake_a_").toString
-    val lakeA = new VersionedLakehouse(spark, rootA, cfg)
+    val lakeA = new Lakehouse(spark, rootA, cfg)
     lakeA.runEtl(g.messagesJson(spark, 2000).toDF("value"), batchId = 0L)
     lakeA.buildFact()
     val affected = lakeA.refreshFactIncremental(
@@ -42,12 +42,12 @@ class VersionedLakehouseSpec extends SparkSpec {
 
     // one full build over both batches — versioned and plain twins
     val rootB = java.nio.file.Files.createTempDirectory("vlake_b_").toString
-    val lakeB = new VersionedLakehouse(spark, rootB, cfg)
+    val lakeB = new Lakehouse(spark, rootB, cfg)
     lakeB.runEtl(g.messagesJson(spark, 3000).toDF("value"), batchId = 0L)
     lakeB.buildFact()
     val rootP = java.nio.file.Files.createTempDirectory("vlake_p_").toString
-    val lakeP = new Lakehouse(spark, rootP, cfg)
-    lakeP.runEtl(g.messagesJson(spark, 3000).toDF("value"))
+    val lakeP = new Lakehouse(spark, rootP, cfg, ZoneSink())
+    lakeP.runEtl(g.messagesJson(spark, 3000).toDF("value"), batchId = 0L)
     lakeP.buildFact()
 
     val a = lakeA.fact
@@ -57,6 +57,19 @@ class VersionedLakehouseSpec extends SparkSpec {
     val p = lakeP.fact.select(a.columns.map(col).toIndexedSeq: _*)
     assert(a.exceptAll(p).isEmpty && p.exceptAll(a).isEmpty,
       "versioned fact must match the plain-parquet lakehouse fact")
+
+    // ...and so must the REFRESHED fact: the same runEtl + one refresh on
+    // sink zones lands the same rows as on table zones
+    val rootQ = java.nio.file.Files.createTempDirectory("vlake_q_").toString
+    val lakeQ = new Lakehouse(spark, rootQ, cfg, ZoneSink())
+    lakeQ.runEtl(g.messagesJson(spark, 2000).toDF("value"), batchId = 0L)
+    lakeQ.buildFact()
+    assert(lakeQ.refreshFactIncremental(
+      g.messagesJson(spark, 1000, offset = 2000).toDF("value"), batchId = 1L) === affected)
+    val q = lakeQ.fact.select(a.columns.map(col).toIndexedSeq: _*)
+    assert(a.count() === q.count())
+    assert(a.exceptAll(q).isEmpty && q.exceptAll(a).isEmpty,
+      "refreshed fact on table zones must match the refreshed fact on sink zones")
 
     // health gates evaluate off the versioned snapshots
     assert(lakeA.gates() != null)
@@ -76,7 +89,7 @@ class VersionedLakehouseSpec extends SparkSpec {
     val g = gen
     // serial reference flow
     val rootA = java.nio.file.Files.createTempDirectory("vlake_pipeA_").toString
-    val lakeA = new VersionedLakehouse(spark, rootA, cfg)
+    val lakeA = new Lakehouse(spark, rootA, cfg)
     lakeA.runEtl(g.messagesJson(spark, 2000).toDF("value"), batchId = 0L)
     lakeA.buildFact()
     val affA = lakeA.refreshFactIncremental(
@@ -85,7 +98,7 @@ class VersionedLakehouseSpec extends SparkSpec {
     // but pins its input snapshot BEFORE the appends, so the committed
     // fact and the swap must be bit-identical to the serial flow
     val rootB = java.nio.file.Files.createTempDirectory("vlake_pipeB_").toString
-    val lakeB = new VersionedLakehouse(spark, rootB, cfg)
+    val lakeB = new Lakehouse(spark, rootB, cfg)
     lakeB.runEtl(g.messagesJson(spark, 2000).toDF("value"), batchId = 0L)
     val affB = lakeB.buildFactWithRefresh(
       g.messagesJson(spark, 1000, offset = 2000).toDF("value"), batchId = 1L)
@@ -115,7 +128,7 @@ class VersionedLakehouseSpec extends SparkSpec {
     // stream side: seeded versioned lakehouse, then 2 message files
     // replayed one per micro-batch through the txn-keyed refresh
     val rootS = java.nio.file.Files.createTempDirectory("vlake_s_").toString
-    val lakeS = new VersionedLakehouse(spark, rootS, cfg)
+    val lakeS = new Lakehouse(spark, rootS, cfg)
     lakeS.runEtl(g.messagesJson(spark, 1500).toDF("value"), batchId = -1L)
     lakeS.buildFact()
     g.messagesJson(spark, 800, offset = 1500).toDF("value")
@@ -143,7 +156,7 @@ class VersionedLakehouseSpec extends SparkSpec {
 
     // batch side: one full versioned build over all 3000 messages
     val rootB = java.nio.file.Files.createTempDirectory("vlake_sb_").toString
-    val lakeB = new VersionedLakehouse(spark, rootB, cfg)
+    val lakeB = new Lakehouse(spark, rootB, cfg)
     lakeB.runEtl(g.messagesJson(spark, 3000).toDF("value"), batchId = 0L)
     lakeB.buildFact()
 
@@ -157,7 +170,7 @@ class VersionedLakehouseSpec extends SparkSpec {
   test("change-feed-fed daily summary equals its one-shot twin across restarts") {
     val g = gen
     val root = java.nio.file.Files.createTempDirectory("vlake_cdf_").toString
-    val lake = new VersionedLakehouse(spark, root, cfg)
+    val lake = new Lakehouse(spark, root, cfg)
     lake.runEtl(g.messagesJson(spark, 1500).toDF("value"), batchId = 0L)
     lake.buildFact()
 
@@ -209,7 +222,7 @@ class VersionedLakehouseSpec extends SparkSpec {
 
   test("one etl.materialize per runEtl and per refresh; a replayed runEtl materializes nothing") {
     val g = gen
-    val lake = new VersionedLakehouse(spark,
+    val lake = new Lakehouse(spark,
       java.nio.file.Files.createTempDirectory("vlake_mat_").toString, cfg)
     def materializations(): Int =
       TableVersions.opTimingDrainCalls().get("etl.materialize").fold(0)(_._1)
@@ -228,7 +241,7 @@ class VersionedLakehouseSpec extends SparkSpec {
 
   test("a torn affected-dates marker reads as lost: the full replay recomputes the original dates") {
     val g = gen
-    val lake = new VersionedLakehouse(spark,
+    val lake = new Lakehouse(spark,
       java.nio.file.Files.createTempDirectory("vlake_marker_").toString, cfg)
     lake.runEtl(g.messagesJson(spark, 600).toDF("value"), batchId = 0L)
     lake.buildFact()
