@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.io.OutputStream
+import java.util.UUID
 
 import scala.util.control.NonFatal
 
@@ -13,13 +14,15 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 private[graft] object Replace {
 
   /** Replace the small file `p` with what `write` writes: the bytes go to
-    * a hidden temp sibling, which is then renamed over `p`. A crash or a
-    * failed write leaves the previous content whole and readable, never
-    * an empty or truncated file; on failure the temp is deleted.
+    * a temp sibling, hidden unless the caller names it (`tmp`, for a
+    * directory whose sweep knows its writers' temps: the table log's
+    * `.tmp-*`), which is then renamed over `p`. A crash or a failed write
+    * leaves the previous content whole and readable, never an empty or
+    * truncated file; on failure the temp is deleted.
     */
-  def file(conf: Configuration, p: Path)(write: OutputStream => Unit): Unit = {
+  def file(conf: Configuration, p: Path)(write: OutputStream => Unit,
+      tmp: Path = new Path(p.getParent, s".${p.getName}.tmp-${UUID.randomUUID()}")): Unit = {
     val fs = p.getFileSystem(conf)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
     try {
       val out = fs.create(tmp, true)
       try write(out) finally out.close()

@@ -2244,14 +2244,17 @@ object TableVersions {
       try out.write(body) finally out.close()
       if (!f.rename(tmp, target)) { f.delete(tmp, false); () }
     }
-    val ptrTmp = new Path(versionsDir(root), s".tmp-ptr-${java.util.UUID.randomUUID()}")
-    val pout = f.create(ptrTmp, true)
-    try pout.write(v.toString.getBytes(StandardCharsets.UTF_8)) finally pout.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      ptrTmp.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(ptrTmp, new Path(versionsDir(root), "_last_checkpoint"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    replaceMeta(spark, new Path(versionsDir(root), "_last_checkpoint"), "ptr",
+      v.toString.getBytes(StandardCharsets.UTF_8))
   }
+
+  /** Replace the log file `p` whole with `body` ([[Replace.file]]) through
+    * a `.tmp-<kind>-*` temp in its directory, the names vacuum's
+    * [[classifyMeta]] sweeps after a crashed writer.
+    */
+  private def replaceMeta(spark: SparkSession, p: Path, kind: String, body: Array[Byte]): Unit =
+    Replace.file(spark.sparkContext.hadoopConfiguration, p)(_.write(body),
+      new Path(p.getParent, s".tmp-$kind-${java.util.UUID.randomUUID()}"))
 
   /** Reject rows that violate any committed CHECK constraint: ONE
     * aggregate pass over the batch regardless of how many constraints
@@ -4308,15 +4311,8 @@ object TableVersions {
       val lock = adminLockPath(r)
       readAdminLock(f, lock) match {
         case Some((tok, _, _)) if tok == token =>
-          val payload = s"$token $what ${System.currentTimeMillis() + ttlMs}"
-          val tmp = new Path(versionsDir(r), s".tmp-admhb-${java.util.UUID.randomUUID()}")
-          val out = f.create(tmp, true)
-          try out.write(payload.getBytes(StandardCharsets.UTF_8)) finally out.close()
-          try {
-            val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-              tmp.toUri, spark.sparkContext.hadoopConfiguration)
-            fc.rename(tmp, lock, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-          } catch { case scala.util.control.NonFatal(_) => f.delete(tmp, false); () }
+          replaceMeta(spark, lock, "admhb",
+            s"$token $what ${System.currentTimeMillis() + ttlMs}".getBytes(StandardCharsets.UTF_8))
         case _ => () // broken, deleted, or mid-move: nothing to renew
       }
     } catch { case scala.util.control.NonFatal(_) => () } } // next tick retries
@@ -5106,14 +5102,7 @@ object TableVersions {
           enc(rebase(dec(l.substring(0, i)))) + l.substring(i)
         }
       }.mkString("\n")
-      if (out != text) {
-        val tmp = new Path(vd, s".tmp-rebase-${java.util.UUID.randomUUID()}")
-        val o = f.create(tmp, true)
-        try o.write(out.getBytes(StandardCharsets.UTF_8)) finally o.close()
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          tmp.toUri, spark.sparkContext.hadoopConfiguration)
-        fc.rename(tmp, s.getPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      }
+      if (out != text) replaceMeta(spark, s.getPath, "rebase", out.getBytes(StandardCharsets.UTF_8))
     }
     // legacy DV sidecars: absolute `file` entries under the old root
     // become relative; the rewritten single file keeps its exact name

@@ -151,13 +151,15 @@ final class Lakehouse(spark: SparkSession, root: String, cfg: Config = Config.de
   private def refreshImpl(raw: DataFrame, batchId: Long,
       factBarrier: () => Unit): Seq[java.sql.Date] = {
     // FULL-REPLAY fast path: when all four tables already recorded the
-    // batch, the swap is done — serve the affected dates from the
-    // marker instead of re-running the batch's ETL parse
-    if (zones.recorded(spark, factRoot, "fact_refresh" -> batchId) && routesRecorded(batchId))
-      readAffectedMarker(batchId) match {
-        case Some(dates) => return dates
-        case None => // a crash between swap and marker write: recompute below
-      }
+    // batch, the swap is done — serve the affected dates from the marker
+    // instead of re-running the batch's ETL parse, unless it is lost (a
+    // crash between swap and marker write) or a later batch's (an older
+    // batch replayed): then recompute below
+    val marker =
+      if (zones.recorded(spark, factRoot, "fact_refresh" -> batchId) && routesRecorded(batchId))
+        readAffectedMarker()
+      else None
+    marker match { case Some((`batchId`, dates)) => return dates; case _ => }
     val enriched = raw.transform(Etl.pipeline(cfg)).cache()
     try Forks(spark) { forks =>
       // materialize the cache FIRST so the fork and the route appends
@@ -174,25 +176,26 @@ final class Lakehouse(spark: SparkSession, root: String, cfg: Config = Config.de
       factBarrier() // an overlapped fact rebuild must land before the swap plans
       zones.replacePartitions(spark, factRoot, factFrame(stgV, stgC, stgE),
         Seq("measurement_date"), "fact_refresh" -> batchId)
-      writeAffectedMarker(batchId, affected)
+      if (marker.forall(_._1 < batchId)) writeAffectedMarker(batchId, affected)
       affected
     } finally { enriched.unpersist(); () }
   }
 
-  private def affectedMarkerPath(batchId: Long) =
-    new Path(factRoot, s"_refresh/b$batchId.dates")
+  /** The one affected-dates marker: the last refreshed batch's. */
+  private def affectedMarkerPath = new Path(factRoot, "_refresh/last.dates")
 
-  /** Sorted dates, one per line, then `#<count>`, replaced whole
-    * ([[Replace.file]]). A marker that fails its checksum or whose last
-    * line is not its date count reads as lost.
+  /** `b<batchId>`, the sorted dates one per line, then `#<count>`,
+    * replaced whole ([[Replace.file]]). A marker that fails its checksum
+    * or whose last line is not its date count reads as lost.
     */
   private def writeAffectedMarker(batchId: Long, dates: Seq[java.sql.Date]): Unit =
-    Replace.file(spark.sparkContext.hadoopConfiguration, affectedMarkerPath(batchId))(
-      _.write((dates.map(_.toString).sorted :+ s"#${dates.size}")
+    Replace.file(spark.sparkContext.hadoopConfiguration, affectedMarkerPath)(
+      _.write((s"b$batchId" +: dates.map(_.toString).sorted :+ s"#${dates.size}")
         .mkString("", "\n", "\n").getBytes("UTF-8")))
 
-  private def readAffectedMarker(batchId: Long): Option[Seq[java.sql.Date]] = {
-    val p = affectedMarkerPath(batchId)
+  /** (batch id, dates) of the marker, if it is there and whole. */
+  private def readAffectedMarker(): Option[(Long, Seq[java.sql.Date])] = {
+    val p = affectedMarkerPath
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
@@ -200,8 +203,8 @@ final class Lakehouse(spark: SparkSession, root: String, cfg: Config = Config.de
       // a torn write on a checksummed file system fails its checksum
       val lines = try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
         catch { case _: ChecksumException => Nil } finally in.close()
-      lines.lastOption.filter(_ == s"#${lines.size - 1}")
-        .map(_ => lines.init.map(java.sql.Date.valueOf))
+      lines.lastOption.filter(_ == s"#${lines.size - 2}").flatMap(_ => lines.head.stripPrefix("b")
+        .toLongOption.map(_ -> lines.tail.init.map(java.sql.Date.valueOf)))
     }
   }
 

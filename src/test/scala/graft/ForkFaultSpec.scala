@@ -4,9 +4,12 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.analytics.Reports
 import graft.etl.Etl
 import graft.gen.HealthcareGenerator
 import graft.model.Config
@@ -192,6 +195,40 @@ class ForkFaultSpec extends SparkSpec {
     val e = failing("refresh boom") { lake.buildFactWithRefresh(batch, batchId = 1L) }
     assert(e.getSuppressed.length === 1, "the rebuild's error rides along as suppressed")
     assert(!mentions(e.getSuppressed.head, "refresh boom"))
+  }
+
+  test("evaluateGates: a failed vitals scan surfaces and cancels the overlapped fact aggregate") {
+    // the fact's rows take a minute each; the vitals scan fails after two
+    // seconds, while the fork's job runs
+    val slowTs = udf { (i: Long) => Thread.sleep(60000L); new java.sql.Timestamp(i) }
+    val fact = spark.range(0, 2, 1, 2).select(slowTs(col("id")).as("measurement_timestamp"),
+      lit("high_risk").as("risk_level"), lit("comprehensive").as("encounter_type"),
+      lit(1.0).as("encounter_complexity_score"))
+    val failingTs = udf { (i: Long) =>
+      Thread.sleep(2000L)
+      if (i >= 0L) throw new IllegalStateException("vitals scan boom")
+      new java.sql.Timestamp(i)
+    }
+    val vitals = spark.range(0, 1, 1, 1)
+      .select(failingTs(col("id")).as("processed_at"), lit(1.0).as("data_quality_score"))
+    // the fork's jobs carry the scope's tag; record how each one ended
+    val forkJobs = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-forks-"))) { forkJobs.put(e.jobId, false); () }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (forkJobs.containsKey(e.jobId)) { forkJobs.put(e.jobId, e.jobResult == JobSucceeded); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    val e = try failing("vitals scan boom") { Reports.evaluateGates(cfg)(vitals, fact) }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert((System.nanoTime() - t0) / 1e9 < 30.0, "the fact aggregate ran on instead of being cancelled")
+    assert(e.getSuppressed.exists(_.isInstanceOf[SparkException]),
+      "the cancelled fact aggregate's error rides along as suppressed")
+    assert(!forkJobs.isEmpty && !forkJobs.containsValue(true),
+      s"the fork's job was cancelled, not completed: $forkJobs")
   }
 
   test("IndexPipeline.processBatch: a failed LSH store cancels the semantic and term stores") {

@@ -34,6 +34,24 @@ class ReplaceSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(Paths.get(dir.toString, "_progress"))) === "42")
   }
 
+  test("a caller-named temp: a write that throws leaves no temp and the old content intact") {
+    val dir = Files.createTempDirectory("replace_named_")
+    val p = new Path(dir.toString, "_last_checkpoint")
+    Replace.file(conf, p)(_.write("7".getBytes), new Path(dir.toString, ".tmp-ptr-1"))
+    val tmp = Paths.get(dir.toString, ".tmp-ptr-2")
+    val e = intercept[java.io.IOException] {
+      Replace.file(conf, p)({ out =>
+        assert(Files.exists(tmp), "the bytes go to the caller's temp")
+        out.write("1".getBytes)
+        throw new java.io.IOException("disk gone")
+      }, new Path(tmp.toString))
+    }
+    assert(e.getMessage === "disk gone")
+    assert(new String(Files.readAllBytes(Paths.get(dir.toString, "_last_checkpoint"))) === "7")
+    val left = dir.toFile.listFiles().map(_.getName).toSet
+    assert(left === Set("_last_checkpoint", "._last_checkpoint.crc"), s"temp left behind: $left")
+  }
+
   test("compact succeeds over a stale swap leftover, data intact, no leftover remaining") {
     val root = Files.createTempDirectory("replace_dir_").toString
     val path = s"$root/t"

@@ -248,11 +248,11 @@ class VersionedLakehouseSpec extends SparkSpec {
     def batch = g.messagesJson(spark, 300, offset = 600).toDF("value")
     val affected = lake.refreshFactIncremental(batch, batchId = 1L)
     assert(affected.size >= 2)
-    val marker = java.nio.file.Paths.get(lake.factRoot, "_refresh", "b1.dates")
+    val marker = java.nio.file.Paths.get(lake.factRoot, "_refresh", "last.dates")
     def markerLines() = java.nio.file.Files.readAllLines(marker).toArray.toSeq
-    assert(markerLines() === affected.map(_.toString) :+ s"#${affected.size}")
+    assert(markerLines() === "b1" +: affected.map(_.toString) :+ s"#${affected.size}")
 
-    val crc = marker.resolveSibling(".b1.dates.crc")
+    val crc = marker.resolveSibling(".last.dates.crc")
     assert(java.nio.file.Files.exists(crc))
     val versions = Seq(lake.vitalsRoot, lake.claimsRoot, lake.ehrRoot, lake.factRoot)
       .map(r => TableVersions.currentVersion(spark, r).get)
@@ -262,13 +262,42 @@ class VersionedLakehouseSpec extends SparkSpec {
     for (dropCrc <- Seq(true, false)) {
       if (dropCrc) java.nio.file.Files.delete(crc)
       java.nio.file.Files.write(marker,
-        markerLines().take(affected.size / 2).mkString("", "\n", "\n").getBytes("UTF-8"))
+        markerLines().take(1 + affected.size / 2).mkString("", "\n", "\n").getBytes("UTF-8"))
       assert(lake.refreshFactIncremental(batch, batchId = 1L) === affected)
       assert(Seq(lake.vitalsRoot, lake.claimsRoot, lake.ehrRoot, lake.factRoot)
         .map(r => TableVersions.currentVersion(spark, r).get) === versions)
       // the recomputing replay writes the marker whole again
-      assert(markerLines() === affected.map(_.toString) :+ s"#${affected.size}")
+      assert(markerLines() === "b1" +: affected.map(_.toString) :+ s"#${affected.size}")
       assert(java.nio.file.Files.exists(crc))
     }
+  }
+
+  test("one affected-dates marker: the last batch replays from it, an older batch recomputes and commits nothing") {
+    val g = gen
+    val lake = new Lakehouse(spark,
+      java.nio.file.Files.createTempDirectory("vlake_markers_").toString, cfg)
+    lake.runEtl(g.messagesJson(spark, 600).toDF("value"), batchId = 0L)
+    lake.buildFact()
+    def batch(i: Int) = g.messagesJson(spark, 200, offset = 400 + 200 * i).toDF("value")
+    val dates = (1 to 3).map(i => lake.refreshFactIncremental(batch(i), i.toLong))
+    val markers = new java.io.File(lake.factRoot, "_refresh").list().filterNot(_.startsWith(".")).toSeq
+    assert(markers === Seq("last.dates"), "three refreshes leave one marker")
+    def versions() = Seq(lake.vitalsRoot, lake.claimsRoot, lake.ehrRoot, lake.factRoot)
+      .map(r => TableVersions.currentVersion(spark, r).get)
+    val before = versions()
+    def materializations(): Int =
+      TableVersions.opTimingDrainCalls().get("etl.materialize").fold(0)(_._1)
+    TableVersions.opTimingEnable(true)
+    try {
+      TableVersions.opTimingDrainCalls()
+      assert(lake.refreshFactIncremental(batch(3), 3L) === dates(2))
+      assert(materializations() === 0, "the last batch replays from the marker")
+      assert(lake.refreshFactIncremental(batch(1), 1L) === dates(0))
+      assert(versions() === before, "an older batch's replay commits nothing")
+      // ...and leaves the last batch's marker in place
+      TableVersions.opTimingDrainCalls()
+      assert(lake.refreshFactIncremental(batch(3), 3L) === dates(2))
+      assert(materializations() === 0)
+    } finally TableVersions.opTimingEnable(false)
   }
 }
