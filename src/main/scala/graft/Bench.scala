@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Results are forced through the noop sink so the full physical plan
@@ -10,17 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cores("32")
+    val spark = Sessions.local(cpus, "32", bench = true)
 
     // Driver-JVM GC time attribution: with 130+ queries per pass the
     // main round-over-round confounder is no longer any single plan but
@@ -113,8 +102,6 @@ object Bench {
     // then later-round queries strictly after — the common-set prefix is
     // identical across rounds, so ratios compare like with like.
     val names = SparkEntry.benchOrder
-    require(names.toSet == SparkEntry.queries.keySet,
-      "benchOrder out of sync with queries")
     // Warm-up pass: JIT + codegen + parquet footer caches, so the measured
     // passes reflect steady-state throughput, not JVM warm-up. Two
     // measured passes, best-of per query: single-pass numbers on a
@@ -142,10 +129,10 @@ object Bench {
     gcByQuery.clear() // attribute GC to the MEASURED passes only
     spillByQuery.clear() // likewise spill
     // One measured pass: per-query seconds, the common-set (r7-cohort)
-    // wall subtotal — accumulated BEFORE the lateCohort tail runs, so
+    // wall subtotal — accumulated BEFORE the late tail runs, so
     // later-round queries' load cannot leak into it — plus the pass's
     // /proc/self/io delta and its starting 1-min loadavg.
-    val lateSet = SparkEntry.lateCohort.toSet
+    val lateSet = SparkEntry.catalog.filter(_.late).map(_.name).toSet
     final case class Pass(res: Map[String, Double], commonSec: Double,
         ioReadMb: Long, ioWriteMb: Long, la: Double, spillMb: Long, peakStorageMb: Long)
     def pass(): Pass = {
@@ -215,19 +202,13 @@ object Bench {
     val spillDetail = names.map(n => "\"" + n + "\":" + spillByQuery(n) / 1000000L)
       .mkString("{", ",", "}")
     println(s"""BENCH_SPILL_MB $spillDetail""")
-    // The ten long hc_* keys are abbreviated on the COMPACT line only
-    // (fixed table below; BENCH_DETAIL keeps full names) — the line
-    // must carry the round-9 attribution fields and 140+ queries inside
-    // the driver's 2000-char tail window. Round-over-round comparisons
-    // map old "hc_stg_vitals" etc. to these via SURVEY.md §7.4's note.
-    val hcShort = Map(
-      "hc_stg_vitals" -> "hsv", "hc_stg_claims" -> "hsc", "hc_stg_ehr" -> "hse",
-      "hc_fact_encounters" -> "hfe", "hc_daily_monitoring" -> "hdm",
-      "hc_claims_report" -> "hcr", "hc_dim_patients" -> "hdp",
-      "hc_dim_providers" -> "hdq", "hc_dsv2_source" -> "hds",
-      "hc_stream_etl" -> "hst")
-    def shortKey(n: String): String =
-      if (n.startsWith("q")) n.takeWhile(_ != '_') else hcShort.getOrElse(n, n)
+    // Compact-line keys ([[graft.queries.Query.shortKey]]): the qNN
+    // prefix, and three letters for the ten long hc_* names (BENCH_DETAIL
+    // keeps full names) — the line must carry the round-9 attribution
+    // fields and 140+ queries inside the driver's 2000-char tail window.
+    // Round-over-round comparisons map old "hc_stg_vitals" etc. to these
+    // via SURVEY.md §7.4's note.
+    val shortKey = SparkEntry.catalog.map(q => q.name -> q.shortKey).toMap
     def r3(v: Double): String = if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // 2-decimal per-query values on the COMPACT line only: at 136
     // queries the 3-decimal form crossed the driver's tail window

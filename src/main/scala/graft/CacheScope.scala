@@ -25,7 +25,7 @@ import org.apache.spark.sql.DataFrame
   * Bench/Verify call `drain()` after each pass / query's terminal action,
   * bounding cached and checkpointed blocks to one scope's working set.
   *
-  * Deliberately NOT used for `HealthcareQueries.perSession` (a
+  * Deliberately NOT used for `PipelineQueries.memoized` (a
   * cross-query memo by design) or for operator-internal caches whose
   * callers already unpersist in `finally` (`runner.Lakehouse`, which
   * `StreamingEtl` runs its micro-batches through).

@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object EntryProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("8", "8")
     println(s"ENTRY_ROWS=${SparkEntry.entry(spark).count()}")
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `explain("formatted")` output for declared queries to
   * one file per query, for plan-diff review (plans/r{N}/<query>_{before,after}.txt).
   *
@@ -18,16 +16,7 @@ object PlanDump {
     val suffix = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val names = if (args.length > 3) args.drop(3).toSeq else SparkEntry.benchOrder
-    val spark = SparkSession.builder()
-      .master(sys.env.get("SPARK_GRAFT_CPUS").map(c => s"local[$c]").getOrElse("local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cores("8"), "32", bench = true, logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       try {

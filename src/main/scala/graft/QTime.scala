@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: time individual named queries from [[SparkEntry.queries]]
   * without the full bench session. Usage:
   *
@@ -15,17 +13,8 @@ object QTime {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cores("32")
+    val spark = Sessions.local(cpus, "32", bench = true)
     graft.operators.TableVersions.opTimingEnable(true)
     // the same fixed-work calibration as Bench ([[Calibration]]) so QTime
     // numbers taken on a drift-prone box are normalizable across runs

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import graft.queries._
+
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` maps every implemented operator from SURVEY §2 (plus the
   * training-data extension operators) to a runnable DataFrame; `oracleSql`
@@ -10,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * without an oracle entry (the healthcare end-to-end pipeline over
   * generated data, and ops not expressible in portable SQL) get the
   * driver's rows-only check and are covered by ScalaTest golden tests
-  * instead.
+  * instead. All of them are views of [[catalog]].
   */
 object SparkEntry {
 
@@ -18,348 +20,28 @@ object SparkEntry {
     * pipeline — generate messages → ETL → staging → fact_patient_encounters
     * (driver smoke-checks rows > 0).
     */
-  def entry(spark: SparkSession): DataFrame = HealthcareQueries.factEncounters(spark, 4000)
+  def entry(spark: SparkSession): DataFrame = PipelineQueries.factEncounters(spark, 4000)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (Queries.q01PricingSummary _),
-    "q02_asof_band_join" -> (Queries.q02AsofBandJoin _),
-    "q03_regional_revenue" -> (Queries.q03RegionalRevenue _),
-    "q04_top_orders_per_customer" -> (Queries.q04TopOrdersPerCustomer _),
-    "q05_daily_event_report" -> (Queries.q05DailyEventReport _),
-    "q06_order_daily_report" -> (Queries.q06OrderDailyReport _),
-    "q07_quality_score" -> (Queries.q07QualityScore _),
-    "q08_range_validate" -> (Queries.q08RangeValidate _),
-    "q09_quality_filter" -> (Queries.q09QualityFilter _),
-    "q10_value_categorize" -> (Queries.q10ValueCategorize _),
-    "q11_freshness" -> (Queries.q11Freshness _),
-    "q12_top_events" -> (Queries.q12TopEvents _),
-    "q13_buyer_error_users" -> (Queries.q13BuyerErrorUsers _),
-    "q14_doc_tokens" -> (Queries.q14DocTokens _),
-    "q15_exact_dedup" -> (Queries.q15ExactDedup _),
-    "q16_text_quality" -> (Queries.q16TextQuality _),
-    "q17_ann_cosine_topk" -> (Queries.q17AnnCosineTopK _),
-    "q18_minhash_dedup" -> (ExtQueries.q18MinHashDedup _),
-    "q29_window_lag" -> (Queries.q29WindowLag _),
-    "q30_rollup" -> (Queries.q30Rollup _),
-    "q31_semi_anti" -> (Queries.q31SemiAnti _),
-    "q19_simhash_dedup" -> (ExtQueries.q19SimHashDedup _),
-    "q20_ngram_jaccard" -> (ExtQueries.q20NgramJaccard _),
-    "q21_embedding_neardup" -> (ExtQueries.q21EmbeddingNearDup _),
-    "q22_lang_id" -> (ExtQueries.q22LangId _),
-    "q23_fingerprint" -> (ExtQueries.q23Fingerprint _),
-    "q24_token_counts" -> (ExtQueries.q24TokenCounts _),
-    "q25_ann_lsh" -> (ExtQueries.q25AnnLsh _),
-    "q26_media_features" -> (ExtQueries.q26MediaFeatures _),
-    "q27_text_quality_features" -> (ExtQueries.q27TextQualityFeatures _),
-    "q28_ann_ivf" -> (ExtQueries.q28AnnIvf _),
-    "q32_pii_redact" -> (ExtQueries.q32PiiRedact _),
-    "q33_sessionize" -> (Queries.q33Sessionize _),
-    "q34_percentiles" -> (Queries.q34Percentiles _),
-    "q35_neardup_exact" -> (ExtQueries.q35NearDupExact _),
-    "q36_cube" -> (Queries.q36Cube _),
-    "q37_pivot" -> (Queries.q37Pivot _),
-    "q38_above_avg" -> (Queries.q38AboveAvg _),
-    "q39_word_topk" -> (Queries.q39WordTopK _),
-    "q40_deciles" -> (Queries.q40Deciles _),
-    "q41_weekly_cumulative" -> (Queries.q41WeeklyCumulative _),
-    "q42_strings" -> (Queries.q42Strings _),
-    "q43_asof_join" -> (Queries.q43AsofJoin _),
-    "q44_json" -> (Queries.q44Json _),
-    "q45_distinct_users" -> (Queries.q45DistinctUsers _),
-    "q46_rank_family" -> (Queries.q46RankFamily _),
-    "q47_datetime_suite" -> (Queries.q47DatetimeSuite _),
-    "q48_sliding_window" -> (Queries.q48SlidingWindow _),
-    "q49_setops_regexp" -> (Queries.q49SetOpsRegexp _),
-    "q50_contamination" -> (ExtQueries.q50Contamination _),
-    "q51_episodes" -> (Queries.q51Episodes _),
-    "q52_value_windows" -> (Queries.q52ValueWindows _),
-    "q53_repetition" -> (ExtQueries.q53Repetition _),
-    "q54_null_funcs" -> (Queries.q54NullFuncs _),
-    "q55_stats" -> (Queries.q55Stats _),
-    "q56_corr_regr" -> (Queries.q56CorrRegr _),
-    "q57_gapfill" -> (Queries.q57GapFill _),
-    "q58_dedup_clusters" -> (ExtQueries.q58DedupClusters _),
-    "q59_pack_sequences" -> (ExtQueries.q59PackSequences _),
-    "q60_bloom_semi_join" -> (ExtQueries.q60BloomSemiJoin _),
-    "q61_bag_setops" -> (Queries.q61BagSetOps _),
-    "q62_array_suite" -> (Queries.q62ArraySuite _),
-    "q63_tumbling_window" -> (Queries.q63TumblingWindow _),
-    "q64_ann_ivf_rq" -> (ExtQueries.q64AnnIvfRq _),
-    "q65_grouping_sets" -> (Queries3.q65GroupingSets _),
-    "q66_listagg_mode" -> (Queries3.q66ListaggMode _),
-    "q67_range_join" -> (Queries3.q67RangeJoin _),
-    "q68_volume_shipping" -> (Queries3.q68VolumeShipping _),
-    "q69_large_orders" -> (Queries3.q69LargeOrders _),
-    "q70_zorder_values" -> (Queries3.q70ZOrderValues _),
-    "q71_histogram" -> (Queries3.q71Histogram _),
-    "q72_salted_agg" -> (Queries3.q72SaltedAgg _),
-    "q73_scd2_replay" -> (Queries3.q73Scd2Replay _),
-    "q74_doc_freq" -> (Queries3.q74DocFreq _),
-    "q75_tfidf" -> (Queries3.q75TfIdf _),
-    "q76_topk_agg" -> (Queries3.q76TopkAgg _),
-    "q77_schema_evolution" -> (Queries3.q77SchemaEvolution _),
-    "q78_unpivot" -> (Queries3.q78Unpivot _),
-    "q79_band_join_bucketed" -> (Queries3.q79BandJoinBucketed _),
-    "q80_recursive_cte" -> (Queries3.q80RecursiveCte _),
-    "q81_session_window" -> (Queries3.q81SessionWindow _),
-    "q82_lateral_topn" -> (Queries3.q82LateralTopN _),
-    "q83_having_share" -> (Queries3.q83HavingShare _),
-    "q84_profile" -> (Queries3.q84Profile _),
-    "q85_small_qty_revenue" -> (Queries4.q85SmallQtyRevenue _),
-    "q86_sole_late_supplier" -> (Queries4.q86SoleLateSupplier _),
-    "q87_idle_rich_customers" -> (Queries4.q87IdleRichCustomers _),
-    "q88_brand_supplier_counts" -> (Queries4.q88BrandSupplierCounts _),
-    "q89_order_reconcile" -> (Queries4.q89OrderReconcile _),
-    "q90_merge_upsert" -> (Queries4.q90MergeUpsert _),
-    "q91_fuzzy_names" -> (Queries4.q91FuzzyNames _),
-    "q92_heavy_hitters" -> (Queries4.q92HeavyHitters _),
-    "q93_hash_sample" -> (Queries4.q93HashSample _),
-    "q94_bitmap_distinct" -> (Queries4.q94BitmapDistinct _),
-    "q95_hll_rollup" -> (Queries4.q95HllRollup _),
-    "q96_top_supplier" -> (Queries4.q96TopSupplier _),
-    "q97_zscore_outliers" -> (Queries4.q97ZscoreOutliers _),
-    "q98_custdist" -> (Queries4.q98CustDist _),
-    "q99_fuzzy_passjoin" -> (Queries4.q99FuzzyPassjoin _),
-    "q100_semdedup" -> (ExtQueries.q100SemDedup _),
-    "q101_lm_score" -> (ExtQueries.q101LmScore _),
-    "q102_dedup_keepers" -> (ExtQueries.q102DedupKeepers _),
-    "q103_mixture" -> (ExtQueries.q103Mixture _),
-    "q104_curate" -> (ExtQueries.q104Curate _),
-    "q105_span_dedup" -> (ExtQueries.q105SpanDedup _),
-    "q106_jl_project" -> (ExtQueries.q106JlProject _),
-    "q107_wsample" -> (ExtQueries.q107WeightedSample _),
-    "q108_chunks" -> (ExtQueries.q108Chunks _),
-    "q109_bm25" -> (ExtQueries.q109Bm25 _),
-    "q110_quant_ann" -> (ExtQueries.q110QuantAnn _),
-    "q111_entity_res" -> (ExtQueries.q111EntityResolution _),
-    "q112_adaptive_q" -> (ExtQueries.q112AdaptiveQuality _),
-    "q113_curriculum" -> (ExtQueries.q113Curriculum _),
-    "q114_hard_neg" -> (ExtQueries.q114HardNegatives _),
-    "q115_hybrid_retrieval" -> (ExtQueries.q115HybridRetrieval _),
-    "q116_media_neardup" -> (ExtQueries.q116MediaNearDup _),
-    "q117_compaction_plan" -> (ExtQueries.q117CompactionPlan _),
-    "q118_repetition" -> (ExtQueries.q118Repetition _),
-    "q119_ann_recall" -> (ExtQueries.q119AnnRecall _),
-    "q120_quota_sample" -> (ExtQueries.q120QuotaSample _),
-    "q121_versioned_table" -> (ExtQueries.q121VersionedRoundtrip _),
-    "q122_normalize" -> (ExtQueries.q122Normalize _),
-    "q123_delete_optimize" -> (ExtQueries.q123DeleteOptimize _),
-    "q124_contrastive" -> (ExtQueries.q124ContrastiveTriplets _),
-    "q125_upsert" -> (ExtQueries.q125Upsert _),
-    "q126_bloom_lookup" -> (ExtQueries.q126BloomLookup _),
-    "hc_dim_patients" -> ((s: SparkSession, _: String) => HealthcareQueries.dimPatients(s, 4000)),
-    "hc_dim_providers" -> ((s: SparkSession, _: String) => HealthcareQueries.dimProviders(s, 4000)),
-    // Healthcare end-to-end (reference parity; rows-only check, golden
-    // ScalaTest coverage in src/test)
-    "hc_fact_encounters" -> ((s: SparkSession, _: String) => HealthcareQueries.factEncounters(s, 4000)),
-    "hc_stg_vitals" -> ((s: SparkSession, _: String) => HealthcareQueries.stgVitals(s, 4000)),
-    "hc_stg_claims" -> ((s: SparkSession, _: String) => HealthcareQueries.stgClaims(s, 4000)),
-    "hc_stg_ehr" -> ((s: SparkSession, _: String) => HealthcareQueries.stgEhr(s, 4000)),
-    "hc_daily_monitoring" -> ((s: SparkSession, _: String) => HealthcareQueries.dailyMonitoring(s, 4000)),
-    "hc_claims_report" -> ((s: SparkSession, _: String) => HealthcareQueries.claimsReport(s, 4000)),
-    "hc_stream_etl" -> ((s: SparkSession, _: String) => HealthcareQueries.streamEtl(s, 4000)),
-    // DataSource V2 generator table (S7 as a connector): filter pushdown +
-    // column pruning exercised through the public format() API
-    "q127_fact_grain" -> (Round8Queries.q127FactGrainTwin _),
-    "q128_partitioned_table" -> (Round8Queries.q128PartitionedTable _),
-    "q129_change_feed" -> (Round8Queries.q129ChangeFeed _),
-    "q130_restore_clone" -> (Round8Queries.q130RestoreClone _),
-    "q131_replace_parts" -> (Round10Queries.q131ReplacePartitions _),
-    "q132_cdf_view" -> (Round10Queries.q132CdfView _),
-    "q133_deletion_vectors" -> (Round10Queries.q133DeletionVectors _),
-    "q134_versioned_lakehouse" -> (Round11Queries.q134VersionedLakehouse _),
-    "q135_column_mapping" -> (Round11Queries.q135ColumnMapping _),
-    "q136_merge_into" -> (Round11Queries.q136MergeInto _),
-    "q137_change_feed" -> (Round11Queries.q137ChangeFeed _),
-    "q138_sql_catalog" -> (Round11Queries.q138SqlCatalog _),
-    "q139_sql_dml" -> (Round11Queries.q139SqlDml _),
-    "q140_merge_evolution" -> (Round12Queries.q140MergeEvolution _),
-    "q141_index_follow" -> (Round13Queries.q141IndexFollow _),
-    "q142_novelty" -> (Round14Queries.q142Novelty _),
-    "q143_novelty_curate" -> (Round15Queries.q143NoveltyCurate _),
-    "hc_dsv2_source" -> ((s: SparkSession, _: String) =>
-      s.read.format("healthcare-gen").option("type", "vitals").option("n", 20000)
-        .option("seed", 42).option("partitions", 8).load()
-        .filter(org.apache.spark.sql.functions.col("heart_rate") > 100)
-        .groupBy("location")
-        .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n_alerts"))
-        .orderBy("location"))
-  )
+  /** Every query, declared once, layer by layer (`graft.queries`). */
+  lazy val catalog: Seq[Query] = Seq(PipelineQueries.entries, SqlQueries.entries,
+    JoinQueries.entries, DedupQueries.entries, VectorQueries.entries, TextQueries.entries,
+    MultimodalQueries.entries, TableQueries.entries, StreamingQueries.entries).flatten
 
-  /** Queries introduced AFTER round 7, in introduction order. [[Bench]]
-    * runs `benchOrder` = the round-7 cohort (sorted — byte-identical to
-    * the order BENCH_r07 ran) followed by this list, so the
-    * common-set PREFIX of every future bench pass is fixed: round-over-
-    * round per-query ratios compare like with like, and new queries'
-    * JVM/page-cache load cannot leak into the common set's numbers
-    * (the round-7 drift lesson). Append new queries here; never reorder.
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map(q => q.name -> q.build).toMap
+
+  def oracleSql: Map[String, String] = catalog.flatMap(q => q.oracleSql.map(q.name -> _)).toMap
+
+  /** Fixed bench execution order: the round-7 cohort sorted by name
+    * (byte-identical to the order BENCH_r07 ran), then the `late` queries
+    * oldest first, so the common-set PREFIX of every bench pass is fixed:
+    * round-over-round per-query ratios compare like with like, and new
+    * queries' JVM/page-cache load cannot leak into the common set's
+    * numbers (the round-7 drift lesson). A new query is `late`.
     */
-  val lateCohort: Seq[String] = Seq(
-    "q127_fact_grain",
-    "q128_partitioned_table",
-    "q129_change_feed",
-    "q130_restore_clone",
-    "q131_replace_parts",
-    "q132_cdf_view",
-    "q133_deletion_vectors",
-    "q134_versioned_lakehouse",
-    "q135_column_mapping",
-    "q136_merge_into",
-    "q137_change_feed",
-    "q138_sql_catalog",
-    "q139_sql_dml",
-    "q140_merge_evolution",
-    "q141_index_follow",
-    "q142_novelty",
-    "q143_novelty_curate"
-  )
-
-  /** Fixed bench execution order — see [[lateCohort]]. */
   def benchOrder: Seq[String] = {
-    val late = lateCohort.toSet
-    queries.keys.filterNot(late).toSeq.sorted ++ lateCohort
+    val (late, first) = catalog.partition(_.late)
+    first.map(_.name).sorted ++
+      late.map(_.name).sortBy(_.drop(1).takeWhile(_.isDigit).toInt)
   }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" -> Queries.q01Sql,
-    "q02_asof_band_join" -> Queries.q02Sql,
-    "q03_regional_revenue" -> Queries.q03Sql,
-    "q04_top_orders_per_customer" -> Queries.q04Sql,
-    "q05_daily_event_report" -> Queries.q05Sql,
-    "q06_order_daily_report" -> Queries.q06Sql,
-    "q07_quality_score" -> Queries.q07Sql,
-    "q08_range_validate" -> Queries.q08Sql,
-    "q09_quality_filter" -> Queries.q09Sql,
-    "q10_value_categorize" -> Queries.q10Sql,
-    "q11_freshness" -> Queries.q11Sql,
-    "q12_top_events" -> Queries.q12Sql,
-    "q13_buyer_error_users" -> Queries.q13Sql,
-    "q14_doc_tokens" -> Queries.q14Sql,
-    "q15_exact_dedup" -> Queries.q15Sql,
-    "q16_text_quality" -> Queries.q16Sql,
-    "q17_ann_cosine_topk" -> Queries.q17Sql,
-    "q20_ngram_jaccard" -> ExtQueries.q20Sql,
-    "q29_window_lag" -> Queries.q29Sql,
-    "q30_rollup" -> Queries.q30Sql,
-    "q31_semi_anti" -> Queries.q31Sql,
-    "q24_token_counts" -> ExtQueries.q24Sql,
-    "q32_pii_redact" -> ExtQueries.q32Sql,
-    "q33_sessionize" -> Queries.q33Sql,
-    "q34_percentiles" -> Queries.q34Sql,
-    "q35_neardup_exact" -> ExtQueries.q35Sql,
-    "q22_lang_id" -> ExtQueries.q22Sql,
-    "q27_text_quality_features" -> ExtQueries.q27Sql,
-    "q36_cube" -> Queries.q36Sql,
-    "q37_pivot" -> Queries.q37Sql,
-    "q38_above_avg" -> Queries.q38Sql,
-    "q39_word_topk" -> Queries.q39Sql,
-    "q40_deciles" -> Queries.q40Sql,
-    "q41_weekly_cumulative" -> Queries.q41Sql,
-    "q42_strings" -> Queries.q42Sql,
-    "q43_asof_join" -> Queries.q43Sql,
-    "q44_json" -> Queries.q44Sql,
-    "q45_distinct_users" -> Queries.q45Sql,
-    "q46_rank_family" -> Queries.q46Sql,
-    "q47_datetime_suite" -> Queries.q47Sql,
-    "q48_sliding_window" -> Queries.q48Sql,
-    "q49_setops_regexp" -> Queries.q49Sql,
-    "q50_contamination" -> ExtQueries.q50Sql,
-    "q51_episodes" -> Queries.q51Sql,
-    "q52_value_windows" -> Queries.q52Sql,
-    "q53_repetition" -> ExtQueries.q53Sql,
-    "q54_null_funcs" -> Queries.q54Sql,
-    "q55_stats" -> Queries.q55Sql,
-    "q56_corr_regr" -> Queries.q56Sql,
-    "q57_gapfill" -> Queries.q57Sql,
-    "q58_dedup_clusters" -> ExtQueries.q58Sql,
-    "q59_pack_sequences" -> ExtQueries.q59Sql,
-    "q60_bloom_semi_join" -> ExtQueries.q60Sql,
-    "q61_bag_setops" -> Queries.q61Sql,
-    "q62_array_suite" -> Queries.q62Sql,
-    "q63_tumbling_window" -> Queries.q63Sql,
-    "q65_grouping_sets" -> Queries3.q65Sql,
-    "q66_listagg_mode" -> Queries3.q66Sql,
-    "q67_range_join" -> Queries3.q67Sql,
-    "q68_volume_shipping" -> Queries3.q68Sql,
-    "q69_large_orders" -> Queries3.q69Sql,
-    "q70_zorder_values" -> Queries3.q70Sql,
-    "q71_histogram" -> Queries3.q71Sql,
-    "q72_salted_agg" -> Queries3.q72Sql,
-    "q73_scd2_replay" -> Queries3.q73Sql,
-    "q74_doc_freq" -> Queries3.q74Sql,
-    "q75_tfidf" -> Queries3.q75Sql,
-    "q76_topk_agg" -> Queries3.q76Sql,
-    "q77_schema_evolution" -> Queries3.q77Sql,
-    "q78_unpivot" -> Queries3.q78Sql,
-    "q79_band_join_bucketed" -> Queries3.q79Sql,
-    "q80_recursive_cte" -> Queries3.q80Sql,
-    "q81_session_window" -> Queries3.q81Sql,
-    "q82_lateral_topn" -> Queries3.q82Sql,
-    "q83_having_share" -> Queries3.q83Sql,
-    "q84_profile" -> Queries3.q84Sql,
-    "q85_small_qty_revenue" -> Queries4.q85Sql,
-    "q86_sole_late_supplier" -> Queries4.q86Sql,
-    "q87_idle_rich_customers" -> Queries4.q87Sql,
-    "q88_brand_supplier_counts" -> Queries4.q88Sql,
-    "q89_order_reconcile" -> Queries4.q89Sql,
-    "q90_merge_upsert" -> Queries4.q90Sql,
-    "q91_fuzzy_names" -> Queries4.q91Sql,
-    "q92_heavy_hitters" -> Queries4.q92Sql,
-    "q93_hash_sample" -> Queries4.q93Sql,
-    "q94_bitmap_distinct" -> Queries4.q94Sql,
-    "q23_fingerprint" -> ExtQueries.q23Sql,
-    "q19_simhash_dedup" -> ExtQueries.q19Sql,
-    "q18_minhash_dedup" -> ExtQueries.q18Sql,
-    "q96_top_supplier" -> Queries4.q96Sql,
-    "q97_zscore_outliers" -> Queries4.q97Sql,
-    "q98_custdist" -> Queries4.q98Sql,
-    "q21_embedding_neardup" -> ExtQueries.q21Sql,
-    "q25_ann_lsh" -> ExtQueries.q25Sql,
-    "q28_ann_ivf" -> ExtQueries.q28Sql,
-    "q64_ann_ivf_rq" -> ExtQueries.q64Sql,
-    "q99_fuzzy_passjoin" -> Queries4.q99Sql,
-    "q100_semdedup" -> ExtQueries.q100Sql,
-    "q101_lm_score" -> ExtQueries.q101Sql,
-    "q102_dedup_keepers" -> ExtQueries.q102Sql,
-    "q103_mixture" -> ExtQueries.q103Sql,
-    "q104_curate" -> ExtQueries.q104Sql,
-    "q105_span_dedup" -> ExtQueries.q105Sql,
-    "q106_jl_project" -> ExtQueries.q106Sql,
-    "q107_wsample" -> ExtQueries.q107Sql,
-    "q108_chunks" -> ExtQueries.q108Sql,
-    "q109_bm25" -> ExtQueries.q109Sql,
-    "q110_quant_ann" -> ExtQueries.q110Sql,
-    "q111_entity_res" -> ExtQueries.q111Sql,
-    "q112_adaptive_q" -> ExtQueries.q112Sql,
-    "q113_curriculum" -> ExtQueries.q113Sql,
-    "q114_hard_neg" -> ExtQueries.q114Sql,
-    "q115_hybrid_retrieval" -> ExtQueries.q115Sql,
-    "q117_compaction_plan" -> ExtQueries.q117Sql,
-    "q118_repetition" -> ExtQueries.q118Sql,
-    "q119_ann_recall" -> ExtQueries.q119Sql(Queries.q17Sql, ExtQueries.q110Sql),
-    "q120_quota_sample" -> ExtQueries.q120Sql,
-    "q121_versioned_table" -> ExtQueries.q121Sql,
-    "q122_normalize" -> ExtQueries.q122Sql,
-    "q123_delete_optimize" -> ExtQueries.q123Sql,
-    "q124_contrastive" -> ExtQueries.q124Sql,
-    "q125_upsert" -> ExtQueries.q125Sql,
-    "q126_bloom_lookup" -> ExtQueries.q126Sql,
-    "q127_fact_grain" -> Round8Queries.q127Sql,
-    "q128_partitioned_table" -> Round8Queries.q128Sql,
-    "q129_change_feed" -> Round8Queries.q129Sql,
-    "q130_restore_clone" -> Round8Queries.q130Sql,
-    "q131_replace_parts" -> Round10Queries.q131Sql,
-    "q132_cdf_view" -> Round10Queries.q132Sql,
-    "q133_deletion_vectors" -> Round10Queries.q133Sql,
-    "q134_versioned_lakehouse" -> Round11Queries.q134Sql,
-    "q135_column_mapping" -> Round11Queries.q135Sql,
-    "q136_merge_into" -> Round11Queries.q136Sql,
-    "q137_change_feed" -> Round11Queries.q137Sql,
-    "q138_sql_catalog" -> Round11Queries.q138Sql,
-    "q139_sql_dml" -> Round11Queries.q139Sql,
-    "q140_merge_evolution" -> Round12Queries.q140Sql,
-    "q141_index_follow" -> Round13Queries.q141Sql,
-    "q142_novelty" -> Round14Queries.q142Sql,
-    "q143_novelty_curate" -> Round15Queries.q143Sql
-  )
 }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * are then recovered with a second filtered pass: semi-join the
   * candidates (a broadcast of ≤ m keys) and recount exactly —
   * candidates-then-verify, so the final answer is EXACT while all
-  * unbounded-cardinality state stays bounded. See `Queries4.q92`.
+  * unbounded-cardinality state stays bounded. See `SqlQueries.q92HeavyHitters`.
   *
   * Buffer is a mutable Map[Long, Long] (key → lower-bound weight),
   * serialized as length-prefixed (key, weight) pairs. Nulls are

@@ -76,7 +76,7 @@ object Dedup {
     * h_i(x) = (a_i·x + b_i) mod (2³¹−1) over a 31-bit base hash. 31-bit
     * operands keep every product < 2⁶² — no signed-64 overflow in Spark
     * (ANSI throws) or DuckDB (BIGINT errors); the identical literals are
-    * embedded in the DuckDB oracle SQL (ExtQueries.q18Sql).
+    * embedded in the DuckDB oracle SQL (DedupQueries.q18Sql).
     */
   private[graft] val MinHashP = 2147483647L
   private[graft] val (permA, permB) = {

@@ -94,7 +94,7 @@ object Sampling {
     * The comparison is INTEGER-exact: u is a 60-bit hash value and the
     * threshold is floor(w·2⁶⁰), so there is no float-tie ambiguity to
     * diverge across engines. `portable = true` derives u from md5 hex
-    * (cross-engine reproducible — the [[graft.Queries4.q93HashSample]]
+    * (cross-engine reproducible — the [[graft.queries.SqlQueries.q93HashSample]]
     * stance); default uses xxhash64 (faster, Spark-native).
     */
   def weightedSample(df: DataFrame, idCol: String, weight: Column,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * (Spark 3.5 bitmap functions) — the pattern that answers
   * COUNT(DISTINCT key) over 100 TB of raw events from a KB-scale
   * mergeable summary instead of re-shuffling raw keys (q94; the HLL
-  * variant in Queries4.q95 trades exactness for fixed-size state).
+  * variant in SqlQueries.q95HllRollup trades exactness for fixed-size state).
   *
   * Three composable pieces:
   *  - [[dailyBitmaps]]: one scan of raw events → (group-cols, bucket)

@@ -1,4 +1,5 @@
 package graft
+package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -6,20 +7,44 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Forks, IndexTombstones, IvfIndex, TableVersions, TermIndex}
 import graft.streaming.IndexPipeline
 
-/** Round-13 oracle query: the INCREMENTAL INDEX TRI-STORE under the
-  * hash gate (q141) — the last spec-only LLM-pipeline component gets an
-  * oracle twin (the q132/q134 "feed-driven must converge to one-shot"
-  * pattern applied to [[IndexPipeline.followCorpus]]).
+/** Streaming/index layer: search indexes maintained from a versioned
+  * table's change feed and checked against a one-shot rebuild (q141), and
+  * Bloom-index point lookups over a file manifest (q126).
   */
-object Round13Queries {
+object StreamingQueries {
+  import Tables.t
 
-  private def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
+  lazy val entries: Seq[Query] = Seq(
+    Query("q126_bloom_lookup", q126BloomLookup, Some(q126Sql)),
+    Query("q141_index_follow", q141IndexFollow, Some(q141Sql), late = true)
+  )
+
+  /** Bloom-index POINT LOOKUPS ([[graft.operators.FileManifest
+    * .collectBloom]]/`pointLookup`): build the per-file bloom index
+    * over orders once, then resolve a handful of point keys — present
+    * ones and absent ones — through it. The result must equal the
+    * oracle's plain `WHERE o_orderkey IN (...)`: blooms may admit
+    * false-positive FILES, never wrong ROWS (the exact filter runs on
+    * the admitted files), and absent keys return nothing.
+    */
+  def q126BloomLookup(spark: SparkSession, dir: String): DataFrame = {
+    val keys = Seq(7L, 355L, 1952L, 4000L, 999999999L) // last: absent at every SF
+    val bloom = graft.operators.FileManifest
+      .collectBloom(spark, s"$dir/orders.parquet", "o_orderkey", 200000L)
+      .persist()
+    val out = keys.map { k =>
+      graft.operators.FileManifest.pointLookup(spark, bloom, "o_orderkey", lit(k))
+        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+    }.reduce(_ unionAll _)
+    val res = graft.CacheScope.trackCheckpoint(out.localCheckpoint(true))
+    bloom.unpersist(false)
+    res.orderBy("o_orderkey")
   }
+
+  val q126Sql: String =
+    """SELECT o_orderkey, o_orderstatus, o_totalprice
+      |FROM orders WHERE o_orderkey IN (7, 355, 1952, 4000, 999999999)
+      |ORDER BY o_orderkey""".stripMargin
 
   /** CDF-FED INDEX MAINTENANCE CONVERGENCE (q141). A versioned corpus
     * table advances through three commits — even ids, odd ids, then a
@@ -55,14 +80,6 @@ object Round13Queries {
         .select(col("vec_id").as("doc_id"),
           col("embedding").cast("array<double>").as("embedding")), "doc_id")
 
-    val phases0 = sys.env.contains("SPARK_GRAFT_PHASES")
-    def phaseT[A](tag: String)(body: => A): A =
-      if (!phases0) body
-      else {
-        val t0 = System.nanoTime()
-        try body
-        finally println(f"QTIME_PHASE q141/$tag ${(System.nanoTime() - t0) / 1e9}%.2f")
-      }
     // the corpus table is maintained by SOMEONE ELSE (appends + a
     // takedown); the indexes follow its change feed
     // one append + one takedown: inserts AND deletes flow through the
@@ -70,45 +87,34 @@ object Round13Queries {
     // pin — q141's convergence compares the three SERVING stores, which
     // the pair logs are not part of, so a second append would only add
     // ~15 jobs of bench cost without widening what the hash certifies)
-    phaseT("appends") {
-      TableVersions.append(spark, roots.corpus, corpus)
-    }
-    phaseT("follow1") {
-      require(IndexPipeline.followCorpus(roots, spark, cents) == Seq(0L),
-        "follow must consume the first corpus version")
-    }
-    phaseT("takedown") {
-      TableVersions.deleteWhere(spark, roots.corpus, col("doc_id") % 10 === 6)
-    }
-    phaseT("follow2") {
-      require(IndexPipeline.followCorpus(roots, spark, cents).size == 1,
-        "catch-up must consume the takedown")
-    }
+    TableVersions.append(spark, roots.corpus, corpus)
+    require(IndexPipeline.followCorpus(roots, spark, cents) == Seq(0L),
+      "follow must consume the first corpus version")
+    TableVersions.deleteWhere(spark, roots.corpus, col("doc_id") % 10 === 6)
+    require(IndexPipeline.followCorpus(roots, spark, cents).size == 1,
+      "catch-up must consume the takedown")
 
     // CONVERGENCE: one-shot rebuild of the same final corpus version
-    def phase[A](tag: String)(body: => A): A = phaseT(tag)(body)
     val oneRoots = IndexPipeline.Roots(s"$base/one")
-    phase("oneshot") {
-      // store-level rebuild: the convergence compares the SERVING
-      // stores (signatures / assignments / postings); the pair logs
-      // are per-batch artifacts a one-shot build has no twin for
-      val fin = TableVersions.read(spark, roots.corpus)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // three independent stores off one persisted corpus — overlap
-        // the builds (Forks scaladoc); outputs are path-disjoint
-        Forks(spark) { forks =>
-          forks.fork("lsh-rebuild")(graft.operators.LshIndex.updateSignatureTable(
-            oneRoots.lshSignatures, fin.select(col("doc_id"), col("text")),
-            "doc_id", "text", portable = true))
-          forks.fork("sem-rebuild")(graft.operators.SemIndex.updateAssignmentTable(
-            oneRoots.semAssignments, fin.select(col("doc_id"), col("embedding")),
-            "doc_id", "embedding", cents))
-          forks.fork("term-rebuild")(TermIndex.updateBatch(oneRoots.term,
-            fin.select(col("doc_id"), col("text")), 0L, "doc_id", "text"))
-        }
-      } finally { fin.unpersist(); () }
-    }
+    // store-level rebuild: the convergence compares the SERVING
+    // stores (signatures / assignments / postings); the pair logs
+    // are per-batch artifacts a one-shot build has no twin for
+    val fin = TableVersions.read(spark, roots.corpus)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // three independent stores off one persisted corpus — overlap
+      // the builds (Forks scaladoc); outputs are path-disjoint
+      Forks(spark) { forks =>
+        forks.fork("lsh-rebuild")(graft.operators.LshIndex.updateSignatureTable(
+          oneRoots.lshSignatures, fin.select(col("doc_id"), col("text")),
+          "doc_id", "text", portable = true))
+        forks.fork("sem-rebuild")(graft.operators.SemIndex.updateAssignmentTable(
+          oneRoots.semAssignments, fin.select(col("doc_id"), col("embedding")),
+          "doc_id", "embedding", cents))
+        forks.fork("term-rebuild")(TermIndex.updateBatch(oneRoots.term,
+          fin.select(col("doc_id"), col("text")), 0L, "doc_id", "text"))
+      }
+    } finally { fin.unpersist(); () }
     // store equality as ORDER-INSENSITIVE multiset row hashes (sum of
     // per-row xxhash64 + count): two scans per store, no shuffle join —
     // exceptAll both ways would shuffle millions of posting rows six
@@ -120,32 +126,30 @@ object Round13Queries {
         count(lit(1)).as("n")).head()
       (Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO), r.getLong(1))
     }
-    phase("converge") {
-      // the six signature scans are independent read-only aggregates
-      // over disjoint stores — run them concurrently (Forks scaladoc) and
-      // compare after the join point
-      val legs: Seq[(String, DataFrame, DataFrame)] = Seq(
-        ("LSH signatures",
-          IndexTombstones.filterLive(spark.read.parquet(roots.lshSignatures),
-            roots.lshSignatures, "doc_id").drop("batch_id"),
-          spark.read.parquet(oneRoots.lshSignatures).drop("batch_id")),
-        ("semantic assignments",
-          IndexTombstones.filterLive(spark.read.parquet(roots.semAssignments),
-            roots.semAssignments, "doc_id").drop("batch_id"),
-          spark.read.parquet(oneRoots.semAssignments).drop("batch_id")),
-        ("BM25 postings",
-          spark.read.parquet(s"${roots.term}/postings").drop("batch_id")
-            .join(spark.read.parquet(s"${roots.term}/deletes").select(col("doc_id")),
-              Seq("doc_id"), "left_anti"),
-          spark.read.parquet(s"${oneRoots.term}/postings").drop("batch_id")))
-      val sigs = Forks(spark) { forks =>
-        legs.map { case (_, a, b) =>
-          (forks.fork("sig-incremental")(multisetSig(a)), forks.fork("sig-oneshot")(multisetSig(b)))
-        }.map { case (a, b) => (a.join(), b.join()) }
-      }
-      legs.zip(sigs).foreach { case ((what, _, _), (a, b)) =>
-        require(a == b, s"q141: incremental $what diverged from the one-shot rebuild")
-      }
+    // the six signature scans are independent read-only aggregates
+    // over disjoint stores — run them concurrently (Forks scaladoc) and
+    // compare after the join point
+    val legs: Seq[(String, DataFrame, DataFrame)] = Seq(
+      ("LSH signatures",
+        IndexTombstones.filterLive(spark.read.parquet(roots.lshSignatures),
+          roots.lshSignatures, "doc_id").drop("batch_id"),
+        spark.read.parquet(oneRoots.lshSignatures).drop("batch_id")),
+      ("semantic assignments",
+        IndexTombstones.filterLive(spark.read.parquet(roots.semAssignments),
+          roots.semAssignments, "doc_id").drop("batch_id"),
+        spark.read.parquet(oneRoots.semAssignments).drop("batch_id")),
+      ("BM25 postings",
+        spark.read.parquet(s"${roots.term}/postings").drop("batch_id")
+          .join(spark.read.parquet(s"${roots.term}/deletes").select(col("doc_id")),
+            Seq("doc_id"), "left_anti"),
+        spark.read.parquet(s"${oneRoots.term}/postings").drop("batch_id")))
+    val sigs = Forks(spark) { forks =>
+      legs.map { case (_, a, b) =>
+        (forks.fork("sig-incremental")(multisetSig(a)), forks.fork("sig-oneshot")(multisetSig(b)))
+      }.map { case (a, b) => (a.join(), b.join()) }
+    }
+    legs.zip(sigs).foreach { case ((what, _, _), (a, b)) =>
+      require(a == b, s"q141: incremental $what diverged from the one-shot rebuild")
     }
 
     // the certified result: ranked retrieval SERVED FROM the

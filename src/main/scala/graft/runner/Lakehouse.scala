@@ -186,12 +186,21 @@ final class Lakehouse(spark: SparkSession, root: String, cfg: Config = Config.de
 
   /** `b<batchId>`, the sorted dates one per line, then `#<count>`,
     * replaced whole ([[Replace.file]]). A marker that fails its checksum
-    * or whose last line is not its date count reads as lost.
+    * or whose last line is not its date count reads as lost. The first
+    * write sweeps the per-batch `b<batchId>.dates` markers (and their
+    * checksums) that tables refreshed before the one marker still hold.
     */
-  private def writeAffectedMarker(batchId: Long, dates: Seq[java.sql.Date]): Unit =
-    Replace.file(spark.sparkContext.hadoopConfiguration, affectedMarkerPath)(
+  private def writeAffectedMarker(batchId: Long, dates: Seq[java.sql.Date]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = affectedMarkerPath.getFileSystem(conf)
+    // a checksummed file system deletes each marker's checksum with it
+    if (!fs.exists(affectedMarkerPath))
+      Option(fs.globStatus(new Path(factRoot, "_refresh/b*.dates")))
+        .foreach(_.foreach(st => fs.delete(st.getPath, false)))
+    Replace.file(conf, affectedMarkerPath)(
       _.write((s"b$batchId" +: dates.map(_.toString).sorted :+ s"#${dates.size}")
         .mkString("", "\n", "\n").getBytes("UTF-8")))
+  }
 
   /** (batch id, dates) of the marker, if it is there and whole. */
   private def readAffectedMarker(): Option[(Long, Seq[java.sql.Date])] = {

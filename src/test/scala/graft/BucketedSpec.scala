@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.etl.Etl
+import graft.queries.PipelineQueries
 import graft.runner.BucketedLakehouse
 
 /** Bucketed co-located joins: same results as the unbucketed path, and
@@ -23,7 +24,7 @@ class BucketedSpec extends SparkSpec {
       // plan canonically equal to the globally cached fact → the cache
       // manager would swap in InMemoryRelation and erase the joins this
       // test asserts on.
-      val e = HealthcareQueries.enrichedFresh(spark, 3000).cache()
+      val e = PipelineQueries.enrichedFresh(spark, 3000).cache()
       val lake = new BucketedLakehouse(spark, "graft_bucketed_test", buckets = 4)
       lake.writeProcessed(Etl.routeVitals(e), Etl.routeClaims(e), Etl.routeEhr(e))
 

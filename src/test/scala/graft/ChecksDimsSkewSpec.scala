@@ -6,6 +6,7 @@ import graft.analytics.DataChecks
 import graft.marts.Dimensions
 import graft.model.Config
 import graft.operators.{IvfIndex, Skew, VectorOps}
+import graft.queries.PipelineQueries
 
 /** Data checks, dimension models, skew primitives, IVF ANN. */
 class ChecksDimsSkewSpec extends SparkSpec {
@@ -48,7 +49,7 @@ class ChecksDimsSkewSpec extends SparkSpec {
   }
 
   test("data checks: processed suite passes on generated pipeline output") {
-    val e = HealthcareQueries.enriched(spark, 2000).cache()
+    val e = PipelineQueries.enriched(spark, 2000).cache()
     val results = DataChecks.processedSuite(
       graft.etl.Etl.routeVitals(e), graft.etl.Etl.routeClaims(e), graft.etl.Etl.routeEhr(e))
     assert(results.nonEmpty)

@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.Etl
 import graft.marts.FactPatientEncounters
 import graft.model.Config
+import graft.queries.PipelineQueries
 import graft.staging.Staging
 
 /** The fact mart computes `encounter_metrics` row by row instead of the
@@ -214,7 +215,7 @@ class FactGrainSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("build equals the GROUP BY formulation end to end, on adversarial and generated input") {
     val (v, c, e) = adversarial()
-    val gen = HealthcareQueries.enrichedFresh(spark, 2000).cache()
+    val gen = PipelineQueries.enrichedFresh(spark, 2000).cache()
     try {
       val generated = (Etl.routeVitals(gen).transform(Staging.stgPatientVitals(cfg)),
         Etl.routeClaims(gen).transform(Staging.stgInsuranceClaims(cfg)),
@@ -236,7 +237,7 @@ class FactGrainSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("fact plan: no Expand, no aggregate, and the same shuffles under the joins") {
-    val gen = HealthcareQueries.enrichedFresh(spark, 3000).cache()
+    val gen = PipelineQueries.enrichedFresh(spark, 3000).cache()
     val (v, c, e) = (Etl.routeVitals(gen).transform(Staging.stgPatientVitals(cfg)),
       Etl.routeClaims(gen).transform(Staging.stgInsuranceClaims(cfg)),
       Etl.routeEhr(gen).transform(Staging.stgEhrRecords(cfg)))

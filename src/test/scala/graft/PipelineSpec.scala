@@ -7,6 +7,7 @@ import graft.analytics.Reports
 import graft.etl.Etl
 import graft.gen.HealthcareGenerator
 import graft.model.Config
+import graft.queries.PipelineQueries
 import graft.streaming.StreamingEtl
 
 /** Generator determinism, report gates, streaming≡batch equivalence (R4),
@@ -32,7 +33,7 @@ class PipelineSpec extends SparkSpec {
   test("report gates: healthy pipeline raises no freshness/health alerts") {
     val enriched = gen.messagesJson(spark, 3000).toDF("value").transform(Etl.pipeline(cfg))
     val vitals = Etl.routeVitals(enriched)
-    val fact = HealthcareQueries.factEncounters(spark, 3000)
+    val fact = PipelineQueries.factEncounters(spark, 3000)
     val alerts = Reports.evaluateGates(cfg)(vitals, fact)
     assert(!alerts.exists(_.check == "freshness"))
     assert(!alerts.exists(_.check == "health"))

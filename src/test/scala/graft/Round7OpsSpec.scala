@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Compaction, Sampling, TextAnalysis}
+import graft.queries.VectorQueries
 
 /** Round-7 operator additions: compaction planner, repetition quality
   * filter, fixed-quota sampling, ANN recall eval.
@@ -198,7 +199,7 @@ class Round7OpsSpec extends SparkSpec {
 
   // -------------------------------------------------------- ANN recall
   test("q124 plan: anchors broadcast, corpus never shuffled before the rank windows") {
-    val plan = ExtQueries.q124ContrastiveTriplets(spark, "/root/testdata/sf0.001")
+    val plan = VectorQueries.q124ContrastiveTriplets(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
       s"anchor side must broadcast:\n$plan")
@@ -206,7 +207,7 @@ class Round7OpsSpec extends SparkSpec {
   }
 
   test("q119 ANN recall: per-query recall in [0,1], one row per exact query, exact self-recall is 1") {
-    val rows = ExtQueries.q119AnnRecall(spark, "/root/testdata/sf0.001").collect()
+    val rows = VectorQueries.q119AnnRecall(spark, "/root/testdata/sf0.001").collect()
     assert(rows.length === 5)
     rows.foreach { r =>
       val recall = r.getDouble(2)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.queries.VectorQueries
+
 /** Round-7 plan + layout pins.
   *
   * 1. EVENTS LAYOUT REGRESSION GUARD: the driver has shipped three
@@ -108,7 +110,7 @@ class Round7PlanSpec extends SparkSpec {
   }
 
   test("q115 hybrid retrieval: both legs broadcast their query side, no data-side cartesian") {
-    val df = ExtQueries.q115HybridRetrieval(spark, "/root/testdata/sf0.001")
+    val df = VectorQueries.q115HybridRetrieval(spark, "/root/testdata/sf0.001")
     val plan = formatted(df)
     assert(!plan.contains("CartesianProduct"),
       s"hybrid retrieval must never pair corpus x corpus:\n$plan")

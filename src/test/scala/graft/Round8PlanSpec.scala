@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import graft.queries.PipelineQueries
+
 /** Round-8 plan pins: q127's fact-grain twin must keep the fact's
   * documented plan shape — both band joins and both proximity windows
   * cluster on `user_id`, so the whole J1 → W1 → J2 → W2 chain runs on
@@ -16,7 +18,7 @@ class Round8PlanSpec extends SparkSpec {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
   test("q127 plan: no cartesian; one user-side exchange feeds both windows") {
-    val plan = formatted(Round8Queries.q127FactGrainTwin(spark, "/root/testdata/sf0.001"))
+    val plan = formatted(PipelineQueries.q127FactGrainTwin(spark, "/root/testdata/sf0.001"))
     assert(!plan.contains("CartesianProduct"), "band joins must stay equi-joins with residuals")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "band joins must keep their equi key")
     // two Window nodes (click_rank, view_rank) ...

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sampling
+import graft.queries.SqlQueries
 
 /** Sampling operators (stable splits, stratified) and the HLL
   * approximate-distinct sketch against its exact twin.
@@ -86,9 +87,9 @@ class SamplingHllSpec extends SparkSpec {
     // estimate vs the hash-certified exact bitmap rollup (q94), per
     // (week, event_type) group, on the real sf0.1 events table.
     val dir = "/root/testdata/sf0.1"
-    val exact = Queries4.q94BitmapDistinct(spark, dir)
+    val exact = SqlQueries.q94BitmapDistinct(spark, dir)
       .collect().map(r => (r.getDate(0), r.getString(1)) -> r.getLong(2)).toMap
-    val est = Queries4.q95HllRollup(spark, dir)
+    val est = SqlQueries.q95HllRollup(spark, dir)
       .collect().map(r => (r.getDate(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(est.keySet == exact.keySet, "HLL and bitmap rollups must cover the same groups")
     exact.foreach { case (k, n) =>

@@ -19,7 +19,7 @@ class SemIndexSpec extends SparkSpec {
   private val cents = IvfIndex.frozenCentroids(16, 64).map { case (c, a) => (c.toLong, a) }
 
   /** The q100 corpus: real sf0.001 embeddings plus the same planted
-    * +0.01 near-dup twins (ExtQueries.q100SemDedup), twins sliced into
+    * +0.01 near-dup twins (DedupQueries.q100SemDedup), twins sliced into
     * LATER batches so cross-batch edges genuinely occur.
     */
   private def corpus(): Seq[(Long, Array[Double])] = {

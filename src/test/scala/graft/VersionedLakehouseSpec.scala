@@ -272,6 +272,22 @@ class VersionedLakehouseSpec extends SparkSpec {
     }
   }
 
+  test("the first refresh sweeps the per-batch markers older tables still hold") {
+    val g = gen
+    val lake = new Lakehouse(spark,
+      java.nio.file.Files.createTempDirectory("vlake_sweep_").toString, cfg)
+    lake.runEtl(g.messagesJson(spark, 600).toDF("value"), batchId = 0L)
+    lake.buildFact()
+    val dir = java.nio.file.Paths.get(lake.factRoot, "_refresh")
+    java.nio.file.Files.createDirectories(dir)
+    for (b <- Seq("b1", "b2")) {
+      java.nio.file.Files.write(dir.resolve(s"$b.dates"), s"2026-08-01\n".getBytes("UTF-8"))
+      java.nio.file.Files.write(dir.resolve(s".$b.dates.crc"), Array[Byte](0))
+    }
+    lake.refreshFactIncremental(g.messagesJson(spark, 300, offset = 600).toDF("value"), batchId = 3L)
+    assert(new java.io.File(dir.toString).list().toSeq.sorted === Seq(".last.dates.crc", "last.dates"))
+  }
+
   test("one affected-dates marker: the last batch replays from it, an older batch recomputes and commits nothing") {
     val g = gen
     val lake = new Lakehouse(spark,
