@@ -1626,8 +1626,7 @@ object TableVersions {
     * to what [[tryRenderDelta]] would have produced from full states:
     * files = base.filterNot(removes) ++ adds, a removed file's DV dies
     * with it, absent scalar sections inherit. Every Nth version still
-    * drops a checkpoint — the ONE amortized O(#files) materialization
-    * a big table's write path keeps.
+    * drops a checkpoint ([[checkpointAfterCommit]]).
     */
   private def tryCommitDelta(spark: SparkSession, root: String, v: Long,
       baseV: Long, adds: Seq[FileEntry], removes: Set[String] = Set.empty,
@@ -1645,35 +1644,10 @@ object TableVersions {
         txnDelta, op, cdf), ict))
     if (ok) {
       lastInstant.put(root, (v, ict))
-      val k = checkpointInterval(spark)
-      if (k > 0 && v > 0 && (v % k == 0 || ckptPending.contains(root))) {
-        // big tables: author the checkpoint INCREMENTALLY as a
-        // distributed job over the previous checkpoint + this tail —
-        // never materializing the O(#files) listing on the driver; a
-        // table crossing the threshold before its FIRST checkpoint
-        // authors from the delta chain's own commit text instead
-        if (writeCheckpointIncremental(spark, root, v) ||
-          writeCheckpointFirstDistributed(spark, root, v)) { ckptPending.remove(root); () }
-        else readCommitState(spark, root, v) match {
-          // a failed/skipped checkpoint is OBSERVABLE and RETRIED at the
-          // very next commit, not silently deferred to the next v%k==0 —
-          // repeated silent skips would let the delta tail grow unboundedly
-          case Some(st) => writeCheckpoint(spark, root, v, st); ckptPending.remove(root); ()
-          case None => ckptSkips.incrementAndGet(); ckptPending.add(root); ()
-        }
-      }
+      checkpointAfterCommit(spark, root, v, None)
     }
     ok
   }
-
-  /** Checkpoint attempts skipped because the just-committed state could
-    * not be reconstructed at that instant (transient FS hiccup) —
-    * observability for an otherwise best-effort step; pairs with the
-    * next-commit retry above.
-    */
-  private[graft] val ckptSkips = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val ckptPending =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The raw DELTA commits covering (planV, baseV], oldest-first — the
     * pushed writer's conflict-check window: O(interleaved commits),
@@ -1828,9 +1802,9 @@ object TableVersions {
 
   /** Write commit `v` (incremental against `base` when expressible) and
     * promote it atomically through the scheme's [[LogStore]]. On
-    * success, every Nth commit also drops a CHECKPOINT (see
-    * [[writeCheckpoint]]) so readers reconstruct any version from one
-    * checkpoint + a bounded delta tail.
+    * success, every Nth commit also drops a CHECKPOINT of `st` (see
+    * [[checkpointAfterCommit]]) so readers reconstruct any version from
+    * one checkpoint + a bounded delta tail.
     */
   private[graft] def tryCommit(spark: SparkSession, root: String, v: Long, st: CommitState,
       base: Option[(Long, CommitState)] = None, op: String = "",
@@ -1844,7 +1818,7 @@ object TableVersions {
       stampTs(renderCommit(root, st, base, op, cdf), ict))
     if (ok) {
       lastInstant.put(root, (v, ict))
-      maybeCheckpoint(spark, root, v, st)
+      checkpointAfterCommit(spark, root, v, Some(st))
     }
     ok
   }
@@ -1857,11 +1831,41 @@ object TableVersions {
   private def checkpointInterval(spark: SparkSession): Int =
     spark.conf.get("graft.table.checkpointInterval", "10").toInt
 
-  private def maybeCheckpoint(spark: SparkSession, root: String, v: Long,
-      st: CommitState): Unit = {
+  /** THE POST-COMMIT CHECKPOINT STEP of both commit primitives. When
+    * version `v` is due (every [[checkpointInterval]]th) or an earlier
+    * due checkpoint of the table failed, write one: from the caller's
+    * in-hand state when it has one, else from the log — the
+    * distributed author ([[writeCheckpointFromLog]]) at or above
+    * [[parquetCheckpointThreshold]], the driver render of the
+    * materialized state below it. A failure is counted (`ckptSkips`)
+    * and retried at the table's very next commit, whichever primitive
+    * makes it, not deferred to the next due version — repeated silent
+    * skips would let the delta tail grow unboundedly. The commit has
+    * already promoted: a checkpoint is a read-optimization sidecar.
+    */
+  private def checkpointAfterCommit(spark: SparkSession, root: String, v: Long,
+      inHand: Option[CommitState]): Unit = {
     val k = checkpointInterval(spark)
-    if (k > 0 && v > 0 && v % k == 0) writeCheckpoint(spark, root, v, st)
+    if (k > 0 && v > 0 && (v % k == 0 || ckptPending.contains(root))) {
+      val placed = inHand match {
+        case Some(st) => writeCheckpoint(spark, root, v, st)
+        case None => writeCheckpointFromLog(spark, root, v).getOrElse(
+          readCommitState(spark, root, v).exists(writeCheckpoint(spark, root, v, _)))
+      }
+      if (placed) ckptPending.remove(root)
+      else { ckptSkips.incrementAndGet(); ckptPending.add(root) }
+      ()
+    }
   }
+
+  /** Due checkpoints that failed or whose state could not be
+    * reconstructed at that instant (transient FS hiccup) —
+    * observability for a best-effort step; each is retried at the
+    * table's next commit ([[checkpointAfterCommit]]).
+    */
+  private[graft] val ckptSkips = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val ckptPending =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** File-count threshold above which checkpoints store their listing
     * as a PARQUET dataset (`v<N>.ckptpq/`, format major 4) instead of
@@ -1874,139 +1878,55 @@ object TableVersions {
   private def parquetCheckpointThreshold(spark: SparkSession): Int =
     spark.conf.get("graft.table.parquetCheckpointThreshold", "50000").toInt
 
+  /** Put `v<N>.ckptpq` in place: `rows` written to a temp dir renamed
+    * over, unless the dataset already stands (a raced twin's, or an
+    * earlier attempt's whose text never landed). True when it stands.
+    */
+  private def placeCkptPq(spark: SparkSession, root: String, v: Long)(
+      rows: => org.apache.spark.sql.Dataset[CkptFileRow]): Boolean = {
+    val f = fs(spark, root)
+    val target = new Path(versionsDir(root), s"v$v.ckptpq")
+    f.exists(target) || {
+      val tmp = new Path(versionsDir(root), s".tmp-ckptpq-${java.util.UUID.randomUUID()}")
+      rows.write.options(WriteOpts.marker).parquet(tmp.toString)
+      f.rename(tmp, target) || { f.delete(tmp, true); f.exists(target) }
+    }
+  }
+
   /** Stage the parquet listing for a checkpoint of `st` at version `v`:
     * one row per file entry (order-preserving `idx`, partition values,
-    * stats, inlined DV reference), written to a temp dir and renamed
-    * to `v<N>.ckptpq`. Returns the [[PqRef]] (name, row count, scalar
-    * totals) on success, None on ANY failure (the caller then writes
-    * the self-contained text form — parquet checkpoints are an
-    * optimization, never a correctness dependency).
+    * stats, inlined DV reference). Returns the [[PqRef]] (name, row
+    * count, scalar totals) on success, None on ANY failure (the caller
+    * then writes the self-contained text form — parquet checkpoints are
+    * an optimization, never a correctness dependency).
     */
   private def writeCheckpointParquet(spark: SparkSession, root: String, v: Long,
       st: CommitState): Option[PqRef] =
     try {
       import spark.implicits._
-      val f = fs(spark, root)
-      val name = s"v$v.ckptpq"
-      val target = new Path(versionsDir(root), name)
-      val ref = PqRef(name, st.files.size.toLong,
+      val ref = PqRef(s"v$v.ckptpq", st.files.size.toLong,
         Some(st.files.map(_.bytes).sum), Some(st.dvs.size.toLong))
-      if (f.exists(target)) return Some(ref)
-      val rows = st.files.zipWithIndex.map { case (fe, i) =>
-        CkptFileRow(i.toLong, relNorm(root, fe.path), fe.bytes, fe.rows, fe.part,
-          fe.stats.map { case (c, s) =>
-            c -> CkptStatsRow(s.minNum, s.maxNum, s.minStr, s.maxStr, s.nulls) },
-          st.dvs.get(fe.path).map(d => relNorm(root, d._1)),
-          st.dvs.get(fe.path).map(_._2))
-      }
-      val tmp = new Path(versionsDir(root), s".tmp-ckptpq-${java.util.UUID.randomUUID()}")
-      // parallelize (not createDataset of a local Seq) so the encode and
-      // write distribute; ~100k entries per output file
-      val slices = math.max(1, math.min(32, rows.size / 100000))
-      spark.createDataset(spark.sparkContext.parallelize(rows, slices))
-        .write.options(WriteOpts.marker).parquet(tmp.toString)
-      if (f.rename(tmp, target)) Some(ref)
-      else {
-        f.delete(tmp, true)
-        if (f.exists(target)) Some(ref) else None // raced twin wrote it
-      }
+      Some(ref).filter(_ => placeCkptPq(spark, root, v) {
+        val rows = st.files.zipWithIndex.map { case (fe, i) =>
+          CkptFileRow(i.toLong, relNorm(root, fe.path), fe.bytes, fe.rows, fe.part,
+            fe.stats.map { case (c, s) =>
+              c -> CkptStatsRow(s.minNum, s.maxNum, s.minStr, s.maxStr, s.nulls) },
+            st.dvs.get(fe.path).map(d => relNorm(root, d._1)),
+            st.dvs.get(fe.path).map(_._2))
+        }
+        // parallelize (not createDataset of a local Seq) so the encode and
+        // write distribute; ~100k entries per output file
+        val slices = math.max(1, math.min(32, rows.size / 100000))
+        spark.createDataset(spark.sparkContext.parallelize(rows, slices))
+      })
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Checkpoints authored by the incremental DISTRIBUTED path (vs the
-    * driver render) — the observable [[writeCheckpointIncremental]]'s
-    * spec pins.
-    */
-  private[graft] val ckptIncrementals = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** INCREMENTAL DISTRIBUTED CHECKPOINT AUTHORING (the Delta
-    * incremental-checkpoint architecture, public): derive `v<N>.ckptpq`
-    * from the PREVIOUS parquet checkpoint dataset + the ≤N delta tail
-    * as a distributed job — the base listing is read columnar on
-    * executors, tail removes anti-join away, tail deletion-vector
-    * updates patch in, and the tail's adds append AFTER the base order
-    * (exactly [[DeltaCommit.applyTo]]'s `kept ++ adds` contract, so
-    * [[resolveCkpt]] reconstructs the same state bit-for-bit). This
-    * removes the last O(#files) driver materialization on the write
-    * path: the periodic checkpoint now costs O(delta) driver work +
-    * one metadata-sized distributed job. Returns false — caller falls
-    * back to the materialize-then-render path — when the chain does
-    * not bottom out at a parquet checkpoint or the table is below the
-    * parquet threshold (the driver render IS the right small-table
-    * path).
-    */
-  private def writeCheckpointIncremental(spark: SparkSession, root: String,
-      v: Long): Boolean = try {
-    val f = fs(spark, root)
-    if (f.exists(checkpointPath(root, v))) return true
-    val pqT = parquetCheckpointThreshold(spark)
-    if (pqT <= 0) return false
-    val l = pushedListing(spark, root, Some(v)).getOrElse(return false)
-    if (l.totalFiles < pqT) return false
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, sum, when}
-    val name = s"v$v.ckptpq"
-    val target = new Path(versionsDir(root), name)
-    if (!f.exists(target)) {
-      val base = spark.read.schema(ckptRowSchema).parquet(l.ckptDir)
-      // both sides of every path comparison in the canonical STORED
-      // form ([[relNorm]]): checkpoint rows store it already, the tail
-      // parsed to absolute
-      val removesRel = l.tailRemoves.toSeq.map(p => relNorm(root, p))
-      val dvRel = l.tailDvSets.toSeq.map { case (p, (d, n)) =>
-        (relNorm(root, p), relNorm(root, d), n) }
-      val kept0 =
-        if (removesRel.isEmpty) base
-        else base.join(removesRel.toDF("path"), Seq("path"), "left_anti")
-      val kept =
-        if (dvRel.isEmpty) kept0
-        else kept0.join(dvRel.toDF("path", "__g_dvF", "__g_dvN"), Seq("path"), "left_outer")
-          .withColumn("dvRows",
-            when(col("__g_dvF").isNotNull, col("__g_dvN")).otherwise(col("dvRows")))
-          .withColumn("dvFile", coalesce(col("__g_dvF"), col("dvFile")))
-          .drop("__g_dvF", "__g_dvN")
-      // adds keep commit order AFTER every base row: idx from the base's
-      // max (one single-column columnar job)
-      val maxIdx =
-        if (l.tailAdds.isEmpty) 0L
-        else Option(base.agg(max("idx")).head().get(0)).fold(-1L)(_.asInstanceOf[Long])
-      val addRows = l.tailAdds.zipWithIndex.map { case (fe, i) =>
-        CkptFileRow(maxIdx + 1 + i, relNorm(root, fe.path), fe.bytes, fe.rows, fe.part,
-          fe.stats.map { case (c, s) =>
-            c -> CkptStatsRow(s.minNum, s.maxNum, s.minStr, s.maxStr, s.nulls) },
-          l.tailDvSets.get(fe.path).map(d => relNorm(root, d._1)),
-          l.tailDvSets.get(fe.path).map(_._2))
-      }
-      val cols = ckptRowSchema.fieldNames.map(col).toSeq
-      val outDs = kept.select(cols: _*)
-        .unionByName(spark.createDataset(addRows).select(cols: _*))
-      val tmp = new Path(versionsDir(root), s".tmp-ckptpq-${java.util.UUID.randomUUID()}")
-      outDs.write.options(WriteOpts.marker).parquet(tmp.toString)
-      if (!f.rename(tmp, target)) {
-        f.delete(tmp, true)
-        if (!f.exists(target)) return false // raced twin? absent: give up
-      }
-    }
-    // exact scalar totals from the WRITTEN dataset (distributed,
-    // columnar): the #FILESPQ line must carry the true row count —
-    // resolveCkpt treats a mismatch as an incomplete checkpoint
-    val agg = spark.read.schema(ckptRowSchema).parquet(target.toString)
-      .agg(count(lit(1)), sum("bytes"), count("dvFile")).head()
-    val ref = PqRef(name, agg.getLong(0),
-      Some(if (agg.isNullAt(1)) 0L else agg.getLong(1)), Some(agg.getLong(2)))
-    publishCheckpointText(spark, root, v, renderFullRef(root, l.scalar, ref))
-    ckptIncrementals.incrementAndGet()
-    true
-  } catch { case scala.util.control.NonFatal(_) => false }
-
-  /** Times the DISTRIBUTED FIRST-CHECKPOINT author ran (spec pin). */
-  private[graft] val ckptFirstDistributed = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Stream ONE commit file keeping only its `#` metadata lines: the
     * scalar sections parse through [[parseCommitText]] against an
     * `#END 0` tail, the O(#files) add lines are COUNTED and discarded —
-    * the first-checkpoint walk's driver memory is O(metadata), never
-    * O(#files). None when absent or torn (missing/mismatched `#END`,
-    * content after it).
+    * the log walk's driver memory is O(metadata), never O(#files).
+    * None when absent or torn (missing/mismatched `#END`, content
+    * after it).
     */
   private def scanCommitScalarOnly(f: FileSystem, p: Path): Option[(RawCommit, Long)] =
     try {
@@ -2036,7 +1956,7 @@ object TableVersions {
 
   // (path, mtime, len) → (scalar-only RawCommit, add-line count): the
   // scalar walk re-reads the same immutable commit files every append
-  // until the first checkpoint lands — a bulk-load commit's text is
+  // until the next checkpoint lands — a bulk-load commit's text is
   // tens of MB, so the stream is paid once per file, not per append
   private val scalarScanCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, Long, Long), (RawCommit, Long)](64, 0.75f, true) {
@@ -2053,199 +1973,185 @@ object TableVersions {
     v
   }
 
-  /** Version `v`'s SCALAR state (schema, partition columns, checks,
-    * txns, props, dropped — `files`/`dvs` EMPTY by construction),
-    * reconstructed without ever parsing an add line: walk the chain
-    * down to the nearest full commit or checkpoint through
-    * [[scanCommitScalarOnly]] (streamed, `#` lines only) and fold the
-    * scalar sections forward. This is what lets a BULK-LOADED table's
-    * appends commit O(delta) BEFORE its first parquet checkpoint
-    * exists — the append path needs exactly this scalar state, and
-    * materializing 200k file entries to read a schema was the last
-    * bootstrap-path O(#files) driver cost. None when any link is
-    * missing/torn, the walk exceeds a sanity bound (checkpoint cadence
-    * bounds real chains), or a filesPq checkpoint text is unreadable.
+  /** The log of one version down to its nearest BASE, read scalar-only:
+    * the base's version and file — a parquet checkpoint whose dataset
+    * stands, an inline text checkpoint, or the bottom full commit — its
+    * scalar parse and listing size, and the delta links above it,
+    * oldest first, each as (version, commit, add-line count).
     */
-  private def scalarStateAt(spark: SparkSession, root: String,
-      v: Long): Option[CommitState] = {
-    val f = fs(spark, root)
-    var links = List.empty[RawCommit] // oldest-first when done
-    var cur = v
-    var bottom: CommitState = null
-    var steps = 0
-    while (bottom == null) {
-      steps += 1
-      if (steps > 512) return None // unbounded chain: materialized path decides
-      val fromCkpt =
-        if (cur == v) None // the target's own checkpoint may not exist yet
-        else scanCommitScalarOnlyCached(f, checkpointPath(root, cur)).collect {
-          case (fc: FullCommit, _) => fc.st.copy(files = Seq.empty, dvs = Map.empty)
-        }
-      fromCkpt match {
-        case Some(st) => bottom = st
-        case None =>
-          scanCommitScalarOnlyCached(f, commitPath(root, cur)) match {
-            case Some((fc: FullCommit, _)) =>
-              bottom = fc.st.copy(files = Seq.empty, dvs = Map.empty)
-            case Some((d: DeltaCommit, _)) =>
-              if (d.base >= cur) return None
-              links ::= d
-              cur = d.base
-            case _ => return None
-          }
-      }
-    }
-    var scalar = bottom
-    links.foreach { case d: DeltaCommit =>
-      scalar = d.applyTo(scalar).copy(files = Seq.empty, dvs = Map.empty)
-    case _ => () }
-    Some(scalar)
+  private final case class LogTail(base: Long, baseFile: Path, baseCommit: FullCommit,
+      baseFiles: Long, links: List[(Long, DeltaCommit, Long)]) {
+    /** Upper bound on the version's file count (removes not subtracted). */
+    def files: Long = baseFiles + links.iterator.map(_._3).sum
+    /** The version's state without its listing: the scalar sections and
+      * the DV map, folded forward by [[DeltaCommit.applyTo]] (a parquet
+      * base's own DVs ride its rows, so there the map is the tail's).
+      */
+    lazy val state: CommitState =
+      links.foldLeft(baseCommit.st) { case (s, (_, d, _)) => d.applyTo(s) }
   }
 
-  /** DISTRIBUTED FIRST CHECKPOINT: a bulk-loaded table that crosses the
-    * parquet threshold BEFORE its first checkpoint has no prior ckptpq
-    * for [[writeCheckpointIncremental]] to extend — but its delta chain
-    * down to the bottom full commit already holds every add as commit
-    * text, which IS the distributed input a first-checkpoint job needs.
-    * The driver walks the chain SCALAR-ONLY (`#` lines streamed out,
-    * add lines counted and discarded — O(metadata) memory), folds the
-    * scalar state / removes / DV map exactly as [[DeltaCommit.applyTo]]
-    * does, and one Spark job parses each commit's add lines on
-    * executors ([[FirstCkptScan]]), applies the survivor rule
-    * relationally (an add survives iff no LATER commit removes its
-    * path — `applyTo`'s `filterNot(removes) ++ adds` fold, expressed
-    * per-row), restores the fold's exact order by (commit, position),
-    * and writes the ckptpq dataset. Zero O(#files) driver
-    * materializations, bit-identical reconstruction.
-    *
-    * Returns false — caller falls back to the materialize-then-render
-    * path — when any chain link is missing/torn, a prior checkpoint
-    * sidecar exists below `v` (the incremental/driver paths own that
-    * shape), or the table is below the parquet threshold.
+  /** THE SCALAR LOG WALK: version `v`'s [[LogTail]], walking the chain
+    * down through [[scanCommitScalarOnlyCached]] (streamed, `#` lines
+    * only — no add line is ever parsed on the driver). `v`'s own
+    * checkpoint is never its base (it may not exist yet). None when any
+    * link is missing/torn, or the walk exceeds a sanity bound (the
+    * checkpoint cadence bounds real chains): the materialized path
+    * decides.
     */
-  private def writeCheckpointFirstDistributed(spark: SparkSession, root: String,
-      v: Long): Boolean = try {
+  private def logTail(spark: SparkSession, root: String, v: Long): Option[LogTail] = {
     val f = fs(spark, root)
-    if (f.exists(checkpointPath(root, v))) return true
-    val pqT = parquetCheckpointThreshold(spark)
-    if (pqT <= 0) return false
-    // scalar-only chain walk v → bottom FULL commit
-    var links = List.empty[(Long, RawCommit, Long)] // oldest-first when done
+    var links = List.empty[(Long, DeltaCommit, Long)]
     var cur = v
-    var bottom = false
-    while (!bottom) {
-      if (cur < v && f.exists(checkpointPath(root, cur)))
-        return false // not the FIRST checkpoint: other authors own this
-      val (rc, n) = scanCommitScalarOnly(f, commitPath(root, cur)).getOrElse(return false)
-      links ::= ((cur, rc, n))
-      rc match {
-        case d: DeltaCommit =>
-          if (d.base >= cur) return false
-          cur = d.base
-        case _: FullCommit => bottom = true
+    var steps = 0
+    while (steps < 512) {
+      steps += 1
+      val ck = checkpointPath(root, cur)
+      val fromCkpt = if (cur == v) None else scanCommitScalarOnlyCached(f, ck).collect {
+        case (fc: FullCommit, n) if fc.filesPq.forall(r =>
+            f.exists(new Path(new Path(versionsDir(root), r.name), "_SUCCESS"))) =>
+          LogTail(cur, ck, fc, fc.filesPq.fold(n)(_.count), links)
+      }
+      if (fromCkpt.isDefined) return fromCkpt
+      scanCommitScalarOnlyCached(f, commitPath(root, cur)) match {
+        case Some((fc: FullCommit, n)) => return Some(LogTail(cur, commitPath(root, cur), fc, n, links))
+        case Some((d: DeltaCommit, n)) if d.base < cur => links ::= ((cur, d, n)); cur = d.base
+        case _ => return None
       }
     }
-    if (links.iterator.map(_._3).sum < pqT) return false // small: driver render is right
-    // exact scalar / remove / DV folds, all O(metadata)
-    var scalar: CommitState = null
-    var dvs = Map.empty[String, (String, Long)]
-    var rmMax = Map.empty[String, Long]
-    links.foreach {
-      case (_, fc: FullCommit, _) =>
-        scalar = fc.st.copy(files = Seq.empty, dvs = Map.empty)
-        dvs = fc.st.dvs
-      case (ver, d: DeltaCommit, _) =>
-        scalar = d.applyTo(scalar).copy(files = Seq.empty, dvs = Map.empty)
-        dvs = (dvs -- d.removes) ++ d.dvSets
-        d.removes.foreach(p => rmMax += p -> math.max(ver, rmMax.getOrElse(p, Long.MinValue)))
-    }
+    None
+  }
+
+  /** Version `v`'s SCALAR state (schema, partition columns, checks,
+    * txns, props, dropped — `files`/`dvs` EMPTY by construction) from
+    * [[logTail]]. This is what lets a BULK-LOADED table's appends
+    * commit O(delta) BEFORE its first parquet checkpoint exists — the
+    * append path needs exactly this scalar state, never the listing.
+    */
+  private def scalarStateAt(spark: SparkSession, root: String,
+      v: Long): Option[CommitState] =
+    logTail(spark, root, v).map(_.state.copy(dvs = Map.empty))
+
+  /** Checkpoints written by [[writeCheckpointFromLog]] (spec pin). */
+  private[graft] val ckptDistributed = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** THE DISTRIBUTED CHECKPOINT AUTHOR (the Delta incremental-checkpoint
+    * architecture): version `v`'s `v<N>.ckptpq` as ONE Spark job over
+    * its log ([[logTail]]), the O(#files) listing never on the
+    * driver. Its rows are the BASE's — a parquet checkpoint's dataset,
+    * each row keyed (ver = base, pos = idx); an inline text
+    * checkpoint's or the bottom full commit's add lines — plus every
+    * later link's add lines, keyed (link version, position); add lines
+    * parse on executors ([[CkptAddScan]]). THE SURVIVOR RULE is
+    * [[DeltaCommit.applyTo]]'s `filterNot(removes) ++ adds`, per row: a
+    * row survives unless a LATER link removes its path. DVs patch in
+    * from the tail's fold (a parquet base row keeps its inline
+    * reference unless the tail sets one), and sorting by (ver, pos)
+    * restores `applyTo`'s order, so [[resolveCkpt]] reconstructs the
+    * chain fold exactly.
+    *
+    * [[pushedListing]] keeps its own walk: a pushed read plans the
+    * tail's adds on the driver, and this walk never parses them. None
+    * when the log is unreadable or below [[parquetCheckpointThreshold]]
+    * (the driver render is the small-table path); else whether the
+    * checkpoint is in place (false on any failure, the walk's included).
+    */
+  private[graft] def writeCheckpointFromLog(spark: SparkSession, root: String,
+      v: Long): Option[Boolean] = try {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
+    val pqT = parquetCheckpointThreshold(spark)
     val name = s"v$v.ckptpq"
-    val target = new Path(versionsDir(root), name)
-    if (!f.exists(target)) {
-      val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      val specs = links.map { case (ver, _, _) => (ver, commitPath(root, ver).toString) }
-      val parsed = spark.createDataset(specs)
-        .repartition(math.max(1, math.min(64, specs.size)))
-        .flatMap { case (ver, p) => FirstCkptScan.addRows(hconf.value, ver, p) }
-      val surv =
-        if (rmMax.isEmpty) parsed.toDF()
-        else parsed.toDF()
-          .join(rmMax.toSeq.toDF("path", "__g_rmV"), Seq("path"), "left_outer")
-          .where(col("__g_rmV").isNull || col("__g_rmV") <= col("ver"))
-          .drop("__g_rmV")
-      val withDv =
-        if (dvs.isEmpty) surv
-        else surv.drop("dvFile", "dvRows")
-          .join(dvs.toSeq.map { case (p, (d, n)) => (p, d, n) }
-            .toDF("path", "dvFile", "dvRows"), Seq("path"), "left_outer")
-      val rootLocal = root
-      val sorted = withDv
-        .select("ver", "pos", "path", "bytes", "rows", "part", "stats", "dvFile", "dvRows")
-        .sort(col("ver"), col("pos")).as[FirstAddRow]
-      val rows = sorted.rdd.zipWithIndex().map { case (r, i) =>
-        CkptFileRow(i, FirstCkptScan.rel(rootLocal, r.path), r.bytes, r.rows, r.part,
-          r.stats, r.dvFile.map(FirstCkptScan.rel(rootLocal, _)), r.dvRows)
-      }
-      val tmp = new Path(versionsDir(root), s".tmp-ckptpq-${java.util.UUID.randomUUID()}")
-      spark.createDataset(rows).write.options(WriteOpts.marker).parquet(tmp.toString)
-      if (!f.rename(tmp, target)) {
-        f.delete(tmp, true)
-        if (!f.exists(target)) return false // raced twin? absent: give up
+    (if (pqT > 0) logTail(spark, root, v) else None).filter(_.files >= pqT).map { t =>
+      fs(spark, root).exists(checkpointPath(root, v)) || placeCkptPq(spark, root, v) {
+        val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+        val rootLocal = root
+        val texts = (t.baseCommit.filesPq.fold(Seq((t.base, t.baseFile, t.baseFiles)))(_ => Nil) ++
+          t.links.map { case (ver, _, n) => (ver, commitPath(root, ver), n) })
+          .collect { case (ver, p, n) if n > 0 => (ver, p.toString) }
+        val parsed = spark.createDataset(texts)
+          .repartition(math.max(1, math.min(64, texts.size)))
+          .flatMap { case (ver, p) => CkptAddScan.addRows(hconf.value, rootLocal, ver, p) }
+          .toDF()
+        val rows = t.baseCommit.filesPq.fold(parsed) { ref =>
+          spark.read.schema(ckptRowSchema).parquet(new Path(versionsDir(root), ref.name).toString)
+            .withColumnRenamed("idx", "pos").withColumn("ver", lit(t.base))
+            .unionByName(parsed)
+        }
+        // both sides of every path comparison in the canonical STORED form
+        val rmLast = t.links.flatMap { case (ver, d, _) => d.removes.map(p => relNorm(root, p) -> ver) }
+          .groupMapReduce(_._1)(_._2)(math.max).toSeq
+        val survivors =
+          if (rmLast.isEmpty) rows
+          else rows.join(rmLast.toDF("path", "__g_rmV"), Seq("path"), "left_outer")
+            .where(col("__g_rmV").isNull || col("__g_rmV") <= col("ver"))
+        val dvs = t.state.dvs.toSeq.map { case (p, (d, n)) => (relNorm(root, p), relNorm(root, d), n) }
+        val withDvs =
+          if (dvs.isEmpty) survivors
+          else survivors.join(dvs.toDF("path", "__g_dvF", "__g_dvN"), Seq("path"), "left_outer")
+            .withColumn("dvRows", when(col("__g_dvF").isNotNull, col("__g_dvN")).otherwise(col("dvRows")))
+            .withColumn("dvFile", coalesce(col("__g_dvF"), col("dvFile")))
+        withDvs.drop("__g_rmV", "__g_dvF", "__g_dvN").sort("ver", "pos").as[CkptAddRow]
+          .rdd.zipWithIndex().map { case (r, i) =>
+            CkptFileRow(i, r.path, r.bytes, r.rows, r.part, r.stats, r.dvFile, r.dvRows)
+          }.toDS()
+      } && {
+        // exact scalar totals from the WRITTEN dataset: the #FILESPQ line
+        // must carry the true row count — resolveCkpt treats a mismatch
+        // as an incomplete checkpoint
+        val agg = spark.read.schema(ckptRowSchema).parquet(new Path(versionsDir(root), name).toString)
+          .agg(count(lit(1)), sum("bytes"), count("dvFile")).head()
+        val ref = PqRef(name, agg.getLong(0),
+          Some(if (agg.isNullAt(1)) 0L else agg.getLong(1)), Some(agg.getLong(2)))
+        publishCheckpointText(spark, root, v, renderFullRef(root, t.state, ref)) &&
+          { ckptDistributed.incrementAndGet(); true }
       }
     }
-    val agg = spark.read.schema(ckptRowSchema).parquet(target.toString)
-      .agg(count(lit(1)), sum("bytes"), count("dvFile")).head()
-    val ref = PqRef(name, agg.getLong(0),
-      Some(if (agg.isNullAt(1)) 0L else agg.getLong(1)), Some(agg.getLong(2)))
-    publishCheckpointText(spark, root, v, renderFullRef(root, scalar, ref))
-    ckptFirstDistributed.incrementAndGet()
-    true
-  } catch { case scala.util.control.NonFatal(_) => false }
+  } catch { case scala.util.control.NonFatal(_) => Some(false) }
 
   /** Write `v<N>.checkpoint` — the FULL state of version N in the
     * commit-file rendering — plus the `_last_checkpoint` hint, both via
     * write-temp-then-rename. Above [[parquetCheckpointThreshold]] the
     * O(#files) listing goes to a `#FILESPQ` parquet dataset and the
-    * text holds only the scalar state. Checkpoints are pure
-    * read-optimization sidecars: losing one costs a longer walk, never
-    * correctness, so failures here are swallowed (the commit already
-    * promoted).
+    * text holds only the scalar state. True when the checkpoint is in
+    * place; an I/O failure is reported, not thrown (the commit already
+    * promoted — [[checkpointAfterCommit]] retries).
     */
   private[graft] def writeCheckpoint(spark: SparkSession, root: String, v: Long,
-      st: CommitState): Unit =
+      st: CommitState): Boolean =
     try {
-      val f = fs(spark, root)
-      val target = checkpointPath(root, v)
-      if (f.exists(target)) return
-      val pqT = parquetCheckpointThreshold(spark)
-      val pq =
-        if (pqT > 0 && st.files.size >= pqT) writeCheckpointParquet(spark, root, v, st)
-        else None
-      val body = pq match {
-        case Some(ref) => renderFullRef(root, st, ref)
-        case None => renderFull(root, st)
+      fs(spark, root).exists(checkpointPath(root, v)) || {
+        val pqT = parquetCheckpointThreshold(spark)
+        val pq =
+          if (pqT > 0 && st.files.size >= pqT) writeCheckpointParquet(spark, root, v, st)
+          else None
+        val body = pq match {
+          case Some(ref) => renderFullRef(root, st, ref)
+          case None => renderFull(root, st)
+        }
+        publishCheckpointText(spark, root, v, body)
       }
-      publishCheckpointText(spark, root, v, body)
-    } catch { case _: java.io.IOException => () }
+    } catch { case _: java.io.IOException => false }
 
-  /** Publish the checkpoint TEXT + `_last_checkpoint` hint, both via
-    * write-temp-then-rename (shared by the driver-rendered and the
-    * incremental-distributed authors).
+  /** Publish the checkpoint TEXT, then the `_last_checkpoint` hint, both
+    * via write-temp-then-rename (shared by the driver render and the
+    * distributed author). True when the text is in place: the hint only
+    * saves a reader a listing, so failing to replace it (a store with no
+    * `FileContext` binding) leaves the checkpoint placed.
     */
   private def publishCheckpointText(spark: SparkSession, root: String, v: Long,
-      body: Array[Byte]): Unit = {
+      body: Array[Byte]): Boolean = {
     val f = fs(spark, root)
     val target = checkpointPath(root, v)
-    if (!f.exists(target)) {
+    val placed = f.exists(target) || {
       val tmp = new Path(versionsDir(root), s".tmp-ckpt-${java.util.UUID.randomUUID()}")
       val out = f.create(tmp, true)
       try out.write(body) finally out.close()
-      if (!f.rename(tmp, target)) { f.delete(tmp, false); () }
+      f.rename(tmp, target) || { f.delete(tmp, false); f.exists(target) }
     }
-    replaceMeta(spark, new Path(versionsDir(root), "_last_checkpoint"), "ptr",
-      v.toString.getBytes(StandardCharsets.UTF_8))
+    if (placed) try replaceMeta(spark, new Path(versionsDir(root), "_last_checkpoint"), "ptr",
+      v.toString.getBytes(StandardCharsets.UTF_8)) catch { case _: java.io.IOException => () }
+    placed
   }
 
   /** Replace the log file `p` whole with `body` ([[Replace.file]]) through
@@ -2686,8 +2592,8 @@ object TableVersions {
         // no parquet checkpoint below yet (the bulk-load bootstrap):
         // appends still commit O(delta) from a SCALAR-ONLY chain walk —
         // the append needs schema/checks/partCols/txns, never the
-        // listing; the due checkpoint then authors from the chain
-        // ([[writeCheckpointFirstDistributed]])
+        // listing; the due checkpoint then authors from the log
+        // ([[writeCheckpointFromLog]])
         .orElse(scalarStateAt(spark, root, v)
           .filter(_.schema.isDefined).map(sc => (sc, true)))
         .getOrElse((commitState(spark, root, Some(v)), false))
@@ -5792,44 +5698,46 @@ object TableVersions {
       .start()
 }
 
-/** One parsed add line of the first-checkpoint distributed scan —
-  * its owning commit version, position within that commit's adds
-  * (the pair restores [[TableVersions.DeltaCommit.applyTo]]'s exact
-  * `kept ++ adds` order), and the entry fields in checkpoint-row form.
+/** One parsed add line of the distributed checkpoint author's scan —
+  * the log version that added it and its position there (the pair
+  * restores [[TableVersions.DeltaCommit.applyTo]]'s exact `kept ++ adds`
+  * order), and the entry fields in checkpoint-row form, `path` stored
+  * (root-relative).
   */
-private[graft] final case class FirstAddRow(ver: Long, pos: Long, path: String,
+private[graft] final case class CkptAddRow(ver: Long, pos: Long, path: String,
     bytes: Long, rows: Long, part: Map[String, String],
     stats: Map[String, TableVersions.CkptStatsRow],
     dvFile: Option[String] = None, dvRows: Option[Long] = None)
 
-/** Executor-side scanner for the DISTRIBUTED FIRST CHECKPOINT: each
-  * task reads ONE commit file of the delta chain and parses its add
-  * lines — the O(#files) listing never lands on the driver. A
+/** Executor-side scanner for the DISTRIBUTED CHECKPOINT AUTHOR: each
+  * task reads ONE commit or text-checkpoint file of the log and parses
+  * its add lines — the O(#files) listing never lands on the driver. A
   * top-level serializable object so task closures referencing it
   * capture no [[TableVersions]] module state.
   */
-private[graft] object FirstCkptScan extends Serializable {
+private[graft] object CkptAddScan extends Serializable {
 
-  /** Parse commit `p`'s add (non-`#`) lines into ordered rows. Stored
-    * relative paths resolve against the commit file's own location —
-    * the same derivation [[TableVersions.parseCommitText]] uses, so a
-    * moved/copied table directory scans in place.
+  /** Parse log file `p`'s add (non-`#`) lines into ordered rows. Stored
+    * relative paths resolve against the file's own location — the same
+    * derivation [[TableVersions.parseCommitText]] uses, so a
+    * moved/copied table directory scans in place — and are stored
+    * relative to `root` ([[TableVersions.relNorm]]).
     */
-  def addRows(conf: org.apache.hadoop.conf.Configuration, ver: Long,
-      p: String): Iterator[FirstAddRow] = {
+  def addRows(conf: org.apache.hadoop.conf.Configuration, root: String, ver: Long,
+      p: String): Iterator[CkptAddRow] = {
     val path = new org.apache.hadoop.fs.Path(p)
-    val root = path.getParent.getParent.toString
+    val parse = TableVersions.parseFileLine(path.getParent.getParent.toString) _
     val br = new java.io.BufferedReader(new java.io.InputStreamReader(
       path.getFileSystem(conf).open(path), java.nio.charset.StandardCharsets.UTF_8))
-    val out = Vector.newBuilder[FirstAddRow]
+    val out = Vector.newBuilder[CkptAddRow]
     try {
       var pos = 0L
       var l = br.readLine()
       while (l != null) {
         if (l.nonEmpty && !l.startsWith("#")) {
-          val fe = TableVersions.parseFileLine(root)(l)
-          out += FirstAddRow(ver, pos, fe.path, fe.bytes, fe.rows, fe.part,
-            fe.stats.map { case (c, s) =>
+          val fe = parse(l)
+          out += CkptAddRow(ver, pos, TableVersions.relNorm(root, fe.path), fe.bytes, fe.rows,
+            fe.part, fe.stats.map { case (c, s) =>
               c -> TableVersions.CkptStatsRow(s.minNum, s.maxNum, s.minStr, s.maxStr, s.nulls)
             })
           pos += 1L
@@ -5839,9 +5747,4 @@ private[graft] object FirstCkptScan extends Serializable {
     } finally br.close()
     out.result().iterator
   }
-
-  /** Canonical stored (root-relative) form — checkpoint rows' `path`
-    * encoding.
-    */
-  def rel(root: String, p: String): String = TableVersions.relNorm(root, p)
 }

@@ -102,14 +102,6 @@ class Round14TableSpec extends SparkSpec {
     assert(TableVersions.versionAsOf(spark, root, 99999L) === None)
   }
 
-  // ------------------------------------------------------------------
-  // Incremental DISTRIBUTED checkpoint authoring: the periodic
-  // checkpoint derives from the previous parquet checkpoint + the
-  // delta tail as a distributed job — zero O(#files) driver
-  // materializations — and reconstructs BIT-IDENTICAL to the
-  // driver-rendered form.
-  // ------------------------------------------------------------------
-
   private def withConf[A](pairs: (String, String)*)(body: => A): A = {
     val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -124,8 +116,8 @@ class Round14TableSpec extends SparkSpec {
     StructField("p", IntegerType)))
 
   /** 200k fake metadata entries far below the real rows' key range —
-    * checkpoint authoring must carry them BY REFERENCE, never
-    * materialize them on the driver (PushedWritePlanSpec's shape).
+    * planning must carry them BY REFERENCE, never materialize them on
+    * the driver (PushedWritePlanSpec's shape).
     */
   private def syntheticEntries(root: String, n: Int): Seq[FileEntry] =
     (0 until n).map { i =>
@@ -136,87 +128,6 @@ class Round14TableSpec extends SparkSpec {
           "s" -> ColStats(None, None, Some(f"a$i%06d"), Some(f"b$i%06d"), 0L),
           "p" -> ColStats(Some((i % 50).toDouble), Some((i % 50).toDouble), None, None, 0L)))
     }
-
-  test("checkpoint at 200k entries authors DISTRIBUTED+INCREMENTAL: zero driver listings, " +
-      "bit-identical to the driver render") {
-    withConf(
-      "graft.table.parquetCheckpointThreshold" -> "1000",
-      "graft.table.checkpointInterval" -> "5") {
-      val root = newRoot()
-      val n = 200000
-      TableVersions.createEmpty(spark, root, ckSchema, Seq("p"))
-      val big = CommitState(syntheticEntries(root, n), Some(ckSchema.json), Seq("p"), Map.empty)
-      TableVersions.writeCheckpoint(spark, root, 0L, big) // driver-rendered v0 anchor
-      TableVersions.clearStateCache()
-
-      val resolves0 = TableVersions.ckptResolves.get()
-      val inc0 = TableVersions.ckptIncrementals.get()
-      // five pushed appends: v5 is checkpoint-due (interval 5)
-      (1 to 5).foreach { i =>
-        TableVersions.append(spark, root,
-          (0 until 4).map(j => (5000000L + i * 10 + j, s"r$i$j", 99)).toDF("k", "s", "p"),
-          Seq("p"))
-      }
-      assert(TableVersions.ckptIncrementals.get() === inc0 + 1,
-        "the v5 checkpoint must author through the incremental distributed path")
-      assert(TableVersions.ckptResolves.get() === resolves0,
-        "checkpoint authoring must materialize ZERO driver listings at 200k entries")
-      val f = hfs(root)
-      assert(f.exists(new Path(root, "_versions/v5.checkpoint")))
-      assert(f.exists(new Path(root, "_versions/v5.ckptpq/_SUCCESS")))
-
-      // BIT-IDENTICAL reconstruction: state through the incremental
-      // checkpoint vs through a DRIVER-RENDERED twin of the same version
-      val viaIncremental = TableVersions.commitState(spark, root, Some(5L))
-      assert(viaIncremental.files.size === n + 5,
-        "200k carried entries + 5 appended files (one per single-partition batch)")
-      f.delete(new Path(root, "_versions/v5.checkpoint"), false)
-      f.delete(new Path(root, "_versions/v5.ckptpq"), true)
-      TableVersions.clearStateCache()
-      val viaFold = TableVersions.commitState(spark, root, Some(5L)) // v0 ckpt + delta walk
-      TableVersions.writeCheckpoint(spark, root, 5L, viaFold) // the driver render
-      TableVersions.clearStateCache()
-      val viaDriver = TableVersions.commitState(spark, root, Some(5L))
-      assert(viaIncremental === viaDriver,
-        "incremental and driver-rendered checkpoints must reconstruct the SAME state")
-      assert(viaIncremental === viaFold)
-    }
-  }
-
-  test("incremental checkpoint folds tail REMOVES and DV updates, not just appends") {
-    withConf(
-      "graft.table.parquetCheckpointThreshold" -> "200",
-      "graft.table.pushedPruneThreshold" -> "200",
-      "graft.table.checkpointInterval" -> "4") {
-      val root = newRoot()
-      // REAL files this time (small): appends, then a delete that lands
-      // a DV or a rewrite inside the tail, then the due checkpoint
-      TableVersions.createEmpty(spark, root, StructType(Seq(
-        StructField("k", LongType), StructField("s", StringType))), Seq.empty)
-      val n = 300
-      val entries = syntheticEntries(root, n).map(fe => fe.copy(part = Map.empty,
-        stats = fe.stats - "p"))
-      TableVersions.writeCheckpoint(spark, root, 0L,
-        CommitState(entries, Some(StructType(Seq(
-          StructField("k", LongType), StructField("s", StringType))).json), Seq.empty, Map.empty))
-      TableVersions.clearStateCache()
-      TableVersions.append(spark, root, Seq((9000001L, "x")).toDF("k", "s")) // v1
-      TableVersions.append(spark, root, Seq((9000002L, "y")).toDF("k", "s")) // v2
-      // v3: delete one appended row — the tail now carries a remove (+add
-      // or DV) for a REAL file
-      TableVersions.deleteWhere(spark, root, col("k") === 9000001L,
-        bounds = Map("k" -> (9000001.0, 9000001.0)))
-      val inc0 = TableVersions.ckptIncrementals.get()
-      TableVersions.append(spark, root, Seq((9000003L, "z")).toDF("k", "s")) // v4: due
-      assert(TableVersions.ckptIncrementals.get() === inc0 + 1,
-        "the v4 checkpoint must author incrementally")
-      TableVersions.clearStateCache()
-      val ks = TableVersions.read(spark, root)
-        .where(col("k") >= 9000000L).select("k").collect().map(_.getLong(0)).sorted
-      assert(ks === Array(9000002L, 9000003L),
-        "the checkpointed state must reflect the delete (remove/DV folded)")
-    }
-  }
 
   test("wide SQL DML planning: 50k touched files plan via SEMI-JOIN (no oversized In), " +
       "identical to the In form and the materialized restriction") {

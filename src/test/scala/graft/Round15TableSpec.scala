@@ -17,8 +17,8 @@ import graft.operators.TableVersions.{ColStats, CommitState, FileEntry}
 /** Round-15 pins: the q142 novelty plan carries NO gram-keyed join
   * (the one r14 scale hazard, removed), `versionAsOf` decides the
   * legacy/ICT era boundary once from the log (never from probe luck),
-  * the FIRST parquet checkpoint authors distributed from the delta
-  * chain, unscoped compact of a pushed partitioned table runs
+  * appends before the first parquet checkpoint commit O(delta),
+  * unscoped compact of a pushed partitioned table runs
   * partition-batched, the vacuum dry run stays distributed end to end
   * and previews horizon rewrites, and the CDF stream schema is pinned
   * across restarts.
@@ -173,16 +173,16 @@ class Round15TableSpec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // FIRST checkpoint: distributed from the delta chain
+  // Before the FIRST checkpoint: appends from the scalar chain walk
   // ------------------------------------------------------------------
 
   private val ckSchema = StructType(Seq(
     StructField("k", LongType), StructField("s", StringType),
     StructField("p", IntegerType)))
 
-  /** 200k fake metadata entries far below the real rows' key range
-    * (Round14TableSpec's shape) — checkpoint authoring must carry them
-    * BY REFERENCE, never materialize them on the driver.
+  /** Fake metadata entries far below the real rows' key range
+    * (Round14TableSpec's shape) — the write path must carry them BY
+    * REFERENCE, never materialize them on the driver.
     */
   private def syntheticEntries(root: String, n: Int, mod: Int = 50): Seq[FileEntry] =
     (0 until n).map { i =>
@@ -193,52 +193,6 @@ class Round15TableSpec extends SparkSpec {
           "s" -> ColStats(None, None, Some(f"a$i%06d"), Some(f"b$i%06d"), 0L),
           "p" -> ColStats(Some((i % mod).toDouble), Some((i % mod).toDouble), None, None, 0L)))
     }
-
-  test("FIRST checkpoint at 200k entries authors DISTRIBUTED from the delta chain: " +
-      "zero driver listings, removes/DVs folded, bit-identical to the driver render") {
-    withConf(
-      "graft.table.parquetCheckpointThreshold" -> "1000",
-      "graft.table.checkpointInterval" -> "4") {
-      val root = newRoot()
-      val n = 200000
-      TableVersions.createEmpty(spark, root, ckSchema, Seq("p")) // v0
-      // v1: the BULK LOAD — one full commit whose 200k adds live in
-      // commit text; NO checkpoint exists anywhere yet
-      val big = CommitState(syntheticEntries(root, n), Some(ckSchema.json), Seq("p"), Map.empty)
-      assert(TableVersions.tryCommit(spark, root, 1L, big, op = "BULKLOAD"))
-      TableVersions.clearStateCache()
-      // v2: a real append; v3: delete its row (a remove or DV lands in
-      // the tail, exercising the survivor rule)
-      TableVersions.append(spark, root,
-        Seq((9000001L, "x", 99)).toDF("k", "s", "p"), Seq("p"))
-      TableVersions.deleteWhere(spark, root, col("k") === 9000001L,
-        bounds = Map("k" -> (9000001.0, 9000001.0)))
-      val first0 = TableVersions.ckptFirstDistributed.get()
-      val resolves0 = TableVersions.ckptResolves.get()
-      TableVersions.append(spark, root,
-        Seq((9000002L, "y", 99)).toDF("k", "s", "p"), Seq("p")) // v4: due (4 % 4 == 0)
-      assert(TableVersions.ckptFirstDistributed.get() === first0 + 1,
-        "the v4 checkpoint must author through the FIRST-distributed path")
-      assert(TableVersions.ckptResolves.get() === resolves0,
-        "first-checkpoint authoring must materialize ZERO driver listings at 200k entries")
-      val f = hfs(root)
-      assert(f.exists(new Path(root, "_versions/v4.checkpoint")))
-      assert(f.exists(new Path(root, "_versions/v4.ckptpq/_SUCCESS")))
-
-      val viaFirst = TableVersions.commitState(spark, root, Some(4L))
-      f.delete(new Path(root, "_versions/v4.checkpoint"), false)
-      f.delete(new Path(root, "_versions/v4.ckptpq"), true)
-      TableVersions.clearStateCache()
-      val viaFold = TableVersions.commitState(spark, root, Some(4L)) // raw chain fold
-      TableVersions.writeCheckpoint(spark, root, 4L, viaFold) // the driver render
-      TableVersions.clearStateCache()
-      val viaDriver = TableVersions.commitState(spark, root, Some(4L))
-      assert(viaFirst === viaDriver,
-        "first-distributed and driver-rendered checkpoints must reconstruct the SAME state")
-      assert(viaFirst === viaFold)
-      assert(viaFirst.files.size >= n, "the 200k carried entries survive the fold")
-    }
-  }
 
   test("appends BEFORE the first checkpoint commit O(delta) from the scalar chain walk") {
     withConf(
